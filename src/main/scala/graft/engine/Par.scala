@@ -10,41 +10,38 @@ package graft.engine
   * sequencing of ~30–60 small jobs (x121: 46 jobs, job-sum 4.6 s, but
   * ~6 s wall).
   *
-  * `all` runs the branches on daemon threads and waits for EVERY
-  * branch before returning — even when one fails — so a crashed branch
-  * can never leave a sibling racing a follow-up rebuild's overwrite;
-  * the first failure is then rethrown (the at-rest stamp protocols
-  * treat any throw inside a stampless mutation window as "rebuild on
-  * next entry"). Branches must be independent: no shared session-conf
-  * windows, no write targets in common.
+  * `all` runs each branch on a fresh daemon thread started by the
+  * caller, so every branch inherits the caller's CURRENT Spark local
+  * properties (job group, job description, scheduler pool) — a pooled
+  * thread would keep the ones captured when it was first created. It
+  * waits for EVERY branch before returning — even when one fails — so
+  * a crashed branch can never leave a sibling racing a follow-up
+  * rebuild's overwrite; the first failure (in branch order) is then
+  * rethrown with the others attached as suppressed exceptions (the
+  * at-rest stamp protocols treat any throw inside a stampless mutation
+  * window as "rebuild on next entry"). Branches must be independent:
+  * no shared session-conf windows, no write targets in common.
   */
 object Par {
 
-  private lazy val pool = java.util.concurrent.Executors.newCachedThreadPool(
-    new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-par-${n.getAndIncrement()}")
-        t.setDaemon(true)
-        t
-      }
-    })
-
   def all(tasks: (() => Unit)*): Unit = {
     if (tasks.size <= 1) { tasks.foreach(_()); return }
-    val futures = tasks.map(t =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = t()
-      }))
-    // await every branch before surfacing the first failure
-    val results = futures.map(f => scala.util.Try(f.get()))
-    results.collectFirst { case scala.util.Failure(e) =>
-      throw (e match {
-        case ee: java.util.concurrent.ExecutionException
-            if ee.getCause != null => ee.getCause
-        case other => other
-      })
+    val failures = new Array[Throwable](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (t, i) =>
+      val th = new Thread(() =>
+        try t() catch { case e: Throwable => failures(i) = e },
+        s"graft-par-$i")
+      th.setDaemon(true)
+      th.start()
+      th
     }
-    ()
+    // join is the happens-before edge that publishes `failures`
+    threads.foreach(_.join())
+    failures.filter(_ != null).toList match {
+      case first :: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case Nil => ()
+    }
   }
 }

@@ -36,6 +36,14 @@ import org.apache.spark.sql.execution.window.WindowExecBase
   * tests (scan→filter→project tails are left alone: recompute there is
   * cheap and the extra exchange would double the scan's bytes moved).
   *
+  * The inserted exchange hash-partitions on the sort-key TUPLE, so its
+  * balance is the key's: a low-cardinality sort key (a handful of
+  * distinct tuples) lands the whole segment output in a few skewed
+  * partitions. Float/double keys hash bit patterns there, so -0.0 and
+  * 0.0, and the different NaN encodings, can land in different
+  * partitions — harmless for results, since the range sort above
+  * compares them as equal and reorders every row anyway.
+  *
   * Result-identical by construction: the total sort fully determines
   * the output order (the oracle compares rows in result order, so the
   * declared sort keys are total), and a hash re-distribution below it

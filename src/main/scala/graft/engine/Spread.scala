@@ -29,7 +29,10 @@ import org.apache.spark.sql.DataFrame
   * placement; every consumer (set/sum aggregations, per-row hashing,
   * equi-joins) is row-order independent, and Spark's
   * sort-before-repartition (on by default) keeps the placement
-  * deterministic under task retry.
+  * deterministic under task retry. Without that pre-sort a retried
+  * upstream task can hand its rows to different reducers, so `cpuHeavy`
+  * adds no exchange when `spark.sql.execution.sortBeforeRepartition`
+  * is off.
   */
 object Spread {
 
@@ -55,10 +58,8 @@ object Spread {
   def cpuHeavy(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // bare-scan test first (logical-plan only); getNumPartitions plans
-    // the frame but launches no job. Disable hatch mirrors
-    // spark.graft.sort.sampleCut (A/B-ability and scale tuning).
-    if (df.sparkSession.conf
-        .get("spark.graft.spread.cpuHeavy", "true") == "true" &&
+    // the frame but launches no job
+    if (df.sparkSession.sessionState.conf.sortBeforeRepartition &&
       isBareScan(df.queryExecution.optimizedPlan) &&
       df.rdd.getNumPartitions < target) df.repartition(target) else df
   }

@@ -844,9 +844,10 @@ object Dedup {
 
   /** The [[dedupClusters]] iteration body as a seam: min-label CC over
     * a MIRRORED, materialized edge relation → (labels over edge-touched
-    * nodes, rounds run — counting the fused init as round one). Shared
-    * with the CcCompare evaluation tool so the round count is measured,
-    * not asserted.
+    * nodes, rounds run — counting the fused init as round one). The
+    * round count is returned so it is measured, not asserted (the
+    * min-label vs alternating rounds are in SCALE.md, near-dup
+    * clustering).
     */
   private[graft] def ccMinLabelLoop(edges: DataFrame,
       maxIters: Int): (DataFrame, Int) = {
@@ -893,8 +894,9 @@ object Dedup {
     * the run switches to alternating large/small-star (SoCC'14,
     * O(log² ) rounds — [[dedupClustersAlternating]]), whose higher
     * per-round price is exactly what the shallow case avoids paying.
-    * CcCompare measured both shapes head-to-head; this turns its
-    * documented "deep-graph escape hatch" into an automatic choice.
+    * Both shapes were measured head-to-head (SCALE.md, near-dup
+    * clustering and round 11); this turns the documented "deep-graph
+    * escape hatch" into an automatic choice.
     * Output contract identical to [[dedupClusters]] (min doc_id per
     * component; spec-asserted on both branches).
     */
@@ -1241,8 +1243,8 @@ object Dedup {
   private val DedupLshMeta = "_graft_dedup_lsh_meta"
 
   /** The banding parameters an at-rest LSH index build (or extension)
-    * runs under — the conf hatches and the sampled auto-probe of
-    * [[jaccardPairsLshAuto]], resolved AGAINST A NAMED CORPUS so the
+    * runs under — the `spark.graft.lsh.bands` hatch and the sampled
+    * auto-probe of [[jaccardPairsLshAuto]], resolved AGAINST A NAMED CORPUS so the
     * decision is reproducible across JVMs: the probe samples a
     * deterministic md5-ordered 1024 docs, so the same corpus under the
     * same conf always lands on the same (numHashes, bands). The chosen
@@ -1254,13 +1256,11 @@ object Dedup {
     */
   private[graft] def lshIndexParams(docs: DataFrame,
       n: Int): (Int, Int) = {
-    val conf = docs.sparkSession.conf
-    val numHashes = conf.get("spark.graft.lsh.numHashes", "128").toInt
-    conf.get("spark.graft.lsh.bands", "") match {
+    docs.sparkSession.conf.get("spark.graft.lsh.bands", "") match {
       case "" =>
-        val (h, b, _) = chooseLshBands(docs, n, numHashes)
+        val (h, b, _) = chooseLshBands(docs, n, LshNumHashes)
         (h, b)
-      case b => (numHashes, b.toInt)
+      case b => (LshNumHashes, b.toInt)
     }
   }
 
@@ -1475,9 +1475,9 @@ object Dedup {
   /** Alternating large-star / small-star connected components (Kiveris,
     * Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected Components
     * in MapReduce and Beyond", SoCC'14) — the round-count alternative to
-    * [[dedupClusters]]' min-label propagation, evaluated side by side by
-    * `graft.tools.CcCompare` (numbers in SCALE.md). Same output
-    * contract: every doc labeled with its component's min doc_id.
+    * [[dedupClusters]]' min-label propagation, evaluated side by side in
+    * SCALE.md (near-dup clustering, and the round-11 x17 row). Same
+    * output contract: every doc labeled with its component's min doc_id.
     *
     * Per round: large-star attaches every node's strictly-LARGER
     * neighbors to m = min(Γ⁺(u)), then small-star attaches u and its
@@ -1705,6 +1705,11 @@ object Dedup {
     mass * nDocs / (s * s)
   }
 
+  /** Base MinHash signature width of the auto-banded LSH routes
+    * ([[jaccardPairsLshAuto]], [[lshIndexParams]]): b = 64 bands of
+    * r = 2, or twice the hashes at r = 4 ([[chooseLshBands]]). */
+  private val LshNumHashes = 128
+
   /** The banding choice behind [[jaccardPairsLshAuto]], exposed as a
     * seam so specs can assert the decision: rows-per-band r = 2 (the
     * recall-maximal classic) while the measured r=2 candidate mass
@@ -1732,11 +1737,10 @@ object Dedup {
   }
 
   /** [[jaccardPairsLsh]] with the banding parameters chosen PER CORPUS —
-    * the production default and x07's declared path. Two conf hatches
-    * pin the choice without a code change:
-    * `spark.graft.lsh.numHashes` (default 128) and
-    * `spark.graft.lsh.bands` (set → skips the sampling probe entirely
-    * and uses the given band count).
+    * the production default and x07's declared path, from a base budget
+    * of [[LshNumHashes]]. The conf hatch `spark.graft.lsh.bands` pins
+    * the choice without a code change (set → skips the sampling probe
+    * entirely and uses the given band count).
     *
     * On a natural-vocabulary corpus the measured r=2 collision mass is
     * tiny and the choice degenerates to the classic b = numHashes/2,
@@ -1761,26 +1765,25 @@ object Dedup {
   def jaccardPairsLshAuto(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.5,
       probeIndexPath: Option[String] = None): DataFrame = {
-    val conf = docs.sparkSession.conf
-    val numHashes = conf.get("spark.graft.lsh.numHashes", "128").toInt
-    val (nh, bands) = conf.get("spark.graft.lsh.bands", "") match {
-      case "" =>
-        probeIndexPath match {
-          case Some(ip) =>
-            val h = graft.engine.AtRest.statStamped(docs.sparkSession,
-              ip, LshProbeMeta,
-              Seq(Similarity.corpusFingerprint(docs),
-                docs.queryExecution.analyzed.semanticHash(), n,
-                numHashes, 1).mkString(":"), "lshprobe") {
-              chooseLshBands(docs, n, numHashes)._1.toDouble
-            }.toInt
-            (h, numHashes / 2)
-          case None =>
-            val (h, b, _) = chooseLshBands(docs, n, numHashes)
-            (h, b)
-        }
-      case b => (numHashes, b.toInt)
-    }
+    val (nh, bands) =
+      docs.sparkSession.conf.get("spark.graft.lsh.bands", "") match {
+        case "" =>
+          probeIndexPath match {
+            case Some(ip) =>
+              val h = graft.engine.AtRest.statStamped(docs.sparkSession,
+                ip, LshProbeMeta,
+                Seq(Similarity.corpusFingerprint(docs),
+                  docs.queryExecution.analyzed.semanticHash(), n,
+                  LshNumHashes, 1).mkString(":"), "lshprobe") {
+                chooseLshBands(docs, n, LshNumHashes)._1.toDouble
+              }.toInt
+              (h, LshNumHashes / 2)
+            case None =>
+              val (h, b, _) = chooseLshBands(docs, n, LshNumHashes)
+              (h, b)
+          }
+        case b => (LshNumHashes, b.toInt)
+      }
     jaccardPairsLsh(docs, n, threshold, nh, bands)
   }
 
@@ -2125,8 +2128,8 @@ object Dedup {
     * [[jaccardPairsLshAuto]] completed x07's and [[simhashNearDupAuto]]
     * x82's: exact (no cap) while the measured winnow collision mass
     * stays linear-bounded (≤ 32 expected candidates/doc, the family
-    * cutoff), the measured df ≤ 100 cap (X41CapProbe: 20.9 s at 100×
-    * where uncapped extrapolates to ~30–40 min; dropped pairs ride
+    * cutoff), the measured df ≤ 100 cap (SCALE.md round 11: 20.9 s at
+    * 100× where uncapped extrapolates to ~30–40 min; dropped pairs ride
     * boilerplate-hot fingerprints by construction) once it exceeds
     * that. The conf hatch `spark.graft.winnow.maxdf` pins either shape
     * and skips the probe ("0" = uncapped, any other long = that cap).
@@ -2435,7 +2438,7 @@ object Dedup {
     * fingerprints — the production-scale remedy for [[containmentPairs]]
     * (x123), whose exact shingle-inverted-index join has intrinsically
     * ~n² candidate mass at vocabulary saturation (measured: prefix mass
-    * ×119 at the 100× probe, ScaleProbe CONTAIN3). Score: shared
+    * ×119 at the 100× probe, SCALE.md round 12). Score: shared
     * distinct chunk fingerprints / the smaller side's fingerprint count
     * — the same min-denominator containment as x123, one level up: a
     * snippet embedded verbatim in a big page shares its interior CDC

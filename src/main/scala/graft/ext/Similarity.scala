@@ -21,8 +21,8 @@ import graft.engine.Checkpoints.MaterializeOps
   *    (Lloyd over a hash-ordered `rowsPerCentroid`·k sample — every pass
   *    sample·k, not n·k) + [[Similarity.assignCellsCoarse]] (two-level
   *    coarse-then-fine argmax, ~2·n·√k) — exactly the x128/x130
-  *    composition KnnProductionProbe measured at 31.2 s where the exact
-  *    path read 96.2 s at 100×/k=800. Approximate by construction (the
+  *    composition measured at 31.2 s where the exact path read 96.2 s
+  *    at 100×/k=800 (SCALE.md round 11). Approximate by construction (the
   *    standard IVF probe trade); x144 pins its semantics end to end.
   *
   * The profile is part of the index stamp, so switching profiles over
@@ -41,10 +41,13 @@ object IndexProfile {
     * sub-dominant another ~decade past the kMax cap. Assignment is the
     * same two-level route either way, so extensions stay
     * frozen-model-equal; the stamp token differs (hier- vs sampled-),
-    * so switching trainers rebuilds. */
+    * so switching trainers rebuilds. `hierKMin` is the cell count at
+    * and past which a `hierTrain = false` profile switches to the hier
+    * trainer anyway ([[Similarity.resolveProfile]]). */
   final case class Production(rowsPerCentroid: Int = 50,
       coarseK: Int = 0, nprobeGroups: Int = 1,
-      hierTrain: Boolean = false) extends IndexProfile
+      hierTrain: Boolean = false,
+      hierKMin: Int = 1024) extends IndexProfile
 }
 
 /** Similarity search over an embedding column (`Array[Float]`).
@@ -496,14 +499,6 @@ object Similarity {
     assignCells(corpus, centroidRelation(centroids))
       .select(col("cid").as("vec_id"), col("cell"))
 
-  /** [[assignCells]]' full (cid, ce, cn, cell) shape over a trained
-    * centroid frame — the [[knnEdges]] input, for probes composing
-    * alternate assignment routes.
-    */
-  private[graft] def assignCellsFlatFull(corpus: DataFrame,
-      centroids: DataFrame): DataFrame =
-    assignCells(corpus, centroidRelation(centroids))
-
   /** TWO-LEVEL (coarse-quantized) cell assignment — the measured lever
     * for the n·k assignment term that appears once the cell count
     * scales with the corpus ([[adaptiveCellCount]]: k = n/250 makes
@@ -518,7 +513,7 @@ object Similarity {
     *
     * APPROXIMATE by construction: a vector whose true best centroid
     * lives outside its best coarse group gets that group's best
-    * instead — the standard IVF probe trade (HierAssignProbe measures
+    * instead — the standard IVF probe trade (SCALE.md round 11 measures
     * agreement alongside the speedup; raise `nprobeGroups` to trade
     * time back for fidelity). The DECLARED x94-family queries keep the
     * exact flat argmax (their oracles replicate it bit-for-bit); this
@@ -632,11 +627,11 @@ object Similarity {
     */
   private def trainAndAssign(corpus: DataFrame, nCentroids: Int,
       iters: Int, profile: IndexProfile): (DataFrame, DataFrame) =
-    resolveProfile(corpus.sparkSession, nCentroids, profile) match {
+    resolveProfile(nCentroids, profile) match {
       case IndexProfile.Exact =>
         val c = trainCentroids(corpus, nCentroids, iters)
         (c, assignCells(corpus, centroidRelation(c)))
-      case IndexProfile.Production(rpc, ck, np, hier) =>
+      case IndexProfile.Production(rpc, ck, np, hier, _) =>
         val c =
           if (hier) trainCentroidsHier(corpus, nCentroids,
             maxTrainRows = rpc * nCentroids, iters = iters,
@@ -646,34 +641,28 @@ object Similarity {
         (c, assignCellsCoarse(corpus, c, ck, np))
     }
 
-  /** Auto-switch the Production TRAINER to the hierarchical one past a
-    * conf-keyed cell count — the [[LiteralKMaxKey]] idiom applied to
-    * the last scale default: at the kMax cap the sampled trainer's
-    * 50·k² term costs 626 s where [[trainCentroidsHier]] costs 37 s
-    * (17×, HierSeedProbe SCALE.md round 15 — and at the full 190 k
-    * seed hier also WINS recall, 0.120 vs 0.078), so a Production
-    * caller whose corpus grows to the cap should not need to know the
-    * `hierTrain` flag exists. The threshold default (1024) sits at the
-    * measured crossover decade: k = 1024 is where hier's advantage
-    * clears 2× at equal quality (36.9 vs 626.4 s at 4096 scales as
-    * k²/k^1.5 ≈ √k — ~8× at 1024 — while quality stays within 0.002).
-    * Assignment is profile-identical either way (the two-level coarse
-    * route), so extensions stay frozen-model-equal; the resolution's
-    * INPUTS all ride the index stamps (nCentroids or the kMax that
-    * derives it, plus [[HierKMinKey]] itself), so changing the
+  /** Auto-switch the Production TRAINER to the hierarchical one at and
+    * past the profile's `hierKMin` cell count: at the kMax cap the
+    * sampled trainer's 50·k² term costs 626 s where
+    * [[trainCentroidsHier]] costs 37 s (17×, SCALE.md round 15 — and at
+    * the full 190 k seed hier also WINS recall, 0.120 vs 0.078), so a
+    * Production caller whose corpus grows to the cap should not need to
+    * know the `hierTrain` flag exists. The threshold default (1024) sits
+    * at the measured crossover decade: k = 1024 is where hier's
+    * advantage clears 2× at equal quality (36.9 vs 626.4 s at 4096
+    * scales as k²/k^1.5 ≈ √k — ~8× at 1024 — while quality stays within
+    * 0.002). Assignment is profile-identical either way (the two-level
+    * coarse route), so extensions stay frozen-model-equal; the
+    * resolution's INPUTS all ride the index stamps (nCentroids or the
+    * kMax that derives it, plus `hierKMin` itself), so changing the
     * threshold over an existing artifact rebuilds, never mixes
     * trainers. Declared Production ks sit far below the default, so no
     * oracle hash moves; an explicit `hierTrain = true` is untouched.
     */
-  val HierKMinKey = "spark.graft.ivf.hierKMin"
-  private[graft] val hierKMinDefault = 1024
-
-  private[graft] def resolveProfile(
-      spark: org.apache.spark.sql.SparkSession, nCentroids: Int,
+  private[graft] def resolveProfile(nCentroids: Int,
       profile: IndexProfile): IndexProfile = profile match {
-    case p @ IndexProfile.Production(_, _, _, false)
-        if nCentroids >= spark.conf
-          .get(HierKMinKey, hierKMinDefault.toString).toInt =>
+    case p @ IndexProfile.Production(_, _, _, false, hierKMin)
+        if nCentroids >= hierKMin =>
       p.copy(hierTrain = true)
     case other => other
   }
@@ -687,7 +676,7 @@ object Similarity {
   private def assignWithProfile(vecs: DataFrame, cents: DataFrame,
       profile: IndexProfile): DataFrame = profile match {
     case IndexProfile.Exact => assignCells(vecs, centroidRelation(cents))
-    case IndexProfile.Production(_, ck, np, _) =>
+    case IndexProfile.Production(_, ck, np, _, _) =>
       assignCellsCoarse(vecs, cents, ck, np)
   }
 
@@ -697,7 +686,7 @@ object Similarity {
     */
   private def profileToken(p: IndexProfile): String = p match {
     case IndexProfile.Exact => "exact"
-    case IndexProfile.Production(r, c, n, hier) =>
+    case IndexProfile.Production(r, c, n, hier, _) =>
       (if (hier) "hier" else "sampled") + s"-$r-$c-$n"
   }
 
@@ -723,8 +712,7 @@ object Similarity {
       // token of the RESOLVED profile (nCentroids is explicit here), so
       // the hier auto-switch is legible in the stamp and a threshold
       // change that flips the effective trainer rebuilds
-      profileToken(resolveProfile(corpus.sparkSession, nCentroids,
-        profile)))
+      profileToken(resolveProfile(nCentroids, profile)))
       .mkString(":")
 
   def ensureIvfIndex(corpus: DataFrame, path: String, nCentroids: Int = 8,
@@ -924,10 +912,10 @@ object Similarity {
     Seq(corpusFingerprint(emb),
       emb.queryExecution.analyzed.semanticHash(), k, perCell,
       // the derived cell count is a function of (corpus, perCell, kMax),
-      // so the ceiling rides the stamp: an operator raising/lowering
-      // spark.graft.ivf.kMax over an existing artifact gets a rebuild,
-      // never a silently mis-sized cell structure
-      emb.sparkSession.conf.get(KMaxKey, kMaxDefault.toString).toInt,
+      // so the ceiling rides the stamp: a build under a different
+      // ceiling over an existing artifact gets a rebuild, never a
+      // silently mis-sized cell structure
+      KMax,
       // the hier auto-switch threshold rides the stamp for the same
       // reason: the cell count is DERIVED here (adaptiveCellCount), so
       // the token below can't be pre-resolved, but the effective
@@ -937,14 +925,14 @@ object Similarity {
       // resolving here would need adaptiveCellCount's corpus count(),
       // i.e. a Spark job on EVERY no-op ensure (per micro-batch in the
       // streaming faces, corpus-proportional at scale) to save a
-      // rebuild only when an operator tweaks the threshold without
+      // rebuild only when a caller changes the threshold without
       // crossing the decision — a rare, explicit action that already
-      // expects a rebuild. Consequence to know: introducing this term
-      // (round 16) invalidated pre-existing kNN stamps once — a
-      // one-time migration rebuild on the first ensure over an old
-      // artifact, not silent mixing.
-      emb.sparkSession.conf.get(HierKMinKey,
-        hierKMinDefault.toString).toInt,
+      // expects a rebuild. Exact never switches trainers; it stamps the
+      // Production default so its at-rest stamps stay valid.
+      profile match {
+        case p: IndexProfile.Production => p.hierKMin
+        case IndexProfile.Exact => IndexProfile.Production().hierKMin
+      },
       KnnIndexLayoutVersion, profileToken(profile)).mkString(":")
 
   /** The x94 kNN EDGE relation at rest: cell-local top-`k` edges (cid,
@@ -1123,21 +1111,20 @@ object Similarity {
     * same trained centroids (ExtSpec asserts row equality).
     */
   def topKIvfIndexed(indexPath: String, queries: DataFrame, k: Int,
-      nprobe: Int = 0): DataFrame = {
+      nprobe: Int = 0, probeFrac: Double = probeFracDefault): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     val centDf = spark.read.parquet(s"$indexPath/_centroids")
     val cent = centroidRelation(centDf)
     // nprobe ≤ 0 (the default) = ADAPTIVE: probe width derived from the
     // at-rest index's own cell count via [[adaptiveNprobe]], holding
-    // the probed corpus FRACTION as the index scales ([[ProbeFracKey]])
-    // — the read-side scale default; the cell count is a k-row parquet
+    // the probed corpus FRACTION `probeFrac` as the index scales — the
+    // read-side scale default; the cell count is a k-row parquet
     // count, dim-table cost. Explicit nprobe pins the literal width
     // (the declared queries' oracle-replicated probes).
     val np =
       if (nprobe > 0) nprobe
-      else adaptiveNprobe(centDf.count().toInt, spark.conf
-        .get(ProbeFracKey, probeFracDefault.toString).toDouble)
+      else adaptiveNprobe(centDf.count().toInt, probeFrac)
     // checkpointed: evaluated once for the cell-id collect and once as
     // the scoring join's broadcast side
     val q = probeCells(queries, cent, np).materialized
@@ -1160,8 +1147,8 @@ object Similarity {
     * CUMULATIVE ROW MASS of the probed prefix reaches
     * `massFrac · n_rows` (always at least `floor` cells), so the
     * scanned-row budget — the thing that actually costs — holds
-    * per-query at any skew: SkewProbeCalib measured the worst query
-    * ≈ the mean to 0.4% at every fraction, where the count-frac probe
+    * per-query at any skew: the worst query measured ≈ the mean to
+    * 0.4% at every fraction, where the count-frac probe
     * overshoots its nominal budget 16–22% per worst query (SCALE.md
     * r18 — at equal scanned rows the two disciplines are
     * near-equivalent on recall, so this route's win is the
@@ -1228,49 +1215,6 @@ object Similarity {
         col("cent_id").as("cell"))
   }
 
-  /** Probe-set diagnostics for the calibration tooling: the per-query
-    * probed cells and their summed row mass (= the scanned-row budget)
-    * under either discipline — `massFrac > 0` selects the mass-prefix
-    * route, otherwise the count route at `nprobe` (≤ 0 = the adaptive
-    * conf default). One row per query: (qid, n_probed_cells,
-    * scanned_rows). Shares the exact probe-set builders with the topK
-    * routes, so the reported budget is what the probe actually reads.
-    */
-  private[graft] def probedCellStats(indexPath: String,
-      queries: DataFrame, nprobe: Int = 0, massFrac: Double = 0.0,
-      floor: Int = 2): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centDf = spark.read.parquet(s"$indexPath/_centroids")
-    val cent = centroidRelation(centDf)
-    val loads = spark.read.parquet(indexPath)
-      .groupBy(col("cell").cast("long").as("cell"))
-      .agg(count(lit(1)).as("mass"))
-    val probed =
-      if (massFrac > 0) {
-        val total = loads.agg(sum(col("mass"))).as[Long].head()
-        massProbeCells(queries, cent, loads,
-          math.ceil(total * massFrac).toLong, floor)
-      } else {
-        val np =
-          if (nprobe > 0) nprobe
-          else adaptiveNprobe(centDf.count().toInt, spark.conf
-            .get(ProbeFracKey, probeFracDefault.toString).toDouble)
-        probeCells(queries, cent, np)
-      }
-    // LEFT join + mass-0 coalesce: the count discipline's probeCells
-    // ranks ALL centroids including zero-load ones, and an inner join
-    // against the non-empty-cell loads relation would drop those from
-    // n_probed_cells — under-reporting the count-fraction arm this
-    // calibration compares against. scanned_rows is unchanged (an
-    // empty cell contributes 0 rows either way).
-    probed.select(col("qid"), col("cell"))
-      .join(loads, Seq("cell"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("n_probed_cells"),
-        sum(coalesce(col("mass"), lit(0L))).as("scanned_rows"))
-  }
-
   /** Per-cell load statistics of an at-rest IVF index — the re-train
     * cadence SIGNAL that turns "model refresh is an offline decision"
     * into a measured one: extensions assign against frozen centroids,
@@ -1310,8 +1254,8 @@ object Similarity {
   val RefreshImbalanceKey = "spark.graft.ivf.refreshImbalance"
 
   /** The default refresh threshold, set by measurement, not taste
-    * (RefreshPolicyProbe, 100× corpus, half the label space held out
-    * as a 10-batch drifting stream; SCALE.md round-17 row): healthy
+    * (100× corpus, half the label space held out as a 10-batch
+    * drifting stream; SCALE.md round 17): healthy
     * post-train imbalance on the clustered corpus reads 3.0–5.3, so a
     * breach of 8 (≈ 2× healthy) is real drift — and the measured
     * recall-vs-cost curve is MONOTONE in favor of triggering early:
@@ -1478,28 +1422,25 @@ object Similarity {
     * partition row_number window, each Lloyd pass costs sample·k =
     * 50·k², and the trained model is a k-row driver-collected literal/
     * broadcast relation — all fine at k ≤ ~10³–10⁴ and binding past it
-    * (TrainSampleProbe, SCALE.md round 15 measured the terms at
-    * k = 5 000). The cap trades bounded model cost for expected cell
-    * size growing as n/kMax past n = kMax·perCell (≈1 M vectors at the
-    * defaults): within-cell edge mass becomes n²/kMax — the honest IVF
-    * deployment trade, where corpora beyond ~kMax·perCell re-shard by a
-    * coarser outer key (source, date) before indexing. Conf-tunable for
-    * probes/clusters via `spark.graft.ivf.kMax`; the declared oracles
-    * mirror the DEFAULT (`least(4096, …)`), so overriding it under a
-    * declared query is the caller's oracle drift.
+    * (SCALE.md round 15 measured the terms at k = 5 000). The cap
+    * trades bounded model cost for expected cell size growing as n/kMax
+    * past n = kMax·perCell (≈1 M vectors at the defaults): within-cell
+    * edge mass becomes n²/kMax — the honest IVF deployment trade, where
+    * corpora beyond ~kMax·perCell re-shard by a coarser outer key
+    * (source, date) before indexing. The declared oracles mirror it as
+    * `least(4096, …)`.
     */
-  val KMaxKey = "spark.graft.ivf.kMax"
-  private[graft] val kMaxDefault = 4096
+  private[graft] val KMax = 4096
 
   /** The kNN-family cell-count CONTRACT made executable: centroids
     * scale with the corpus, k = min(kMax, max(floor, n / perCell)), so
     * expected cell size stays ~perCell and the cell-local pair mass
     * Σ|cell|² ≈ n·perCell is LINEAR in n until the model-cost ceiling
-    * [[KMaxKey]] binds (perCell = 250 matches the measured
-    * KnnCellProbe remedy row: k = 80 at the 10× corpus). At a fixed k that mass is n²/k — the
+    * [[KMax]] binds (perCell = 250 matches the measured remedy row:
+    * k = 80 at the 10× corpus). At a fixed k that mass is n²/k — the
     * self-inflicted quadratic the x94-family 10× probes measured at
-    * exp ≈ 1.0, with the k ∝ n remedy measured at exp 0.05
-    * (KnnCellProbe, SCALE.md). One count() action — bounded driver
+    * exp ≈ 1.0, with the k ∝ n remedy measured at exp 0.05 (SCALE.md
+    * round 8). One count() action — bounded driver
     * state, trivially cheaper than the training it sizes. The declared
     * x94/x104/x105/x111 queries derive k through this, and their
     * DuckDB oracles compute the identical
@@ -1509,38 +1450,34 @@ object Similarity {
       perCell: Int = 250): Int = {
     require(floor >= 1 && perCell >= 1,
       s"floor/perCell must be >= 1: $floor, $perCell")
-    val kMax = corpus.sparkSession.conf
-      .get(KMaxKey, kMaxDefault.toString).toInt
-    require(kMax >= floor, s"kMax $kMax must be >= floor $floor")
-    math.min(kMax, math.max(floor, (corpus.count() / perCell).toInt))
+    require(KMax >= floor, s"kMax $KMax must be >= floor $floor")
+    math.min(KMax, math.max(floor, (corpus.count() / perCell).toInt))
   }
+
+  /** Probed fraction backing [[topKIvfIndexed]]'s ADAPTIVE default
+    * (nprobe ≤ 0): 0.05 is the measured production point — recall@10
+    * 0.954 at k = 4096 where the old fixed nprobe = 2 read 0.12, at 20×
+    * less scanned mass than brute (SCALE.md round 15). The floor (2)
+    * reproduces the former literal default at every validation-scale
+    * index (ceil(k·0.05) < 2 for all k ≤ 40), so small-k callers and
+    * the declared oracle-pinned probes see identical rows; only a
+    * deployment whose cell count actually grows gets the wider probe it
+    * needs.
+    */
+  private[graft] val probeFracDefault = 0.05
 
   /** The probe-side complement of [[adaptiveCellCount]]: nprobe sized
     * so the probed corpus FRACTION holds as k scales. A fixed nprobe
     * makes recall fall with corpus growth (probed fraction = nprobe/k:
     * measured recall@10 vs brute 0.57 at k = 80, 0.16 at k = 800, 0.12
-    * at k = 4 096 under nprobe = 2 — ProductionRecallProbe /
-    * HierSeedProbe, SCALE.md round 15), which is the same
-    * self-inflicted scaling bug on the READ side that a fixed k was on
-    * the write side. nprobe = max(floor, ⌈k·frac⌉) keeps the probe's
-    * scanned mass ≈ frac·n rows at any k — cost linear in the target
-    * recall band, not in the corpus. The DECLARED queries keep their
-    * literal nprobe = 2 (oracle-pinned probes at validation k ≤ 8);
-    * this is the documented production dial.
+    * at k = 4 096 under nprobe = 2 — SCALE.md round 15), which is the
+    * same self-inflicted scaling bug on the READ side that a fixed k
+    * was on the write side. nprobe = max(floor, ⌈k·frac⌉) keeps the
+    * probe's scanned mass ≈ frac·n rows at any k — cost linear in the
+    * target recall band, not in the corpus. The DECLARED queries keep
+    * their literal nprobe = 2 (oracle-pinned probes at validation
+    * k ≤ 8); this is the documented production dial.
     */
-  /** Conf-keyed probed fraction backing [[topKIvfIndexed]]'s ADAPTIVE
-    * default (nprobe ≤ 0): 0.05 is the measured production point —
-    * recall@10 0.954 at k = 4096 where the old fixed nprobe = 2 read
-    * 0.12, at 20× less scanned mass than brute (HierSeedProbe, SCALE.md
-    * round 15). The floor (2) reproduces the former literal default at
-    * every validation-scale index (ceil(k·0.05) < 2 for all k ≤ 40), so
-    * small-k callers and the declared oracle-pinned probes see
-    * identical rows; only a deployment whose cell count actually grows
-    * gets the wider probe it needs.
-    */
-  val ProbeFracKey = "spark.graft.ivf.probeFrac"
-  private[graft] val probeFracDefault = 0.05
-
   def adaptiveNprobe(nCells: Int, frac: Double = 0.01,
       floor: Int = 2): Int = {
     require(nCells >= 1 && frac > 0 && frac <= 1 && floor >= 1,
@@ -1577,10 +1514,10 @@ object Similarity {
     * the standard IVF training practice (train Lloyd on ~50–100 rows
     * per centroid, not the corpus) and the measured remedy for the
     * training term that dominates once k scales with n (66.8 s at
-    * 100×/k=800 full-corpus vs the sampled cost, TrainSampleProbe):
+    * 100×/k=800 full-corpus vs the sampled cost, SCALE.md round 11):
     * every Lloyd pass costs sample·k instead of n·k, while centroid
-    * QUALITY degrades only marginally (quantization cosine measured in
-    * the probe — means over ≥50·k rows estimate cluster means well).
+    * QUALITY degrades only marginally (quantization cosine measured
+    * there too — means over ≥50·k rows estimate cluster means well).
     * The sample is hash-ordered (ingest order cannot bias it toward a
     * source) and re-identified 0..s−1 so the "first-k" seeding rule
     * stays meaningful on it; the single-partition row_number sort is
@@ -2379,7 +2316,7 @@ object Similarity {
   /** [[knnGraph]] over a PRE-ASSIGNED (cid, ce, cn, cell) relation —
     * the seam the composed PRODUCTION profile plugs into: x128 feeds it
     * [[assignCellsCoarse]] over [[trainCentroidsSampled]] centroids (the
-    * measured 3.1× KnnProductionProbe path), while x94 keeps the exact
+    * 3.1× path measured in SCALE.md round 11), while x94 keeps the exact
     * flat-argmax route through [[knnGraph]]. Identical per-node stats
     * semantics either way; only the cell partition differs.
     */

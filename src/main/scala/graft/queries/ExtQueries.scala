@@ -21,54 +21,6 @@ object ExtQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
-  /** Run `body` with one session conf temporarily set, restoring the
-    * prior value (or unsetting) afterwards — the declared-default
-    * queries' (x151/x152/x154) conf window. The conf-dependent actions
-    * must run eagerly inside `body`; the returned plan carries their
-    * result, not the conf.
-    */
-  /** Run `body` with one runtime conf pinned, restoring the prior
-    * value after. The conf object is SHARED session state, so two
-    * concurrent windows would leak each other's values into stamp
-    * computation and probe widths (x151/x152/x154's lowered
-    * hierKMin/probeFrac silently flipping another query's trainer
-    * mid-gate). Verify and Bench both drive queries strictly
-    * sequentially, and the guard below turns any future concurrent
-    * driver into a loud error instead of a silent cross-query leak —
-    * same-thread nesting (a query composing two windows) stays legal.
-    */
-  private val confWindowOwners = new java.util.concurrent
-    .ConcurrentHashMap[SparkSession, Thread]()
-  private def withConf[T](s: SparkSession, key: String, value: String)(
-      body: => T): T = {
-    val me = Thread.currentThread()
-    // guard scoped PER SESSION: runtime conf is per-SparkSession
-    // state, so concurrent windows on two different sessions (a
-    // multi-session driver) are actually safe and must not trip the
-    // error — only two windows on the SAME session can leak into each
-    // other's stamp computation / probe widths
-    val nested = confWindowOwners.get(s) eq me
-    if (!nested) {
-      val holder = confWindowOwners.putIfAbsent(s, me)
-      if (holder != null)
-        throw new IllegalStateException(
-          "concurrent withConf windows on one SparkSession: declared " +
-            "queries that pin session confs must run sequentially " +
-            s"(the conf is shared session state) — $holder holds a " +
-            "window on this session")
-    }
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body
-    finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-      if (!nested) confWindowOwners.remove(s)
-    }
-  }
-
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
@@ -1438,7 +1390,7 @@ object ExtQueries {
     // order, then the identical unrolled Lloyd arithmetic; centroid
     // vectors emitted per-dim at 6 dp. Pins trainCentroidsSampled's
     // semantics cross-engine - the measured 6x training remedy
-    // (TrainSampleProbe, SCALE.md) is hash-checked, not just timed.
+    // (SCALE.md round 11) is hash-checked, not just timed.
     "x122_sampled_centroids" -> ((s, dir) => {
       val e = emb(s, dir)
       Similarity.trainCentroidsSampled(e, nCentroids = 8,
@@ -1454,7 +1406,7 @@ object ExtQueries {
     // hash-checked query: ~sqrt(k) coarse groups trained over the k
     // adaptive centroids, each vector routed coarse-then-fine
     // (2*n*sqrt(k) work instead of the flat n*k — the measured
-    // x94/x39 second-decade lever, HierAssignProbe). The oracle
+    // x94/x39 second-decade lever, SCALE.md round 11). The oracle
     // replicates BOTH k-means levels and both argmax stages, so the
     // approximate route's exact semantics are pinned every round.
     "x120_assign_hier" -> ((s, dir) => {
@@ -1573,7 +1525,7 @@ object ExtQueries {
     // (Lloyd over a hash-ordered 50·k-row sample — the 6× training
     // remedy, x122's semantics), TWO-LEVEL assignment (coarse-then-fine
     // argmax, ~2·n·√k instead of n·k — x120's semantics), then the
-    // cell-local kNN edge/stat step. KnnProductionProbe measured this
+    // cell-local kNN edge/stat step. SCALE.md round 11 measured this
     // composition at 31.2 s vs the exact path's 96.2 s at 100×/k=800
     // for −3·10⁻⁴ mean edge cosine; declaring it makes the production
     // path continuously benched AND oracle-pinned (the x118 pattern),
@@ -1589,8 +1541,8 @@ object ExtQueries {
     }),
 
     // x41's scale-safe parametrization as its own DECLARED query: the
-    // df ≤ 100 fingerprint cap (X41CapProbe: 20.9 s at 100× where the
-    // uncapped winnow self-join's Σdf² = 23.7·10⁹ extrapolates to
+    // df ≤ 100 fingerprint cap (SCALE.md round 11: 20.9 s at 100× where
+    // the uncapped winnow self-join's Σdf² = 23.7·10⁹ extrapolates to
     // ~30–40 min; 87% of pairs retained at 10× — the dropped pairs
     // ride boilerplate-hot fingerprints by construction). Output
     // differs from x41 (n_shared no longer counts capped fingerprints)
@@ -1810,7 +1762,7 @@ object ExtQueries {
       // queries DISJOINT from the exact profile's first-k Lloyd seeds
       // (vec_id < k are its initial centroids, and querying a seed
       // flatters the exact index — measured 0.85 vs 0.42 on unbiased
-      // queries, ProductionRecallProbe): 50 queries from vec_id 100
+      // queries, SCALE.md round 15): 50 queries from vec_id 100
       val q = e.filter(col("vec_id") >= 100 && col("vec_id") < 150)
       val k = Similarity.adaptiveCellCount(e)
       val pPath = ivfIndexPath(s, dir, "prod")
@@ -1891,11 +1843,11 @@ object ExtQueries {
     }),
 
     // x151: the round-16 hierKMin AUTO-SWITCH declared end to end — a
-    // plain Production() build (no hierTrain flag) with the threshold
-    // conf-lowered to the validation cell count, so the resolution
+    // Production build with no hierTrain flag and its hierKMin
+    // threshold lowered to the validation cell count, so the resolution
     // routes the hier trainer exactly as a capped production corpus
-    // would (CapLifecycleProbe's k = 8192 seed stamps hier-50-0-1 the
-    // same way). The oracle is x149's hier chain VERBATIM: if the
+    // would (a k = 8192 seed stamps hier-50-0-1 the same way, SCALE.md
+    // round 16). The oracle is x149's hier chain VERBATIM: if the
     // switch fails to bind (or binds off-by-one), the build lands on
     // the sampled trainer and every centroid-derived row moves. Own
     // index dir, so the auto route BUILDS rather than no-oping against
@@ -1904,21 +1856,18 @@ object ExtQueries {
       val e = emb(s, dir)
       val path = ivfIndexPath(s, dir, "hierauto")
       val kc = Similarity.adaptiveCellCount(e)
-      withConf(s, Similarity.HierKMinKey, kc.toString) {
-        Similarity.ensureIvfIndex(e, path, nCentroids = kc,
-          profile = IndexProfile.Production())
-      }
+      Similarity.ensureIvfIndex(e, path, nCentroids = kc,
+        profile = IndexProfile.Production(hierKMin = kc))
       Similarity.topKIvfIndexed(path, e.filter(col("vec_id") < 10),
         k = 10, nprobe = 2).orderBy(col("qid"), col("rank"))
     }),
 
     // x152: the round-16 adaptive-nprobe READ DEFAULT declared end to
     // end — topKIvfIndexed with NO nprobe argument, the probe width
-    // coming entirely from the index's cell count and the conf
-    // fraction (set to x150's 0.5 for the window of this plan build,
-    // then restored). The oracle is x150's adaptive chain VERBATIM: if
-    // the default stops deriving from the fraction (or the floor
-    // misapplies), the probe narrows to a different cell set and the
+    // coming entirely from the index's cell count and the probed
+    // fraction (x150's 0.5). The oracle is x150's adaptive chain
+    // VERBATIM: if the default stops deriving from the fraction (or the
+    // floor misapplies), the probe narrows to a different cell set and the
     // hashes split. Reuses x149/x150's at-rest hier index (same stamp,
     // ensure no-ops), so the query measures the defaulted read route
     // itself.
@@ -1928,10 +1877,8 @@ object ExtQueries {
       Similarity.ensureIvfIndex(e, path,
         nCentroids = Similarity.adaptiveCellCount(e),
         profile = IndexProfile.Production(hierTrain = true))
-      withConf(s, Similarity.ProbeFracKey, "0.5") {
-        Similarity.topKIvfIndexed(path, e.filter(col("vec_id") < 10),
-          k = 10).orderBy(col("qid"), col("rank"))
-      }
+      Similarity.topKIvfIndexed(path, e.filter(col("vec_id") < 10),
+        k = 10, probeFrac = 0.5).orderBy(col("qid"), col("rank"))
     }),
 
     // x153: the drift SIGNAL declared — x139's exact lifecycle
@@ -1955,17 +1902,15 @@ object ExtQueries {
     // x154: x151's auto-switch pin for the OTHER index family — the
     // kNN edge artifact, whose stamp carries hierKMin raw because its
     // cell count is DERIVED (adaptiveCellCount) rather than explicit.
-    // A plain Production() build under the lowered threshold must be
-    // bit-identical to x148's explicit hier build; oracle = x148's
-    // hier chain verbatim.
+    // A Production build with no hierTrain flag under the lowered
+    // threshold must be bit-identical to x148's explicit hier build;
+    // oracle = x148's hier chain verbatim.
     "x154_knn_hier_autoswitch" -> ((s, dir) => {
       val e = emb(s, dir)
       val path = knnIndexPath(s, dir, "hierauto")
       val kc = Similarity.adaptiveCellCount(e)
-      withConf(s, Similarity.HierKMinKey, kc.toString) {
-        Similarity.ensureKnnIndex(e, path, k = 5,
-          profile = IndexProfile.Production())
-      }
+      Similarity.ensureKnnIndex(e, path, k = 5,
+        profile = IndexProfile.Production(hierKMin = kc))
       Similarity.readKnnEdges(s, path).orderBy(col("cid"), col("nid"))
     }),
 

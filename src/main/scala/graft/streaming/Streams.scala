@@ -400,7 +400,7 @@ object Streams {
     * micro-batch (an append of the batch's own partial counts — never
     * a base re-scan) means an auto-switch probe over the streamed
     * corpus reads it at rest instead of re-shingling everything
-    * landed. MEASURED PRICE (IndexStreamProbe, SCALE.md round 14):
+    * landed. MEASURED PRICE (SCALE.md round 14):
     * ~0.5–1.2 s per micro-batch — the batch's own df aggregate plus
     * stamp bookkeeping, flat in landed-corpus size; one containment
     * probe over a 500 k-doc landed corpus repays ~10 such batches, so
@@ -717,9 +717,9 @@ object Streams {
   //
   // The policy retrain used to run SYNCHRONOUSLY inside the maintenance
   // step: an ensure-over-union whose cost grows with the landed corpus
-  // executed inside one micro-batch trigger — SteadyStateProbe batch 24
-  // measured an 1,100.9 s stall at 160 k rows, and at real scale that is
-  // an hours-long stream outage. The async protocol serves FROZEN while
+  // executed inside one micro-batch trigger — batch 24 of the SCALE.md
+  // round-17 steady-state run measured an 1,100.9 s stall at 160 k
+  // rows, and at real scale that is an hours-long stream outage. The async protocol serves FROZEN while
   // retraining: the breach launches the ensure on a background thread
   // against a SIDE path (`<indexPath>_retrain`) over a snapshot of the
   // landed union (b-dirs are immutable once written, so the snapshot
@@ -741,8 +741,8 @@ object Streams {
 
   /** Async-refresh switch: `true` (default) retrains off the hot path
     * and swaps on completion; `false` pins the pre-r18 synchronous
-    * in-batch retrain (RefreshPolicyProbe uses it — the threshold
-    * default's cost/recall curve was measured on the sync route).
+    * in-batch retrain (the threshold default's cost/recall curve,
+    * SCALE.md round 17, was measured on the sync route).
     */
   val RefreshAsyncKey = "spark.graft.ivf.refreshAsync"
 
@@ -1038,23 +1038,6 @@ object Streams {
         chunkMaxShards),
       restamp = Some((o, n) => graft.ext.Dedup
         .restampCdcIndex(o.sparkSession, indexPath, o, n)))
-
-  /** [[cdcIndexStream]]'s recovery step, testable like the others. */
-  private[graft] def cdcIndexBatch(
-      spark: org.apache.spark.sql.SparkSession, corpusDir: String,
-      newDir: String, prev: Option[Vector[String]], indexPath: String,
-      p: Int = 8, threshold: Double = 0.5,
-      maxDf: Option[Long] = Some(100L),
-      chunkMaxShards: Int = ChunkMaxShards,
-      maxLandedDirs: Int = LandedDirBudget): Vector[String] =
-    indexMaintenanceBatch(spark, corpusDir, newDir, prev,
-      ensure = graft.ext.Dedup.ensureCdcIndex(_, indexPath, p,
-        threshold, maxDf),
-      extend = cdcExtendAndCompact(indexPath, p, threshold, maxDf,
-        chunkMaxShards),
-      restamp = Some((o, n) => graft.ext.Dedup
-        .restampCdcIndex(spark, indexPath, o, n)),
-      maxLandedDirs = maxLandedDirs)
 
   /** The CDC face's extend plus self-maintenance: the persisted chunk
     * relation accretes one file set per batch; past the shard budget

@@ -1852,47 +1852,44 @@ class ExtSpec extends AnyFunSuite {
       "large-k Production seed is the hier seed, bit for bit — while " +
       "below-threshold and explicit-flag callers are untouched") {
     import graft.ext.{IndexProfile, Similarity}
-    // the switch itself, at the conf-keyed boundary
-    assert(Similarity.resolveProfile(spark, 1024,
+    // the switch itself, at the profile's default boundary
+    assert(Similarity.resolveProfile(1024,
       IndexProfile.Production()) == IndexProfile.Production(
       hierTrain = true), "k = default threshold must route hier")
-    assert(Similarity.resolveProfile(spark, 1023,
+    assert(Similarity.resolveProfile(1023,
       IndexProfile.Production()) == IndexProfile.Production(),
       "k below the threshold must keep the sampled trainer")
-    assert(Similarity.resolveProfile(spark, 4096,
+    assert(Similarity.resolveProfile(4096,
       IndexProfile.Exact) == IndexProfile.Exact,
       "Exact is never auto-switched")
-    spark.conf.set(Similarity.HierKMinKey, "4")
-    try {
-      assert(Similarity.resolveProfile(spark, 4,
-        IndexProfile.Production()) == IndexProfile.Production(
-        hierTrain = true), "the threshold must be conf-keyed")
-      // end to end: with the threshold lowered under the test corpus's
-      // cell count, a plain Production() seed must produce the hier
-      // trainer's centroids (deterministic, so bit-identical)
-      val autoDir = java.nio.file.Files
-        .createTempDirectory("graft-hierauto-a").toString
-      val hierDir = java.nio.file.Files
-        .createTempDirectory("graft-hierauto-h").toString
-      val k = Similarity.adaptiveCellCount(emb)
-      assert(k >= 4)
-      Similarity.ensureIvfIndex(emb, autoDir, nCentroids = k,
-        profile = IndexProfile.Production())
-      Similarity.ensureIvfIndex(emb, hierDir, nCentroids = k,
-        profile = IndexProfile.Production(hierTrain = true))
-      val autoCents = Similarity.readKnnCentroids(spark, autoDir)
-        .collect().map(_.toString).sorted.toSeq
-      assert(autoCents == Similarity.readKnnCentroids(spark, hierDir)
-        .collect().map(_.toString).sorted.toSeq,
-        "auto-routed Production seed must equal the explicit hier seed")
-      // and it genuinely switched: the sampled trainer's centroids
-      // differ on this corpus (guards the equality above from vacuity)
-      val sampled = Similarity.trainCentroidsSampled(emb, k,
-        maxTrainRows = 50 * k)
-        .collect().map(_.toString).sorted.toSeq
-      assert(autoCents != sampled,
-        "hier and sampled centroids coincide — test corpus too easy")
-    } finally spark.conf.unset(Similarity.HierKMinKey)
+    val low = IndexProfile.Production(hierKMin = 4)
+    assert(Similarity.resolveProfile(4, low) == low.copy(
+      hierTrain = true), "the threshold must come from the profile")
+    // end to end: with the threshold lowered under the test corpus's
+    // cell count, a Production seed with no hierTrain flag must produce
+    // the hier trainer's centroids (deterministic, so bit-identical)
+    val autoDir = java.nio.file.Files
+      .createTempDirectory("graft-hierauto-a").toString
+    val hierDir = java.nio.file.Files
+      .createTempDirectory("graft-hierauto-h").toString
+    val k = Similarity.adaptiveCellCount(emb)
+    assert(k >= 4)
+    Similarity.ensureIvfIndex(emb, autoDir, nCentroids = k,
+      profile = low)
+    Similarity.ensureIvfIndex(emb, hierDir, nCentroids = k,
+      profile = IndexProfile.Production(hierTrain = true))
+    val autoCents = Similarity.readKnnCentroids(spark, autoDir)
+      .collect().map(_.toString).sorted.toSeq
+    assert(autoCents == Similarity.readKnnCentroids(spark, hierDir)
+      .collect().map(_.toString).sorted.toSeq,
+      "auto-routed Production seed must equal the explicit hier seed")
+    // and it genuinely switched: the sampled trainer's centroids
+    // differ on this corpus (guards the equality above from vacuity)
+    val sampled = Similarity.trainCentroidsSampled(emb, k,
+      maxTrainRows = 50 * k)
+      .collect().map(_.toString).sorted.toSeq
+    assert(autoCents != sampled,
+      "hier and sampled centroids coincide — test corpus too easy")
   }
 
   test("adaptive nprobe default: topKIvfIndexed with no nprobe derives " +
@@ -1915,12 +1912,11 @@ class ExtSpec extends AnyFunSuite {
     // default == the old literal 2 on a small index (the floor)
     assert(rows(Similarity.topKIvfIndexed(dir, q, k = 5)) ==
       rows(Similarity.topKIvfIndexed(dir, q, k = 5, nprobe = 2)))
-    // a wider conf fraction widens the DEFAULT probe to ceil(8*0.5)=4
-    spark.conf.set(Similarity.ProbeFracKey, "0.5")
-    try assert(rows(Similarity.topKIvfIndexed(dir, q, k = 5)) ==
+    // a wider fraction widens the DEFAULT probe to ceil(8*0.5)=4
+    assert(rows(Similarity.topKIvfIndexed(dir, q, k = 5,
+      probeFrac = 0.5)) ==
       rows(Similarity.topKIvfIndexed(dir, q, k = 5, nprobe = 4)),
-      "probe width must follow the conf fraction")
-    finally spark.conf.unset(Similarity.ProbeFracKey)
+      "probe width must follow the fraction")
   }
 
   test("x141 containment auto picks the exact join on a dispersed " +
@@ -2851,7 +2847,7 @@ class ExtSpec extends AnyFunSuite {
     // approximation quality on the real embedding table: k = 8 over 3
     // coarse groups is the WORST case for the route (group boundaries
     // cut through most of the space — at production k the groups are
-    // finer and HierAssignProbe measures the real number); the
+    // finer and SCALE.md round 11 has the real number); the
     // nprobeGroups dial must buy agreement back monotonically
     def agreement(p: Int): Double = {
       val agree = flat.toSet

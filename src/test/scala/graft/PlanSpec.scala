@@ -332,4 +332,27 @@ class PlanSpec extends AnyFunSuite {
     assert(!rangeFedByHash(x82),
       s"x82 join-only tail unexpectedly cut:\n${x82.take(2000)}")
   }
+
+  test("Spread.cpuHeavy round-robins a narrow bare scan only while " +
+      "sortBeforeRepartition keeps that placement retry-deterministic") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+    val docs = graft.engine.Tables.load(spark, sf, "documents")
+    assert(docs.rdd.getNumPartitions < spark.sparkContext.defaultParallelism,
+      "fixture scan must be narrower than the slot count")
+    def spreads: Boolean = {
+      val qe = graft.engine.Spread.cpuHeavy(docs).queryExecution
+      val logical = qe.optimizedPlan.collect {
+        case r: RepartitionOperation => r }.nonEmpty
+      val physical = qe.executedPlan.toString
+        .contains("RoundRobinPartitioning")
+      assert(logical == physical, qe.executedPlan.toString)
+      physical
+    }
+    assert(spreads, "default conf: narrow bare scan must be spread")
+    val key = "spark.sql.execution.sortBeforeRepartition"
+    spark.conf.set(key, "false")
+    try assert(!spreads,
+      "without the pre-sort a round-robin exchange is not retry-safe")
+    finally spark.conf.unset(key)
+  }
 }

@@ -8,6 +8,10 @@
 #   SPARK_DRIVER_MEM=48g tools/run.sh graft.tools.GenCorpus target/scale/x10 50000 20000
 set -euo pipefail
 cd "$(dirname "$0")/.."
+if [ ! -d target/scala-2.13/classes ]; then
+  echo "run.sh: target/scala-2.13/classes is missing; run 'sbt compile' first" >&2
+  exit 1
+fi
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent \
