@@ -253,8 +253,9 @@ object AtRest {
 
   /** How long a mutation lease may sit WITHOUT A HEARTBEAT before
     * another writer treats its holder as crashed and breaks it. Live
-    * holders renew the lease mtime every [[renewIntervalMs]] from a
-    * daemon thread, so a build of ANY length keeps its exclusivity —
+    * holders renew the lease mtime every `renewMs` (TTL/3 by default,
+    * see [[withMutationLease]]) from a daemon thread, so a build of ANY
+    * length keeps its exclusivity —
     * at production corpus sizes an index seed legitimately runs for
     * hours (the measured 200 k-vector seed is already ~11 min,
     * SCALE.md round 15), which would otherwise sail past any fixed
@@ -263,15 +264,6 @@ object AtRest {
     * would cost crash recovery.
     */
   private[graft] val LeaseTtlMs: Long = 30L * 60 * 1000
-
-  /** Heartbeat cadence — TTL/3 by default so two missed beats still
-    * leave headroom before the break threshold. Overridable via
-    * `spark.graft.lease.renewMs` (tests shrink it to drive the
-    * renew-vs-break race in milliseconds).
-    */
-  private def renewIntervalMs(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.lease.renewMs")
-      .map(_.toLong).getOrElse(LeaseTtlMs / 3)
 
   /** Shared daemon scheduler pool for all lease heartbeats in the JVM —
     * a renewal is one cheap metadata call, but it IS blocking FS I/O,
@@ -316,9 +308,15 @@ object AtRest {
     * once. Readers never touch the lease: the callers' no-op fast
     * paths stay lock-free, and the post-acquisition double-check turns
     * a lost race into a no-op instead of a conflict.
+    *
+    * `renewMs` is the heartbeat cadence — TTL/3 by default so two
+    * missed beats still leave headroom before the break threshold
+    * (specs shrink it to drive the renew-vs-break race in
+    * milliseconds). A re-entrant call rides the outer holder's beat.
     */
   private[graft] def withMutationLease[T](spark: SparkSession,
-      path: String, metaName: String)(body: => T): T = {
+      path: String, metaName: String,
+      renewMs: Long = LeaseTtlMs / 3)(body: => T): T = {
     val leasePath = new org.apache.hadoop.fs.Path(path,
       metaName + ".lease")
     val fs = leasePath.getFileSystem(spark.sessionState.newHadoopConf())
@@ -441,7 +439,7 @@ object AtRest {
             if (!renewed) writeBeat()
           }
         } catch { case _: Exception => () },
-        renewIntervalMs(spark), renewIntervalMs(spark),
+        renewMs, renewMs,
         java.util.concurrent.TimeUnit.MILLISECONDS)
       try body
       finally {

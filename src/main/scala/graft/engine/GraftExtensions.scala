@@ -19,7 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // r20: materialize the child of every range-sort exchange so the
     // global-sort sampling pass stops re-executing the query's final
     // stage (see [[SortSampleCut]]).
-    ext.injectQueryStagePrepRule(SortSampleCut(_))
+    ext.injectQueryStagePrepRule(_ => SortSampleCut)
   }
 }
 

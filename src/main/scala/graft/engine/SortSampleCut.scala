@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
@@ -50,13 +49,13 @@ import org.apache.spark.sql.execution.window.WindowExecBase
   * cannot change which rows exist. Scale posture: at 100 TB the
   * recompute this removes is a full second execution of the query's
   * most expensive stage; the added exchange carries only the final
-  * output. Disable with `spark.graft.sort.sampleCut=false`.
+  * output. The rule is always on.
   *
   * Re-planning safe: once the cut fires, the range exchange's child is
   * an Exchange/QueryStage, for which `hasRealWork` is false, so the
   * rule does not re-fire or nest.
   */
-case class SortSampleCut(session: SparkSession) extends Rule[SparkPlan] {
+object SortSampleCut extends Rule[SparkPlan] {
 
   /** Fire only when the tail segment (everything between the sort
     * exchange and the nearest stage boundaries below it) does real,
@@ -108,17 +107,13 @@ case class SortSampleCut(session: SparkSession) extends Rule[SparkPlan] {
   // kept for the walk's boundary bookkeeping.
 
   override def apply(plan: SparkPlan): SparkPlan =
-    if (session.conf.get("spark.graft.sort.sampleCut", "true") != "true") {
-      plan
-    } else {
-      plan.transformUp {
-        case ex @ ShuffleExchangeExec(rp: RangePartitioning, child, _, _)
-            if rp.numPartitions > 1 &&
-              rp.ordering.forall(_.child.deterministic) &&
-              worthCutting(child) =>
-          ex.copy(child = ShuffleExchangeExec(
-            HashPartitioning(rp.ordering.map(_.child), rp.numPartitions),
-            child))
-      }
+    plan.transformUp {
+      case ex @ ShuffleExchangeExec(rp: RangePartitioning, child, _, _)
+          if rp.numPartitions > 1 &&
+            rp.ordering.forall(_.child.deterministic) &&
+            worthCutting(child) =>
+        ex.copy(child = ShuffleExchangeExec(
+          HashPartitioning(rp.ordering.map(_.child), rp.numPartitions),
+          child))
     }
 }

@@ -1243,25 +1243,21 @@ object Dedup {
   private val DedupLshMeta = "_graft_dedup_lsh_meta"
 
   /** The banding parameters an at-rest LSH index build (or extension)
-    * runs under — the `spark.graft.lsh.bands` hatch and the sampled
-    * auto-probe of [[jaccardPairsLshAuto]], resolved AGAINST A NAMED CORPUS so the
-    * decision is reproducible across JVMs: the probe samples a
-    * deterministic md5-ordered 1024 docs, so the same corpus under the
-    * same conf always lands on the same (numHashes, bands). The chosen
-    * pair is baked into the index STAMP — an extension re-derives the
-    * base's parameters the same way, and any drift (a conf pin added
-    * later, a corpus whose probe flips the banding) mismatches the
-    * stamp and falls back to a full rebuild instead of ever probing
-    * batch keys against base keys hashed under different banding.
+    * runs under — the sampled auto-probe of [[jaccardPairsLshAuto]],
+    * resolved AGAINST A NAMED CORPUS so the decision is reproducible
+    * across JVMs: the probe samples a deterministic md5-ordered 1024
+    * docs, so the same corpus always lands on the same (numHashes,
+    * bands). The chosen pair is baked into the index STAMP — an
+    * extension re-derives the base's parameters the same way, and any
+    * drift (a corpus whose probe flips the banding, a sidecar written
+    * under other banding) mismatches the stamp and falls back to a full
+    * rebuild instead of ever probing batch keys against base keys
+    * hashed under different banding.
     */
   private[graft] def lshIndexParams(docs: DataFrame,
       n: Int): (Int, Int) = {
-    docs.sparkSession.conf.get("spark.graft.lsh.bands", "") match {
-      case "" =>
-        val (h, b, _) = chooseLshBands(docs, n, LshNumHashes)
-        (h, b)
-      case b => (LshNumHashes, b.toInt)
-    }
+    val (h, b, _) = chooseLshBands(docs, n, LshNumHashes)
+    (h, b)
   }
 
   private def dedupLshStamp(docs: DataFrame, n: Int, threshold: Double,
@@ -1738,9 +1734,7 @@ object Dedup {
 
   /** [[jaccardPairsLsh]] with the banding parameters chosen PER CORPUS —
     * the production default and x07's declared path, from a base budget
-    * of [[LshNumHashes]]. The conf hatch `spark.graft.lsh.bands` pins
-    * the choice without a code change (set → skips the sampling probe
-    * entirely and uses the given band count).
+    * of [[LshNumHashes]].
     *
     * On a natural-vocabulary corpus the measured r=2 collision mass is
     * tiny and the choice degenerates to the classic b = numHashes/2,
@@ -1765,25 +1759,20 @@ object Dedup {
   def jaccardPairsLshAuto(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.5,
       probeIndexPath: Option[String] = None): DataFrame = {
-    val (nh, bands) =
-      docs.sparkSession.conf.get("spark.graft.lsh.bands", "") match {
-        case "" =>
-          probeIndexPath match {
-            case Some(ip) =>
-              val h = graft.engine.AtRest.statStamped(docs.sparkSession,
-                ip, LshProbeMeta,
-                Seq(Similarity.corpusFingerprint(docs),
-                  docs.queryExecution.analyzed.semanticHash(), n,
-                  LshNumHashes, 1).mkString(":"), "lshprobe") {
-                chooseLshBands(docs, n, LshNumHashes)._1.toDouble
-              }.toInt
-              (h, LshNumHashes / 2)
-            case None =>
-              val (h, b, _) = chooseLshBands(docs, n, LshNumHashes)
-              (h, b)
-          }
-        case b => (LshNumHashes, b.toInt)
-      }
+    val (nh, bands) = probeIndexPath match {
+      case Some(ip) =>
+        val h = graft.engine.AtRest.statStamped(docs.sparkSession,
+          ip, LshProbeMeta,
+          Seq(Similarity.corpusFingerprint(docs),
+            docs.queryExecution.analyzed.semanticHash(), n,
+            LshNumHashes, 1).mkString(":"), "lshprobe") {
+          chooseLshBands(docs, n, LshNumHashes)._1.toDouble
+        }.toInt
+        (h, LshNumHashes / 2)
+      case None =>
+        val (h, b, _) = chooseLshBands(docs, n, LshNumHashes)
+        (h, b)
+    }
     jaccardPairsLsh(docs, n, threshold, nh, bands)
   }
 
@@ -2048,9 +2037,8 @@ object Dedup {
     * cutoff as [[chooseLshBands]] — past it the candidate shortlist
     * grows ~n² and the verify join dominates), 120 bits
     * ([[simhashNearDupWide]], the measured saturation remedy: 100×
-    * 118.8 → 20.7 s) once it exceeds that. The conf hatch
-    * `spark.graft.simhash.width` (60 | 120) pins either shape and skips
-    * the probe. NOTE the width changes the declared SEMANTICS (radius
+    * 118.8 → 20.7 s) once it exceeds that. The probe alone decides.
+    * NOTE the width changes the declared SEMANTICS (radius
     * is a budget on the chosen fingerprint's Hamming distance), so
     * unlike x07 the oracle replicates the probe + decision itself —
     * which is why every probe ingredient is engine-portable.
@@ -2065,26 +2053,18 @@ object Dedup {
     */
   def simhashNearDupAuto(docs: DataFrame, radius: Int = 3,
       probeIndexPath: Option[String] = None): DataFrame = {
-    val conf = docs.sparkSession.conf
-    val width = conf.get("spark.graft.simhash.width", "") match {
-      case "" =>
-        val est = probeIndexPath match {
-          case Some(ip) =>
-            graft.engine.AtRest.statStamped(docs.sparkSession, ip,
-              SimhashProbeMeta,
-              Seq(Similarity.corpusFingerprint(docs),
-                docs.queryExecution.analyzed.semanticHash(), radius, 1)
-                .mkString(":"), "shprobe") {
-              estimateSimhashCollisionsPerDoc(docs, radius)
-            }
-          case None => estimateSimhashCollisionsPerDoc(docs, radius)
+    val est = probeIndexPath match {
+      case Some(ip) =>
+        graft.engine.AtRest.statStamped(docs.sparkSession, ip,
+          SimhashProbeMeta,
+          Seq(Similarity.corpusFingerprint(docs),
+            docs.queryExecution.analyzed.semanticHash(), radius, 1)
+            .mkString(":"), "shprobe") {
+          estimateSimhashCollisionsPerDoc(docs, radius)
         }
-        if (est > 32) 120 else 60
-      case w => w.toInt
+      case None => estimateSimhashCollisionsPerDoc(docs, radius)
     }
-    require(width == 60 || width == 120,
-      s"spark.graft.simhash.width must be 60 or 120, got $width")
-    if (width == 120) simhashNearDupWide(docs, radius)
+    if (est > 32) simhashNearDupWide(docs, radius)
     else simhashNearDup(docs, radius)
   }
 
@@ -2131,8 +2111,7 @@ object Dedup {
     * cutoff), the measured df ≤ 100 cap (SCALE.md round 11: 20.9 s at
     * 100× where uncapped extrapolates to ~30–40 min; dropped pairs ride
     * boilerplate-hot fingerprints by construction) once it exceeds
-    * that. The conf hatch `spark.graft.winnow.maxdf` pins either shape
-    * and skips the probe ("0" = uncapped, any other long = that cap).
+    * that. The probe alone decides.
     * The cap changes declared semantics (n_shared stops counting capped
     * fingerprints), so the oracle replicates the probe + decision
     * themselves — every ingredient is engine-portable.
@@ -2144,24 +2123,18 @@ object Dedup {
   def substringOverlapAuto(docs: DataFrame, k: Int = 16, w: Int = 8,
       minShared: Long = 10,
       probeIndexPath: Option[String] = None): DataFrame = {
-    val conf = docs.sparkSession.conf
-    val cap: Option[Long] = conf.get("spark.graft.winnow.maxdf", "") match {
-      case "" =>
-        val est = probeIndexPath match {
-          case Some(ip) =>
-            graft.engine.AtRest.statStamped(docs.sparkSession, ip,
-              WinnowProbeMeta,
-              Seq(Similarity.corpusFingerprint(docs),
-                docs.queryExecution.analyzed.semanticHash(), k, w, 1)
-                .mkString(":"), "wnprobe") {
-              estimateWinnowCollisionsPerDoc(docs, k, w)
-            }
-          case None => estimateWinnowCollisionsPerDoc(docs, k, w)
+    val est = probeIndexPath match {
+      case Some(ip) =>
+        graft.engine.AtRest.statStamped(docs.sparkSession, ip,
+          WinnowProbeMeta,
+          Seq(Similarity.corpusFingerprint(docs),
+            docs.queryExecution.analyzed.semanticHash(), k, w, 1)
+            .mkString(":"), "wnprobe") {
+          estimateWinnowCollisionsPerDoc(docs, k, w)
         }
-        if (est > 32) Some(100L) else None
-      case "0" => None
-      case c => Some(c.toLong)
+      case None => estimateWinnowCollisionsPerDoc(docs, k, w)
     }
+    val cap = if (est > 32) Some(100L) else None
     substringOverlapPairs(docs, k, w, minShared, cap)
   }
 
@@ -2978,39 +2951,27 @@ object Dedup {
     * exact join's candidate mass is intrinsically ~n² (measured ×119
     * decade growth, 100× OOM — SCALE.md round 12) while chunk-fp df is
     * bounded by true duplication, so the production branch completes
-    * where the exact one cannot. The conf hatch
-    * `spark.graft.containment.mode` pins either shape ("exact" /
-    * "cdc") and skips the probe. The decision changes declared
-    * semantics, so x141's oracle replicates probe + decision + both
-    * chains and selects with the identical comparison.
+    * where the exact one cannot. The probe alone decides. The decision
+    * changes declared semantics, so x141's oracle replicates probe +
+    * decision + both chains and selects with the identical comparison.
     */
   def containmentAuto(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.9, p: Int = 8,
       cdcThreshold: Double = 0.5,
       dfIndexPath: Option[String] = None): DataFrame = {
-    val conf = docs.sparkSession.conf
-    val mode = conf.get("spark.graft.containment.mode", "") match {
-      case "" =>
-        // with a dfIndexPath the whole decision statistic lives at
-        // rest (first call per corpus: df build + one probe; every
-        // later call: one tiny stamped read — the invocation is then
-        // dominated by the chosen chain); values are identical either
-        // way, so the decision — and x141's hash — cannot move
-        val est = dfIndexPath match {
-          case Some(ip) =>
-            containmentCandStatAtRest(docs, ip, n, threshold)
-          case None =>
-            estimateContainmentCandidatesPerDoc(docs, n, threshold)
-        }
-        if (est > 32) "cdc" else "exact"
-      case m => m
+    // with a dfIndexPath the whole decision statistic lives at rest
+    // (first call per corpus: df build + one probe; every later call:
+    // one tiny stamped read — the invocation is then dominated by the
+    // chosen chain); values are identical either way, so the decision
+    // — and x141's hash — cannot move
+    val est = dfIndexPath match {
+      case Some(ip) =>
+        containmentCandStatAtRest(docs, ip, n, threshold)
+      case None =>
+        estimateContainmentCandidatesPerDoc(docs, n, threshold)
     }
-    mode match {
-      case "exact" => containmentPairs(docs, n, threshold)
-      case "cdc"   => cdcContainmentPairs(docs, p, cdcThreshold)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.containment.mode must be exact or cdc, got $other")
-    }
+    if (est > 32) cdcContainmentPairs(docs, p, cdcThreshold)
+    else containmentPairs(docs, n, threshold)
   }
 
   /** Near-dup THRESHOLD SWEEP — the price sheet read before choosing a

@@ -1248,12 +1248,11 @@ object Similarity {
     * threshold re-trains over the landed union (an ensure whose
     * `model=` term has drifted — the x138/x139 ensure-over-union
     * route) instead of riding the frozen model forever. ON BY DEFAULT
-    * at [[refreshImbalanceDefault]] since round 17; set to `off` (or
-    * any non-positive value) to pin the frozen-forever behavior.
-    */
-  val RefreshImbalanceKey = "spark.graft.ivf.refreshImbalance"
-
-  /** The default refresh threshold, set by measurement, not taste
+    * since round 17: it is the default of the streaming maintenance
+    * step's `refreshImbalance` argument, where `None` pins the
+    * frozen-forever behavior.
+    *
+    * The threshold is set by measurement, not taste
     * (100× corpus, half the label space held out as a 10-batch
     * drifting stream; SCALE.md round 17): healthy
     * post-train imbalance on the clustered corpus reads 3.0–5.3, so a
@@ -1410,11 +1409,9 @@ object Similarity {
     * limit and codegen falls back to interpretation; a production IVF
     * wants k ~ √n (thousands). Both paths produce bit-identical
     * assignments (ExtSpec asserts row identity), so the crossover is a
-    * pure plan-shape choice. Tunable for tests/clusters via
-    * `spark.graft.ivf.literalKMax`.
+    * pure plan-shape choice.
     */
-  val LiteralKMaxKey = "spark.graft.ivf.literalKMax"
-  private val literalKMaxDefault = 64
+  private val LiteralKMax = 64
 
   /** Ceiling on the adaptive cell count. k ∝ n removes the n²/k edge
     * quadratic, but an UNBOUNDED k re-creates walls on the model side:
@@ -1686,8 +1683,6 @@ object Similarity {
       iters: Int, init: String): Seq[(Long, Seq[Float])] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val literalKMax = spark.conf.get(LiteralKMaxKey,
-      literalKMaxDefault.toString).toInt
     var cent: Seq[(Long, Seq[Float])] = init match {
       case "first" => corpus
         .filter(col("vec_id") < nCentroids)
@@ -1699,7 +1694,7 @@ object Similarity {
     }
     for (_ <- 0 until iters if cent.nonEmpty) {
       val assigned =
-        if (cent.size <= literalKMax) assignLiteral(corpus, cent)
+        if (cent.size <= LiteralKMax) assignLiteral(corpus, cent)
         else assignBroadcastJoin(corpus, cent)
       cent = lloydUpdate(assigned)
     }
@@ -1712,7 +1707,7 @@ object Similarity {
     * shuffle, centroid norms constant-folded, pure whole-stage codegen.
     * Returns (embedding, cell).
     */
-  private def assignLiteral(corpus: DataFrame,
+  private[graft] def assignLiteral(corpus: DataFrame,
       cent: Seq[(Long, Seq[Float])]): DataFrame = {
     val scored = cent.map { case (id, e) =>
       val le = lit(e.toArray)
@@ -1737,7 +1732,7 @@ object Similarity {
     * `vec_id` per corpus row (the grouping key that reassembles each
     * vector's argmax). Returns (embedding, cell).
     */
-  private def assignBroadcastJoin(corpus: DataFrame,
+  private[graft] def assignBroadcastJoin(corpus: DataFrame,
       cent: Seq[(Long, Seq[Float])]): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._

@@ -1884,7 +1884,7 @@ object ExtQueries {
     // x153: the drift SIGNAL declared — x139's exact lifecycle
     // (base-trained frozen model, union assigned via the incremental
     // extension) summarized into the one-row cell-load relation the
-    // streaming refresh policy reads (spark.graft.ivf.refreshImbalance
+    // streaming refresh policy reads (its `refreshImbalance` threshold
     // compares against `imbalance`). The oracle re-derives the same
     // loads from the replicated assignment, so the stats can't drift
     // from the route they summarize; the Spark side reads ONLY the

@@ -605,23 +605,19 @@ object Streams {
     */
   private def ivfExtendAndCompact(indexPath: String, nCentroids: Int,
       iters: Int, profile: graft.ext.IndexProfile,
-      cellFileBudget: Int = CellFileBudget)
+      cellFileBudget: Int = CellFileBudget,
+      refreshImbalance: Option[Double] =
+        Some(graft.ext.Similarity.refreshImbalanceDefault),
+      refreshAsync: Boolean = true)
       : (DataFrame, DataFrame, Option[DataFrame]) => Boolean =
     (base, batch, union) => {
       val spark = base.sparkSession
-      // policy threshold resolved up front: adoption's futility
-      // bookkeeping and the breach check read the same value
-      val thr: Option[Double] =
-        spark.conf.getOption(graft.ext.Similarity.RefreshImbalanceKey)
-          .map(_.trim.toLowerCase) match {
-          case Some("off") | Some("none") | Some("") => None
-          case Some(v) => Some(v.toDouble).filter(_ > 0)
-          case None => Some(graft.ext.Similarity.refreshImbalanceDefault)
-        }
       // a background retrain that finished since the last step is
-      // adopted FIRST, so this batch extends the fresh model
+      // adopted FIRST, so this batch extends the fresh model; its
+      // futility bookkeeping reads the same threshold as the breach
+      // check below
       adoptIvfRetrain(spark, indexPath, rootDirs(base), nCentroids,
-        iters, profile, thr)
+        iters, profile, refreshImbalance)
       val built = graft.ext.Similarity.extendIvfIndex(base, batch,
         indexPath, nCentroids, iters, unionView = union,
         profile = profile)
@@ -635,12 +631,12 @@ object Streams {
       // the ensure's model term differs from the frozen one, so this
       // is exactly the documented ensure-over-union route, now
       // policy-driven instead of manual. Since round 18 the retrain
-      // runs ASYNC by default (serve frozen, swap on completion —
-      // [[RefreshAsyncKey]]); the sync route remains conf-selectable.
-      // The stats scan reads only the cell partition column
-      // (footer-bound at any index size); `off`/non-positive pins the
-      // frozen-forever behavior.
-      thr.foreach { t =>
+      // runs ASYNC by default (serve frozen, swap on completion);
+      // `refreshAsync = false` selects the sync route. The stats scan
+      // reads only the cell partition column (footer-bound at any
+      // index size); `refreshImbalance = None` pins the frozen-forever
+      // behavior.
+      refreshImbalance.foreach { t =>
           val log = org.slf4j.LoggerFactory.getLogger(getClass)
           val imb = graft.ext.Similarity
             .ivfCellLoadStats(spark, indexPath)
@@ -671,10 +667,9 @@ object Streams {
                 "the frozen model until it lands")
             case _ =>
               val u = union.getOrElse(base.unionByName(batch))
-              val async = spark.conf
-                .get(RefreshAsyncKey, "true").trim.toBoolean
-              val snapshotDirs = if (async) rootDirs(u) else Vector.empty
-              if (async && snapshotDirs.nonEmpty) {
+              val snapshotDirs =
+                if (refreshAsync) rootDirs(u) else Vector.empty
+              if (refreshAsync && snapshotDirs.nonEmpty) {
                 log.info(s"IVF index $indexPath imbalance $imb > $t — " +
                   "launching a background retrain over the landed " +
                   s"union (${snapshotDirs.size} dirs); extensions " +
@@ -682,9 +677,9 @@ object Streams {
                 launchIvfRetrain(spark, indexPath, u, snapshotDirs,
                   nCentroids, iters, profile)
               } else {
-                // sync route: conf-pinned, or the union plan's dirs
-                // are unrecoverable (non-file corpus) so the catch-up
-                // protocol can't run
+                // sync route: pinned by the caller, or the union plan's
+                // dirs are unrecoverable (non-file corpus) so the
+                // catch-up protocol can't run
                 log.info(s"IVF index $indexPath imbalance $imb > $t — " +
                   "re-training over the landed union (synchronous)")
                 graft.ext.Similarity.ensureIvfIndex(u, indexPath,
@@ -737,14 +732,10 @@ object Streams {
   // live index untouched and an orphaned side dir the next launch
   // overwrite-ensures; a crash between the two renames leaves no live
   // index, which the next (re)start's seed ensure rebuilds — never
-  // corrupt, at worst a rebuild.
-
-  /** Async-refresh switch: `true` (default) retrains off the hot path
-    * and swaps on completion; `false` pins the pre-r18 synchronous
-    * in-batch retrain (the threshold default's cost/recall curve,
-    * SCALE.md round 17, was measured on the sync route).
-    */
-  val RefreshAsyncKey = "spark.graft.ivf.refreshAsync"
+  // corrupt, at worst a rebuild. The maintenance step's
+  // `refreshAsync = false` pins the pre-r18 synchronous in-batch
+  // retrain (the threshold default's cost/recall curve, SCALE.md round
+  // 17, was measured on the sync route).
 
   private final case class IvfRetrain(thread: Thread,
       snapshot: Vector[String], sidePath: String,
@@ -1004,13 +995,16 @@ object Streams {
       nCentroids: Int, iters: Int = 3,
       profile: graft.ext.IndexProfile = graft.ext.IndexProfile.Production(),
       cellFileBudget: Int = CellFileBudget,
-      maxLandedDirs: Int = LandedDirBudget)
+      maxLandedDirs: Int = LandedDirBudget,
+      refreshImbalance: Option[Double] =
+        Some(graft.ext.Similarity.refreshImbalanceDefault),
+      refreshAsync: Boolean = true)
       : Vector[String] =
     indexMaintenanceBatch(spark, corpusDir, newDir, prev,
       ensure = graft.ext.Similarity.ensureIvfIndex(_, indexPath,
         nCentroids, iters, profile = profile),
       extend = ivfExtendAndCompact(indexPath, nCentroids, iters,
-        profile, cellFileBudget),
+        profile, cellFileBudget, refreshImbalance, refreshAsync),
       restamp = Some((o, n) => graft.ext.Similarity
         .restampIvfIndex(spark, indexPath, o, n)),
       maxLandedDirs = maxLandedDirs)
@@ -1222,7 +1216,7 @@ object Streams {
 
   private[graft] def claimCorpusOwner(
       spark: org.apache.spark.sql.SparkSession, corpusDir: String,
-      checkpoint: String): Unit = {
+      checkpoint: String, settleMs: Long = 2000): Unit = {
     val p = new org.apache.hadoop.fs.Path(corpusDir, "_graft_owner")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val me = ownerIdentity(spark, checkpoint)
@@ -1232,11 +1226,13 @@ object Streams {
     // claim (crash in that window) eligible for reclaim. Without the
     // grace age, two concurrently starting streams race: B reads A's
     // just-created 0-byte file, "reclaims" it, and both run — the
-    // exact b<id> collision this guard exists to refuse.
-    val settleMs = spark.conf
-      .get("spark.graft.corpus.ownerSettleMs", "2000").toLong
-    val graceMs = spark.conf
-      .get("spark.graft.corpus.ownerGraceMs", "60000").toLong
+    // exact b<id> collision this guard exists to refuse. The grace is
+    // the one deployment setting here, so it is checked, not trusted.
+    val graceKey = "spark.graft.corpus.ownerGraceMs"
+    val graceRaw = spark.conf.get(graceKey, "60000")
+    val graceMs = graceRaw.trim.toLongOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(s"$graceKey must be a " +
+        s"non-negative number of milliseconds, got '$graceRaw'"))
     def read(): Option[String] =
       try {
         val in = fs.open(p)

@@ -218,10 +218,11 @@ class AtRestSpec extends AnyFunSuite {
       "holder stops beating and remains breakable") {
     val dir = tmp()
     val lease = new java.io.File(dir, Meta + ".lease")
-    spark.conf.set("spark.graft.lease.renewMs", "100")
-    try {
-      @volatile var bErr: Option[Throwable] = None
-      @volatile var bMutated = false
+    @volatile var bErr: Option[Throwable] = None
+    @volatile var bMutated = false
+    // the holder takes the lease with a 100 ms heartbeat; the nested
+    // ensureStamped re-enters it on the same thread
+    AtRest.withMutationLease(spark, dir, Meta, renewMs = 100) {
       AtRest.ensureStamped(spark, dir, Meta, "w1", force = false) {
         // simulate a build that has already outlived the TTL: age the
         // lease past the break threshold, then give the heartbeat a
@@ -242,16 +243,16 @@ class AtRestSpec extends AnyFunSuite {
           catch { case e: Throwable => bErr = Some(e) })
         b.start(); b.join()
       }
-      assert(!bMutated, "second writer must not mutate under a live lease")
-      assert(bErr.exists(_.isInstanceOf[IllegalStateException]),
-        s"second writer must be refused, got $bErr")
-      assert(AtRest.readStamp(spark, dir, Meta).contains("w1"))
-      assert(!lease.exists(), "release removes the holder's own lease")
-      // after release the heartbeat is cancelled: nothing recreates or
-      // refreshes the lease file
-      Thread.sleep(400)
-      assert(!lease.exists(), "a cancelled heartbeat must not resurrect")
-    } finally spark.conf.unset("spark.graft.lease.renewMs")
+    }
+    assert(!bMutated, "second writer must not mutate under a live lease")
+    assert(bErr.exists(_.isInstanceOf[IllegalStateException]),
+      s"second writer must be refused, got $bErr")
+    assert(AtRest.readStamp(spark, dir, Meta).contains("w1"))
+    assert(!lease.exists(), "release removes the holder's own lease")
+    // after release the heartbeat is cancelled: nothing recreates or
+    // refreshes the lease file
+    Thread.sleep(400)
+    assert(!lease.exists(), "a cancelled heartbeat must not resurrect")
   }
 
   test("beat sidecar: on stores where setTimes is a no-op the holder " +
@@ -282,12 +283,13 @@ class AtRestSpec extends AnyFunSuite {
     // happy path on a working-setTimes store: the heartbeat renews via
     // mtime alone and never writes the sidecar
     beatF.delete()
-    spark.conf.set("spark.graft.lease.renewMs", "100")
-    try AtRest.ensureStamped(spark, dir, Meta, "v2", force = false) {
-      Thread.sleep(400)
-      assert(!beatF.exists(),
-        "mtime renewal works here — no beat sidecar expected")
-    } finally spark.conf.unset("spark.graft.lease.renewMs")
+    AtRest.withMutationLease(spark, dir, Meta, renewMs = 100) {
+      AtRest.ensureStamped(spark, dir, Meta, "v2", force = false) {
+        Thread.sleep(400)
+        assert(!beatF.exists(),
+          "mtime renewal works here — no beat sidecar expected")
+      }
+    }
   }
 
   test("lease tokens pin every delete to its incarnation: a holder " +

@@ -1295,17 +1295,6 @@ class ExtSpec extends AnyFunSuite {
     val wide = Dedup.simhashNearDupWide(docs)
       .as[(Long, Long, Int)].collect().toSet
     assert(auto == wide)
-    // conf pins skip the probe and force either width
-    spark.conf.set("spark.graft.simhash.width", "60")
-    try {
-      val narrow = Dedup.simhashNearDup(docs)
-        .as[(Long, Long, Int)].collect().toSet
-      assert(Dedup.simhashNearDupAuto(docs)
-        .as[(Long, Long, Int)].collect().toSet == narrow)
-      spark.conf.set("spark.graft.simhash.width", "120")
-      assert(Dedup.simhashNearDupAuto(docs)
-        .as[(Long, Long, Int)].collect().toSet == wide)
-    } finally spark.conf.unset("spark.graft.simhash.width")
   }
 
   test("x135 boilerplate fraction flags exactly the >5%-df shingles") {
@@ -1480,19 +1469,6 @@ class ExtSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().toSet
     assert(Dedup.substringOverlapAuto(docs)
       .as[(Long, Long, Long)].collect().toSet == expected)
-    // conf pins skip the probe and force either shape
-    spark.conf.set("spark.graft.winnow.maxdf", "0")
-    try {
-      assert(Dedup.substringOverlapAuto(boiler, minShared = 1)
-        .as[(Long, Long, Long)].collect().toSet ==
-        Dedup.substringOverlapPairs(boiler, 16, 8, 1)
-          .as[(Long, Long, Long)].collect().toSet)
-      spark.conf.set("spark.graft.winnow.maxdf", "50")
-      assert(Dedup.substringOverlapAuto(boiler, minShared = 1)
-        .as[(Long, Long, Long)].collect().toSet ==
-        Dedup.substringOverlapPairs(boiler, 16, 8, 1, maxDf = Some(50))
-          .as[(Long, Long, Long)].collect().toSet)
-    } finally spark.conf.unset("spark.graft.winnow.maxdf")
   }
 
   test("extendCdcIndex: incremental pairs equal the from-scratch CDC " +
@@ -1960,23 +1936,6 @@ class ExtSpec extends AnyFunSuite {
         .as[(Long, Long, Double)].collect().toSet
     assert(Dedup.containmentAuto(docs)
       .as[(Long, Long, Double)].collect().toSet == expected)
-    // conf pins skip the probe and force either shape
-    spark.conf.set("spark.graft.containment.mode", "exact")
-    try {
-      assert(Dedup.containmentAuto(sat)
-        .as[(Long, Long, Double)].collect().toSet ==
-        Dedup.containmentPairs(sat, 3, 0.9)
-          .as[(Long, Long, Double)].collect().toSet)
-      spark.conf.set("spark.graft.containment.mode", "cdc")
-      assert(Dedup.containmentAuto(clean)
-        .as[(Long, Long, Double)].collect().toSet ==
-        Dedup.cdcContainmentPairs(clean, p = 8, threshold = 0.5)
-          .as[(Long, Long, Double)].collect().toSet)
-      spark.conf.set("spark.graft.containment.mode", "bogus")
-      intercept[IllegalArgumentException] {
-        Dedup.containmentAuto(clean)
-      }
-    } finally spark.conf.unset("spark.graft.containment.mode")
   }
 
   test("x35 declared recall query matches set-computed recall@10") {
@@ -2761,23 +2720,19 @@ class ExtSpec extends AnyFunSuite {
 
   test("broadcast-join Lloyd assignment is row-identical to the literal " +
       "path at the same k") {
-    // force the join path by dropping the crossover to 0, retrain the
-    // SAME (corpus, k, iters), and compare to the literal result. The
-    // cache would hide the second training (same key, identical value by
-    // design), so it is cleared between runs to make the test non-vacuous.
-    val literal = Similarity.trainCentroids(emb, nCentroids = 8, iters = 3)
+    // both assignment shapes against the SAME trained centroids: the
+    // rounded-cosine argmax and low-id tie-break must agree row for row
+    val cent = Similarity.trainCentroids(emb, nCentroids = 8, iters = 3)
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    spark.conf.set(Similarity.LiteralKMaxKey, "0")
-    try {
-      Similarity.invalidateTrainedCentroids()
-      val joined = Similarity.trainCentroids(emb, nCentroids = 8, iters = 3)
-        .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-      assert(joined == literal,
-        "large-k join assignment must reproduce the literal path bit-exactly")
-    } finally {
-      spark.conf.unset(Similarity.LiteralKMaxKey)
-      Similarity.invalidateTrainedCentroids()
-    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Seq[Float], Long)] =
+      df.select(col("embedding"), col("cell")).as[(Seq[Float], Long)]
+        .collect().toSeq.sortBy(_.toString)
+    val literal = rows(Similarity.assignLiteral(emb, cent))
+    val joined = rows(Similarity.assignBroadcastJoin(emb, cent))
+    assert(literal.size == emb.count() && literal.map(_._2).distinct.size > 1,
+      "the fixture must spread over several cells")
+    assert(joined == literal,
+      "large-k join assignment must reproduce the literal path bit-exactly")
   }
 
   test("training at k=256 runs through the join path (production IVF " +
@@ -3069,18 +3024,32 @@ class ExtSpec extends AnyFunSuite {
     val params = Dedup.lshIndexParams(all, 3)
     assert(spark.read.parquet(s"$dir/bands").count() ==
       all.count() * params._2)
-    // a banding pin that drifts from the stamped build must REBUILD
-    // (never probe batch keys against keys hashed under other banding)
-    spark.conf.set("spark.graft.lsh.bands", "32")
-    try {
-      assert(Dedup.extendDedupIndexLsh(base, batch, dir),
-        "banding drift must rebuild")
-      assert(spark.read.parquet(s"$dir/bands").count() ==
-        all.count() * 32)
-      val rebuilt = Dedup.readDedupPairs(spark, dir)
-        .collect().map(_.toString).sorted.toSeq
-      assert(rebuilt == pairsFull)
-    } finally spark.conf.unset("spark.graft.lsh.bands")
+    // an at-rest stamp whose banding differs from the union build's
+    // must REBUILD (never probe batch keys against keys hashed under
+    // other banding): rewrite the sidecar's b= field to another count
+    val meta = "_graft_dedup_lsh_meta"
+    val stamped = graft.engine.AtRest.readStamp(spark, dir, meta)
+    val bField = s"b=${params._2}"
+    assert(stamped.exists(_.split(":").contains(bField)),
+      s"the stamp must carry the banding as $bField: $stamped")
+    val drifted = stamped.get.split(":")
+      .map(f => if (f == bField) s"b=${params._2 / 2}" else f)
+      .mkString(":")
+    // through the Hadoop FS API, so the local store's .crc stays valid
+    val metaPath = new org.apache.hadoop.fs.Path(dir, meta)
+    val out = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
+      .create(metaPath, true)
+    try out.write(drifted.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    assert(Dedup.extendDedupIndexLsh(base, batch, dir),
+      "banding drift must rebuild")
+    assert(graft.engine.AtRest.readStamp(spark, dir, meta) == stamped,
+      "the rebuild must re-stamp the union under its own banding")
+    assert(spark.read.parquet(s"$dir/bands").count() ==
+      all.count() * params._2)
+    val rebuilt = Dedup.readDedupPairs(spark, dir)
+      .collect().map(_.toString).sorted.toSeq
+    assert(rebuilt == pairsFull)
   }
 
   test("jaccardPairsLshAuto picks r=2 on clean corpora, r=4 on saturated " +
@@ -3109,15 +3078,6 @@ class ExtSpec extends AnyFunSuite {
     val fixed = Dedup.jaccardPairsLsh(sat, 3, 0.5, satHashes, satBands)
       .collect().map(_.toString).sorted.toSeq
     assert(auto == fixed && auto.nonEmpty)
-    // conf pins skip the estimate / change the hash budget
-    spark.conf.set("spark.graft.lsh.bands", "64")
-    try {
-      val pinned = Dedup.jaccardPairsLshAuto(sat, 3, 0.5)
-        .collect().map(_.toString).sorted.toSeq
-      val fixed64 = Dedup.jaccardPairsLsh(sat, 3, 0.5, 128, 64)
-        .collect().map(_.toString).sorted.toSeq
-      assert(pinned == fixed64)
-    } finally spark.conf.unset("spark.graft.lsh.bands")
   }
 
   test("ensureDedupIndex builds once, reuses on unchanged data, rebuilds " +

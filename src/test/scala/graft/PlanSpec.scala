@@ -281,18 +281,29 @@ class PlanSpec extends AnyFunSuite {
     // (part, pack_id) aggregation's ClusteredDistribution — a second
     // corpus shuffle between window and agg would mean the partitioning
     // contract regressed
-    // the r20 SortSampleCut adds its own hash exchange directly under
-    // the final range sort (a different, deliberate exchange); disable
-    // it here so the assertion keeps guarding the window→agg contract
-    spark.conf.set("spark.graft.sort.sampleCut", "false")
-    try {
-      val plan = graft.SparkEntry.queries("x63_pack_manifest")(spark, sf)
-        .queryExecution.executedPlan.toString
-      val hashExchanges = "Exchange hashpartitioning".r
-        .findAllIn(plan).length
-      assert(hashExchanges == 1,
-        s"expected 1 hash Exchange:\n${plan.take(2000)}")
-    } finally spark.conf.unset("spark.graft.sort.sampleCut")
+    // the r20 SortSampleCut adds its own, deliberate hash exchange on
+    // the final sort keys directly under the range sort; it is told
+    // apart from the window's exchange by its keys
+    val plan = graft.SparkEntry.queries("x63_pack_manifest")(spark, sf)
+      .queryExecution.executedPlan.toString
+    // "part#12, pack_id#40L, 200" → Seq("part", "pack_id")
+    def keys(args: String): Seq[String] =
+      args.split(",").toSeq.dropRight(1)
+        .map(_.trim.takeWhile(c => c != '#' && c != ' '))
+    def exchanges(kind: String): Seq[Seq[String]] =
+      s"Exchange $kind\\(([^)]*)\\)".r.findAllMatchIn(plan)
+        .map(m => keys(m.group(1))).toSeq
+    val sortKeys = exchanges("rangepartitioning")
+    assert(sortKeys.size == 1,
+      s"expected one final range sort:\n${plan.take(2000)}")
+    val hash = exchanges("hashpartitioning")
+    val window = hash.filterNot(_ == sortKeys.head)
+    assert(window == Seq(Seq("part")),
+      s"expected exactly 1 hash Exchange on the window's partition key " +
+        s"(part), got $window:\n${plan.take(2000)}")
+    assert(hash.count(_ == sortKeys.head) == 1,
+      s"expected the SortSampleCut hash Exchange on the sort keys " +
+        s"${sortKeys.head}:\n${plan.take(2000)}")
   }
 
   test("SortSampleCut materializes the child of an aggregating range " +

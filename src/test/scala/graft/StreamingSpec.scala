@@ -450,10 +450,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("IVF refresh policy: a maintenance step whose post-extension " +
-      "cell-load imbalance breaches spark.graft.ivf.refreshImbalance " +
-      "RE-TRAINS over the landed union; 'off' pins the frozen-forever " +
-      "behavior; UNSET runs the measured default (8.0), which must not " +
-      "fire below its threshold") {
+      "cell-load imbalance breaches its refreshImbalance threshold " +
+      "RE-TRAINS over the landed union; None pins the frozen-forever " +
+      "behavior; the measured default (8.0) must not fire below its " +
+      "threshold") {
     import graft.ext.{IndexProfile, Similarity}
     // base: a spread ring (8 distinct cells); batches: many copies of
     // ONE direction — they pile into a single cell, the drift shape
@@ -462,7 +462,12 @@ class StreamingSpec extends AnyFunSuite {
         .map(_.toFloat)))
     val pile = (100 until 180).map(i => (i.toLong,
       Seq(1.0f, 0.01f, 0.0f).map(_.toFloat)))
-    def drive(cd: String, ix: String): Seq[String] = {
+    // this test pins the THRESHOLD semantics on the synchronous route
+    // (retrain visible immediately after the breaching batch); the
+    // async default's serve-frozen/swap protocol has its own test
+    def drive(cd: String, ix: String,
+        thr: Option[Double] = Some(Similarity.refreshImbalanceDefault))
+        : Seq[String] = {
       var prev: Option[Vector[String]] = None
       def land(id: Int, rows: Seq[(Long, Seq[Float])]): String = {
         val d = s"$cd/b$id"
@@ -470,30 +475,25 @@ class StreamingSpec extends AnyFunSuite {
         d
       }
       prev = Some(Streams.ivfIndexBatch(spark, cd, land(0, ring), prev,
-        ix, nCentroids = 8, profile = IndexProfile.Exact))
+        ix, nCentroids = 8, profile = IndexProfile.Exact,
+        refreshImbalance = thr, refreshAsync = false))
       val frozen = Similarity.readKnnCentroids(spark, ix)
         .collect().map(_.toString).sorted.toSeq
       prev = Some(Streams.ivfIndexBatch(spark, cd,
         land(1, pile), prev, ix, nCentroids = 8,
-        profile = IndexProfile.Exact))
+        profile = IndexProfile.Exact,
+        refreshImbalance = thr, refreshAsync = false))
       frozen
     }
-    // this test pins the THRESHOLD semantics on the synchronous route
-    // (retrain visible immediately after the breaching batch); the
-    // async default's serve-frozen/swap protocol has its own test
-    spark.conf.set(Streams.RefreshAsyncKey, "false")
-    // 'off': frozen model rides through the drifting batch no matter
+    // None: frozen model rides through the drifting batch no matter
     // what the imbalance reads — the explicit disable face
     val cd1 = Files.createTempDirectory("graft-refresh-c1").toString
     val ix1 = Files.createTempDirectory("graft-refresh-i1").toString
-    spark.conf.set(Similarity.RefreshImbalanceKey, "off")
-    val frozen1 =
-      try drive(cd1, ix1)
-      finally spark.conf.unset(Similarity.RefreshImbalanceKey)
+    val frozen1 = drive(cd1, ix1, thr = None)
     assert(Similarity.readKnnCentroids(spark, ix1)
       .collect().map(_.toString).sorted.toSeq == frozen1,
       "with the policy off the model must stay frozen")
-    // UNSET = the measured default (8.0). This drive's post-pile
+    // the measured default (8.0). This drive's post-pile
     // imbalance sits UNDER it (~4.5: one 90-row cell over a 20-row
     // mean), so the default must not fire — a default that retrained
     // healthy indexes would be worse than no default
@@ -511,18 +511,12 @@ class StreamingSpec extends AnyFunSuite {
     // breaches
     val cd2 = Files.createTempDirectory("graft-refresh-c2").toString
     val ix2 = Files.createTempDirectory("graft-refresh-i2").toString
-    spark.conf.set(Similarity.RefreshImbalanceKey, "3.0")
-    try {
-      val frozen2 = drive(cd2, ix2)
-      val imb = Similarity.ivfCellLoadStats(spark, ix2)
-        .select(col("imbalance")).head().getDouble(0)
-      assert(Similarity.readKnnCentroids(spark, ix2)
-        .collect().map(_.toString).sorted.toSeq != frozen2,
-        s"imbalance $imb over threshold must re-train the model")
-    } finally {
-      spark.conf.unset(Similarity.RefreshImbalanceKey)
-      spark.conf.unset(Streams.RefreshAsyncKey)
-    }
+    val frozen2 = drive(cd2, ix2, thr = Some(3.0))
+    val imb = Similarity.ivfCellLoadStats(spark, ix2)
+      .select(col("imbalance")).head().getDouble(0)
+    assert(Similarity.readKnnCentroids(spark, ix2)
+      .collect().map(_.toString).sorted.toSeq != frozen2,
+      s"imbalance $imb over threshold must re-train the model")
   }
 
   test("IVF refresh futility guard: a policy retrain that cannot fix " +
@@ -550,48 +544,41 @@ class StreamingSpec extends AnyFunSuite {
     def model(): Seq[String] = Similarity.readKnnCentroids(spark, ix)
       .collect().map(_.toString).sorted.toSeq
     val futileFile = new java.io.File(ix, "_graft_refresh_futile")
-    spark.conf.set(Similarity.RefreshImbalanceKey, "2.0")
     // futility ARITHMETIC pinned on the sync route (deterministic
     // retrain timing); the async adoption path re-runs the same
     // bookkeeping and has its own test
-    spark.conf.set(Streams.RefreshAsyncKey, "false")
-    try {
-      var prev: Option[Vector[String]] = None
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(0, base), prev,
-        ix, nCentroids = 4, profile = IndexProfile.Exact))
-      val seeded = model()
-      // pile batch: imbalance breaches 2.0 → the policy retrains ONCE,
-      // cannot fix it (identical vectors stay one cell), records the
-      // bottomed-out level
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(1, pile(100, 200)),
-        prev, ix, nCentroids = 4, profile = IndexProfile.Exact))
-      val afterRetrain = model()
-      assert(afterRetrain != seeded, "the first breach must retrain")
-      val futile = Streams.refreshFutileLevel(spark, ix)
-      assert(futile.isDefined && futileFile.isFile,
-        "an unfixable breach must record the futile level")
-      // more of the same shape: imbalance still over the threshold but
-      // within slack of the recorded level → NO retrain (the guard)
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(2, pile(400, 20)),
-        prev, ix, nCentroids = 4, profile = IndexProfile.Exact))
-      assert(model() == afterRetrain,
-        "within slack of the proven-futile level the policy must " +
-          "stand down, not retrain every batch")
-      // a stale LOW recorded level (as if the shape had been milder
-      // when it tripped) re-arms the policy once the current imbalance
-      // exceeds it by the slack — new drift on top of the shape
-      val w = new java.io.FileWriter(futileFile)
-      try w.write("1.0") finally w.close()
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(3, pile(500, 20)),
-        prev, ix, nCentroids = 4, profile = IndexProfile.Exact))
-      assert(model() != afterRetrain,
-        "imbalance past the recorded level by the slack must re-attempt")
-      assert(Streams.refreshFutileLevel(spark, ix).exists(_ > 1.0),
-        "the re-attempt must refresh the recorded futile level")
-    } finally {
-      spark.conf.unset(Similarity.RefreshImbalanceKey)
-      spark.conf.unset(Streams.RefreshAsyncKey)
-    }
+    var prev: Option[Vector[String]] = None
+    def step(dir: String): Unit =
+      prev = Some(Streams.ivfIndexBatch(spark, cd, dir, prev, ix,
+        nCentroids = 4, profile = IndexProfile.Exact,
+        refreshImbalance = Some(2.0), refreshAsync = false))
+    step(land(0, base))
+    val seeded = model()
+    // pile batch: imbalance breaches 2.0 → the policy retrains ONCE,
+    // cannot fix it (identical vectors stay one cell), records the
+    // bottomed-out level
+    step(land(1, pile(100, 200)))
+    val afterRetrain = model()
+    assert(afterRetrain != seeded, "the first breach must retrain")
+    val futile = Streams.refreshFutileLevel(spark, ix)
+    assert(futile.isDefined && futileFile.isFile,
+      "an unfixable breach must record the futile level")
+    // more of the same shape: imbalance still over the threshold but
+    // within slack of the recorded level → NO retrain (the guard)
+    step(land(2, pile(400, 20)))
+    assert(model() == afterRetrain,
+      "within slack of the proven-futile level the policy must " +
+        "stand down, not retrain every batch")
+    // a stale LOW recorded level (as if the shape had been milder
+    // when it tripped) re-arms the policy once the current imbalance
+    // exceeds it by the slack — new drift on top of the shape
+    val w = new java.io.FileWriter(futileFile)
+    try w.write("1.0") finally w.close()
+    step(land(3, pile(500, 20)))
+    assert(model() != afterRetrain,
+      "imbalance past the recorded level by the slack must re-attempt")
+    assert(Streams.refreshFutileLevel(spark, ix).exists(_ > 1.0),
+      "the re-attempt must refresh the recorded futile level")
   }
 
   test("async refresh (the r18 default): a breach launches the retrain " +
@@ -619,57 +606,49 @@ class StreamingSpec extends AnyFunSuite {
     def rows(ix: String): Seq[String] = spark.read.parquet(ix)
       .select(col("cid"), col("cell")).collect()
       .map(_.toString).sorted.toSeq
-    spark.conf.set(Similarity.RefreshImbalanceKey, "3.0")
-    try {
-      // ---- sync arm: the comparison oracle ----
-      val cdS = Files.createTempDirectory("graft-async-cs").toString
-      val ixS = Files.createTempDirectory("graft-async-is").toString
-      spark.conf.set(Streams.RefreshAsyncKey, "false")
-      var prevS: Option[Vector[String]] = None
-      prevS = Some(Streams.ivfIndexBatch(spark, cdS, land(cdS, 0, ring),
-        prevS, ixS, nCentroids = 8, profile = IndexProfile.Exact))
-      prevS = Some(Streams.ivfIndexBatch(spark, cdS, land(cdS, 1, pile),
-        prevS, ixS, nCentroids = 8, profile = IndexProfile.Exact))
-      val syncModelAfterBreach = model(ixS)
-      prevS = Some(Streams.ivfIndexBatch(spark, cdS, land(cdS, 2, tail),
-        prevS, ixS, nCentroids = 8, profile = IndexProfile.Exact))
-      // ---- async arm (the default) ----
-      val cdA = Files.createTempDirectory("graft-async-ca").toString
-      val ixA = Files.createTempDirectory("graft-async-ia").toString
-      spark.conf.unset(Streams.RefreshAsyncKey) // default = async
-      var prevA: Option[Vector[String]] = None
-      prevA = Some(Streams.ivfIndexBatch(spark, cdA, land(cdA, 0, ring),
-        prevA, ixA, nCentroids = 8, profile = IndexProfile.Exact))
-      val frozen = model(ixA)
-      prevA = Some(Streams.ivfIndexBatch(spark, cdA, land(cdA, 1, pile),
-        prevA, ixA, nCentroids = 8, profile = IndexProfile.Exact))
-      // the breaching batch returns with the FROZEN model still live —
-      // the retrain is in flight, not on the hot path
-      assert(model(ixA) == frozen,
-        "the breaching batch must serve the frozen model (async)")
-      // serving continuity: the live index answers probes mid-retrain
-      val q = ring.take(3).toDF("vec_id", "embedding")
-      assert(Similarity.topKIvfIndexed(ixA, q, k = 3, nprobe = 2)
-        .count() > 0, "the frozen index must keep serving probes")
-      assert(Streams.awaitIvfRetrain(ixA),
-        "the background retrain must complete")
-      // still frozen: adoption happens on the NEXT maintenance step
-      assert(model(ixA) == frozen,
-        "completion alone must not mutate the live index")
-      prevA = Some(Streams.ivfIndexBatch(spark, cdA, land(cdA, 2, tail),
-        prevA, ixA, nCentroids = 8, profile = IndexProfile.Exact))
-      // adopted: the swapped-in model is the sync arm's retrained one
-      assert(model(ixA) == syncModelAfterBreach,
-        "the post-swap model must equal the synchronous retrain's")
-      assert(rows(ixA) == rows(ixS),
-        "the post-swap index rows must equal the synchronous arm's")
-      // the side/retired dirs are gone after a clean swap
-      assert(!new java.io.File(ixA.stripSuffix("/") + "_retrain").exists())
-      assert(!new java.io.File(ixA.stripSuffix("/") + "_retired").exists())
-    } finally {
-      spark.conf.unset(Similarity.RefreshImbalanceKey)
-      spark.conf.unset(Streams.RefreshAsyncKey)
-    }
+    // threshold 3.0 sits under the pile's drift, so both arms breach
+    def step(cd: String, ix: String, prev: Option[Vector[String]],
+        dir: String, async: Boolean) =
+      Some(Streams.ivfIndexBatch(spark, cd, dir, prev, ix,
+        nCentroids = 8, profile = IndexProfile.Exact,
+        refreshImbalance = Some(3.0), refreshAsync = async))
+    // ---- sync arm: the comparison oracle ----
+    val cdS = Files.createTempDirectory("graft-async-cs").toString
+    val ixS = Files.createTempDirectory("graft-async-is").toString
+    var prevS: Option[Vector[String]] = None
+    prevS = step(cdS, ixS, prevS, land(cdS, 0, ring), async = false)
+    prevS = step(cdS, ixS, prevS, land(cdS, 1, pile), async = false)
+    val syncModelAfterBreach = model(ixS)
+    prevS = step(cdS, ixS, prevS, land(cdS, 2, tail), async = false)
+    // ---- async arm (the default) ----
+    val cdA = Files.createTempDirectory("graft-async-ca").toString
+    val ixA = Files.createTempDirectory("graft-async-ia").toString
+    var prevA: Option[Vector[String]] = None
+    prevA = step(cdA, ixA, prevA, land(cdA, 0, ring), async = true)
+    val frozen = model(ixA)
+    prevA = step(cdA, ixA, prevA, land(cdA, 1, pile), async = true)
+    // the breaching batch returns with the FROZEN model still live —
+    // the retrain is in flight, not on the hot path
+    assert(model(ixA) == frozen,
+      "the breaching batch must serve the frozen model (async)")
+    // serving continuity: the live index answers probes mid-retrain
+    val q = ring.take(3).toDF("vec_id", "embedding")
+    assert(Similarity.topKIvfIndexed(ixA, q, k = 3, nprobe = 2)
+      .count() > 0, "the frozen index must keep serving probes")
+    assert(Streams.awaitIvfRetrain(ixA),
+      "the background retrain must complete")
+    // still frozen: adoption happens on the NEXT maintenance step
+    assert(model(ixA) == frozen,
+      "completion alone must not mutate the live index")
+    prevA = step(cdA, ixA, prevA, land(cdA, 2, tail), async = true)
+    // adopted: the swapped-in model is the sync arm's retrained one
+    assert(model(ixA) == syncModelAfterBreach,
+      "the post-swap model must equal the synchronous retrain's")
+    assert(rows(ixA) == rows(ixS),
+      "the post-swap index rows must equal the synchronous arm's")
+    // the side/retired dirs are gone after a clean swap
+    assert(!new java.io.File(ixA.stripSuffix("/") + "_retrain").exists())
+    assert(!new java.io.File(ixA.stripSuffix("/") + "_retired").exists())
   }
 
   test("async refresh futility: an async retrain that cannot fix an " +
@@ -691,37 +670,31 @@ class StreamingSpec extends AnyFunSuite {
     }
     def model(): Seq[String] = Similarity.readKnnCentroids(spark, ix)
       .collect().map(_.toString).sorted.toSeq
-    spark.conf.set(Similarity.RefreshImbalanceKey, "2.0")
-    try {
-      var prev: Option[Vector[String]] = None
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(0, base), prev,
-        ix, nCentroids = 4, profile = IndexProfile.Exact))
-      // identical-vector pile: breach launches the async retrain
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(1, pile(100, 200)),
-        prev, ix, nCentroids = 4, profile = IndexProfile.Exact))
-      assert(Streams.awaitIvfRetrain(ix))
-      // adoption step: swap lands, the still-broken imbalance records
-      // the futile level
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(2, pile(400, 20)),
-        prev, ix, nCentroids = 4, profile = IndexProfile.Exact))
-      assert(Streams.refreshFutileLevel(spark, ix).isDefined,
-        "an unfixable async retrain must record the futile level at " +
-          "adoption")
-      val adopted = model()
-      // more of the same shape: the policy stands down — no new
-      // retrain in flight, model unchanged
-      prev = Some(Streams.ivfIndexBatch(spark, cd, land(3, pile(500, 20)),
-        prev, ix, nCentroids = 4, profile = IndexProfile.Exact))
-      assert(!Streams.retrainInFlight(ix),
-        "within slack of the futile level no retrain may launch")
-      assert(model() == adopted, "stand-down must keep the model")
-    } finally {
-      spark.conf.unset(Similarity.RefreshImbalanceKey)
-      spark.conf.unset(Streams.RefreshAsyncKey)
-    }
+    var prev: Option[Vector[String]] = None
+    def step(dir: String): Unit =
+      prev = Some(Streams.ivfIndexBatch(spark, cd, dir, prev, ix,
+        nCentroids = 4, profile = IndexProfile.Exact,
+        refreshImbalance = Some(2.0)))
+    step(land(0, base))
+    // identical-vector pile: breach launches the async retrain
+    step(land(1, pile(100, 200)))
+    assert(Streams.awaitIvfRetrain(ix))
+    // adoption step: swap lands, the still-broken imbalance records
+    // the futile level
+    step(land(2, pile(400, 20)))
+    assert(Streams.refreshFutileLevel(spark, ix).isDefined,
+      "an unfixable async retrain must record the futile level at " +
+        "adoption")
+    val adopted = model()
+    // more of the same shape: the policy stands down — no new
+    // retrain in flight, model unchanged
+    step(land(3, pile(500, 20)))
+    assert(!Streams.retrainInFlight(ix),
+      "within slack of the futile level no retrain may launch")
+    assert(model() == adopted, "stand-down must keep the model")
   }
 
-  test("corpus ownership: one landed corpus dir belongs to one stream " +
+test("corpus ownership: one landed corpus dir belongs to one stream " +
       "checkpoint — a restart re-claims, a second stream is refused " +
       "fail-fast at start, before any b<id> can collide") {
     val dir = Files.createTempDirectory("graft-owner").toString
@@ -758,28 +731,48 @@ class StreamingSpec extends AnyFunSuite {
     val owner = new java.io.File(dir, "_graft_owner")
     // keep the settle wait short so the refusal path doesn't stall the
     // suite; leave the grace at its 60 s default for the young case
-    spark.conf.set("spark.graft.corpus.ownerSettleMs", "200")
+    def claim(): Unit =
+      Streams.claimCorpusOwner(spark, dir, ck, settleMs = 200)
+    // young empty file = a concurrent claimer between create and
+    // write: deleting it here would let two streams co-own the
+    // corpus, so the late arriver must refuse
+    assert(owner.createNewFile())
+    val e = intercept[IllegalStateException](claim())
+    assert(e.getMessage.contains("reclaim grace"),
+      s"young empty claim must refuse as in-flight: ${e.getMessage}")
+    // the same file past the grace age is a TORN claim (crash in the
+    // create→write window) — reclaimed, not refused forever
+    assert(owner.setLastModified(
+      System.currentTimeMillis() - 120 * 1000L))
+    claim()
+    assert(new String(java.nio.file.Files.readAllBytes(owner.toPath))
+      == Streams.ownerIdentity(spark, ck),
+      "the reclaimed file must carry the new owner's identity")
+    // and the claim is now a plain restart re-claim
+    claim()
+  }
+
+  test("corpus ownership grace: a non-numeric or negative " +
+      "spark.graft.corpus.ownerGraceMs is refused with an error that " +
+      "names the key, before any owner file is written") {
+    val dir = Files.createTempDirectory("graft-grace").toString
+    val ck = Files.createTempDirectory("graft-grace-ck").toString
+    val key = "spark.graft.corpus.ownerGraceMs"
     try {
-      // young empty file = a concurrent claimer between create and
-      // write: deleting it here would let two streams co-own the
-      // corpus, so the late arriver must refuse
-      assert(owner.createNewFile())
-      val e = intercept[IllegalStateException] {
-        Streams.claimCorpusOwner(spark, dir, ck)
+      for (bad <- Seq("soon", "-1", "")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException] {
+          Streams.claimCorpusOwner(spark, dir, ck)
+        }
+        assert(e.getMessage.contains(key),
+          s"the error must name the key: ${e.getMessage}")
+        assert(!new java.io.File(dir, "_graft_owner").exists(),
+          "a refused setting must not leave an owner file behind")
       }
-      assert(e.getMessage.contains("reclaim grace"),
-        s"young empty claim must refuse as in-flight: ${e.getMessage}")
-      // the same file past the grace age is a TORN claim (crash in the
-      // create→write window) — reclaimed, not refused forever
-      assert(owner.setLastModified(
-        System.currentTimeMillis() - 120 * 1000L))
+      // zero is a valid (reclaim-at-once) grace
+      spark.conf.set(key, "0")
       Streams.claimCorpusOwner(spark, dir, ck)
-      assert(new String(java.nio.file.Files.readAllBytes(owner.toPath))
-        == Streams.ownerIdentity(spark, ck),
-        "the reclaimed file must carry the new owner's identity")
-      // and the claim is now a plain restart re-claim
-      Streams.claimCorpusOwner(spark, dir, ck)
-    } finally spark.conf.unset("spark.graft.corpus.ownerSettleMs")
+    } finally spark.conf.unset(key)
   }
 
   test("corpus ownership transfer: validated handover succeeds, a " +
