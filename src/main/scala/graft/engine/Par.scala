@@ -8,12 +8,14 @@ package graft.engine
   * leaves most cores idle while the next waits on the driver. r20
   * profiling: the lifecycle queries' wall is dominated by serial
   * sequencing of ~30–60 small jobs (x121: 46 jobs, job-sum 4.6 s, but
-  * ~6 s wall).
+  * ~6 s wall). `graft.fhir.FhirMain.run` drives its phase graph (dim
+  * reads beside the bundle scan's planning, the resource write beside
+  * rawstat and the three fact rollups) through [[both]] and [[all]].
   *
-  * `all` runs each branch on a fresh daemon thread started by the
-  * caller, so every branch inherits the caller's CURRENT Spark local
-  * properties (job group, job description, scheduler pool) — a pooled
-  * thread would keep the ones captured when it was first created. It
+  * Every branch runs on a fresh daemon thread started by the caller,
+  * so every branch inherits the caller's CURRENT Spark local properties
+  * (job group, job description, scheduler pool) — a pooled thread
+  * would keep the ones captured when it was first created. A call
   * waits for EVERY branch before returning — even when one fails — so
   * a crashed branch can never leave a sibling racing a follow-up
   * rebuild's overwrite; the first failure (in branch order) is then
@@ -24,24 +26,34 @@ package graft.engine
   */
 object Par {
 
-  def all(tasks: (() => Unit)*): Unit = {
-    if (tasks.size <= 1) { tasks.foreach(_()); return }
-    val failures = new Array[Throwable](tasks.size)
+  def all(tasks: (() => Unit)*): Unit = { results(tasks); () }
+
+  /** Two branches of different result types, run like [[all]]. */
+  def both[A, B](a: () => A, b: () => B): (A, B) = {
+    val Seq(x, y) = results(Seq(a, b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
+  }
+
+  /** Each branch's result, in branch order. */
+  private def results(tasks: Seq[() => Any]): Seq[Any] = {
+    if (tasks.size <= 1) return tasks.map(_())
+    val outcomes = new Array[Either[Throwable, Any]](tasks.size)
     val threads = tasks.zipWithIndex.map { case (t, i) =>
       val th = new Thread(() =>
-        try t() catch { case e: Throwable => failures(i) = e },
+        outcomes(i) =
+          try Right(t()) catch { case e: Throwable => Left(e) },
         s"graft-par-$i")
       th.setDaemon(true)
       th.start()
       th
     }
-    // join is the happens-before edge that publishes `failures`
+    // join is the happens-before edge that publishes `outcomes`
     threads.foreach(_.join())
-    failures.filter(_ != null).toList match {
+    outcomes.collect { case Left(e) => e }.toList match {
       case first :: rest =>
         rest.filterNot(_ eq first).foreach(first.addSuppressed)
         throw first
-      case Nil => ()
+      case Nil => outcomes.toSeq.map(_.toOption.get)
     }
   }
 }

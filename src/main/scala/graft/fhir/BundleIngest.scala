@@ -95,12 +95,4 @@ object BundleIngest {
           try_element_at(collMap, col("resourceType")),
           concat(lower(col("resourceType")), lit("s"))))
   }
-
-  /** S5: resource sink. Parquet partitioned by collection — the columnar
-    * stand-in for one-Mongo-collection-per-type (a Mongo connector sink
-    * drops in behind the same DataFrame, `.option("ordered","false")` ≈
-    * the reference's unordered bulk insert).
-    */
-  def writeResources(routed: DataFrame, outDir: String): Unit =
-    routed.write.mode("overwrite").partitionBy("collection").parquet(outDir)
 }

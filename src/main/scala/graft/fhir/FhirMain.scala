@@ -3,7 +3,7 @@ package graft.fhir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, Par}
 
 /** CLI entry point mirroring the reference's flag surface (main.go:29-39):
   *
@@ -28,6 +28,12 @@ import graft.engine.GraftSession
   * flags fall back to the parquet warehouse, so `-out` alone is a fully
   * local run. Dims default to empty when no parquet is given (every
   * lookup takes the zero-value path, like an unseeded `synth_ma` schema).
+  *
+  * Like the reference, which uploads each bundle's resources and its
+  * rawstat row together (bundle.go:111-124) and only then runs the stat
+  * jobs (main.go:118-125), [[run]] does not serialize what is
+  * independent: the dim reads overlap the bundle scan's planning, and
+  * the resource write overlaps rawstat and the three rollups.
   */
 object FhirMain {
 
@@ -116,6 +122,25 @@ object FhirMain {
     finally spark.stop()
   }
 
+  /** One ingest run: the reference's ingest (S1–S5), rawstat (S6/S7) and
+    * the three fact rollups (S8), as a phase graph whose independent
+    * branches run concurrently through [[graft.engine.Par]]:
+    *
+    * {{{
+    * {dim reads ∥ bundle scan plan} → cache + count
+    *   → {resource sink ∥ (rawstat write → read-back →
+    *                       pop ∥ disease ∥ condition facts)}
+    * }}}
+    *
+    * Rawstat is written and read back from its store before any fact
+    * job starts. Every branch runs to its end even when a sibling fails:
+    * a failing resource sink still leaves rawstat and all three fact
+    * tables written, and a failing fact write leaves the other two
+    * written. The first failure in branch order is rethrown — the
+    * resource sink's before the rawstat branch's, and among the facts
+    * pop before disease before condition — with every other failure
+    * attached as suppressed.
+    */
   def run(spark: SparkSession, path: String, out: String,
       cousubPath: Option[String], diseasePath: Option[String],
       asOf: String, reset: Boolean = true, debug: Boolean = false,
@@ -142,55 +167,75 @@ object FhirMain {
         spark.read.jdbc(url, table, new java.util.Properties)
       case _ => spark.read.parquet(spec)
     }
-    val cousubDim = RawStats.loadCousubDim(cousubPath
-      .map(readDim)
-      .getOrElse(Seq.empty[(String, String, String)]
-        .toDF("cs_name", "ct_fips", "cs_fips")))
-    val diseaseDim = RawStats.loadDiseaseDim(diseasePath
-      .map(readDim)
-      .getOrElse(Seq.empty[(String, String, Int, Option[Int])]
-        .toDF("code_system", "code", "condition_id", "disease_id")))
+    def dims(): (DataFrame, DataFrame) = (
+      RawStats.loadCousubDim(cousubPath
+        .map(readDim)
+        .getOrElse(Seq.empty[(String, String, String)]
+          .toDF("cs_name", "ct_fips", "cs_fips"))),
+      RawStats.loadDiseaseDim(diseasePath
+        .map(readDim)
+        .getOrElse(Seq.empty[(String, String, Int, Option[Int])]
+          .toDF("code_system", "code", "condition_id", "disease_id"))))
 
     val t0 = System.nanoTime()
-    val bundles = BundleIngest.rewriteBundle(
-      BundleIngest.readBundles(spark, path)).cache()
-    val nBundles = bundles.count()
-
-    // persisted: MongoResourceSink runs one distinct + one filtered write
-    // per collection, and -debug adds a count — without the cache the
-    // explode + reference-rewrite lineage recomputes N+1 times
-    val routed = BundleIngest.routeResources(bundles).persist()
-    resSink.writeResources(routed)
-    // -debug: per-collection routing counts (reference main.go:295-299
-    // prints per-bundle diagnostics behind the same flag)
-    if (debug)
-      routed.groupBy("collection").count().orderBy("collection")
-        .collect().foreach { r =>
-          println(s"[debug] ${r.getString(0)}: ${r.getLong(1)} resources")
-        }
-    routed.unpersist()
-
-    val rawstat = RawStats.build(
-      bundles, cousubDim, diseaseDim, lit(asOf).cast("date"))
-    // S6 → S7: rawstat persists through the configured store and the
-    // rollups read it BACK from storage (never the live lineage) — the
-    // reference's action boundary between ingest and stats
-    // (main.go:118-125): the three rollup jobs must not re-run the
-    // bundle-scan plan, and a crash between here and the facts leaves a
-    // queryable rawstat behind.
-    val store = rawstatStore.getOrElse(new ParquetRawstatStore(out))
-    store.write(rawstat)
-    println(f"$nBundles FHIR bundles read in ${(System.nanoTime() - t0) / 1e9}%f seconds")
-
-    val rawstatBack = store.read(spark)
-    def job(name: String, df: DataFrame): Unit = {
-      val t = System.nanoTime()
-      fSink.writeFacts(name, df)
-      println(f"$name calculated in ${(System.nanoTime() - t) / 1e9}%f seconds")
+    def writeResources(bundles: DataFrame): Unit = {
+      // persisted: MongoResourceSink runs one distinct + one filtered write
+      // per collection, and -debug adds a count — without the cache the
+      // explode + reference-rewrite lineage recomputes N+1 times
+      val routed = BundleIngest.routeResources(bundles).persist()
+      try {
+        resSink.writeResources(routed)
+        // -debug: per-collection routing counts (reference main.go:295-299
+        // prints per-bundle diagnostics behind the same flag)
+        if (debug)
+          routed.groupBy("collection").count().orderBy("collection")
+            .collect().foreach { r =>
+              println(s"[debug] ${r.getString(0)}: ${r.getLong(1)} resources")
+            }
+      } finally routed.unpersist()
     }
-    job("synth_pop_facts", FactJobs.populationFacts(rawstatBack))
-    job("synth_disease_facts", FactJobs.diseaseFacts(rawstatBack))
-    job("synth_condition_facts", FactJobs.conditionFacts(rawstatBack))
-    bundles.unpersist()
+
+    def stats(bundles: DataFrame, nBundles: Long, cousubDim: DataFrame,
+        diseaseDim: DataFrame): Unit = {
+      val rawstat = RawStats.build(
+        bundles, cousubDim, diseaseDim, lit(asOf).cast("date"))
+      // S6 → S7: rawstat persists through the configured store and the
+      // rollups read it BACK from storage (never the live lineage) — the
+      // reference's action boundary between ingest and stats
+      // (main.go:118-125): the three rollup jobs must not re-run the
+      // bundle-scan plan, and a crash between here and the facts leaves a
+      // queryable rawstat behind.
+      val store = rawstatStore.getOrElse(new ParquetRawstatStore(out))
+      store.write(rawstat)
+      println(f"$nBundles FHIR bundles read in ${(System.nanoTime() - t0) / 1e9}%f seconds")
+
+      val rawstatBack = store.read(spark)
+      def job(name: String, facts: DataFrame => DataFrame): () => Unit = () => {
+        val t = System.nanoTime()
+        fSink.writeFacts(name, facts(rawstatBack))
+        println(f"$name calculated in ${(System.nanoTime() - t) / 1e9}%f seconds")
+      }
+      // the three rollups share only their read-only input
+      Par.all(
+        job("synth_pop_facts", FactJobs.populationFacts),
+        job("synth_disease_facts", FactJobs.diseaseFacts),
+        job("synth_condition_facts", FactJobs.conditionFacts))
+    }
+
+    // phase 1: the dim reads (a footer job each from parquet) and the
+    // bundle plan (file listing, schema resolution and the rewrite's
+    // expression tree, mostly driver work) need nothing from each other.
+    // Caching starts after both, so a failed dim read leaves no cached
+    // plan behind.
+    val ((cousubDim, diseaseDim), scan) = Par.both(() => dims(),
+      () => BundleIngest.rewriteBundle(BundleIngest.readBundles(spark, path)))
+    val bundles = scan.cache()
+    try {
+      val nBundles = bundles.count()
+      // phase 2: the resource sink and the stats chain both read only the
+      // cached bundles and write disjoint targets
+      Par.all(() => writeResources(bundles),
+        () => stats(bundles, nBundles, cousubDim, diseaseDim))
+    } finally bundles.unpersist()
   }
 }

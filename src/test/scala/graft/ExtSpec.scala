@@ -1271,8 +1271,8 @@ class ExtSpec extends AnyFunSuite {
     }
   }
 
-  test("x132 auto-width simhash picks 60 bits on a dispersed corpus, " +
-      "120 on the saturated testdata, and the conf hatch pins either") {
+  test("x132 auto-width simhash picks 60 bits on a dispersed corpus " +
+      "and 120 on the saturated testdata") {
     // disjoint vocabularies -> dispersed fingerprints -> ~zero measured
     // combo-key collision mass -> the cheap 60-bit default
     val clean = (0 until 24).map(i =>
@@ -1431,9 +1431,8 @@ class ExtSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSet == brute(docs, 0.9))
   }
 
-  test("x133 auto-cap winnow picks uncapped on a dispersed corpus, the " +
-      "df cap on a boilerplate-saturated one, and the conf hatch pins " +
-      "either") {
+  test("x133 auto-cap winnow picks uncapped on a dispersed corpus and " +
+      "the df cap on a boilerplate-saturated one") {
     def md5hex(s: String): String = java.security.MessageDigest
       .getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -1824,7 +1823,7 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("hier auto-switch: Production training routes through the " +
-      "hierarchical trainer at and past spark.graft.ivf.hierKMin — a " +
+      "hierarchical trainer at and past the profile's hierKMin — a " +
       "large-k Production seed is the hier seed, bit for bit — while " +
       "below-threshold and explicit-flag callers are untouched") {
     import graft.ext.{IndexProfile, Similarity}
@@ -1896,8 +1895,7 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("x141 containment auto picks the exact join on a dispersed " +
-      "corpus, the CDC detector on a duplicate-saturated one, and the " +
-      "conf hatch pins either") {
+      "corpus and the CDC detector on a duplicate-saturated one") {
     def md5hex(s: String): String = java.security.MessageDigest
       .getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -3053,7 +3051,7 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("jaccardPairsLshAuto picks r=2 on clean corpora, r=4 on saturated " +
-      "ones, honors the conf pins, and matches the fixed-band output") {
+      "ones, and matches the fixed-band output") {
     // clean: disjoint vocabularies -> zero measured band collisions ->
     // bands = nh/2 (r=2)
     val clean = (0 until 24).map(i =>

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.fhir.{BundleIngest, FactJobs, RawStats}
+import graft.fhir.{BundleIngest, FactJobs, FactSink, FhirMain, ParquetSink,
+  RawStats, ResourceSink}
 
 /** Golden end-to-end pipeline test (SURVEY §5.2-2): fixture corpus →
   * ingest + rewrite + rawstat + 3 rollups, asserted against hand-computed
@@ -176,16 +177,38 @@ class FhirPipelineSpec extends AnyFunSuite {
   test("S5: partitioned resource sink round-trips") {
     val out = java.nio.file.Files.createTempDirectory("graft-resources")
       .toString
-    BundleIngest.writeResources(BundleIngest.routeResources(rewritten), out)
-    val back = spark.read.parquet(out)
+    new ParquetSink(out).writeResources(BundleIngest.routeResources(rewritten))
+    val back = spark.read.parquet(s"$out/resources")
     assert(back.count() == 23)
     assert(back.select("collection").distinct().count() == 10)
+  }
+
+  test("S5: resource files follow bytes, not input partitions: one data " +
+      "file per collection from 16 input partitions") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val out = Files.createTempDirectory("graft-resources-layout")
+    val routed = BundleIngest.routeResources(rewritten.repartition(16))
+    assert(routed.rdd.getNumPartitions == 16)
+    new ParquetSink(out.toString).writeResources(routed)
+    def list(p: Path): Seq[Path] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toSeq finally s.close()
+    }
+    val dirs = list(out.resolve("resources"))
+      .filter(_.getFileName.toString.startsWith("collection="))
+    assert(dirs.size == 10)
+    for (d <- dirs) {
+      val data = list(d).map(_.getFileName.toString)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(data.size == 1, s"$d holds ${data.mkString(", ")}")
+    }
   }
 
   test("S6/S7: the three rollups through the Mongo rawstat store seam " +
       "produce facts identical to the parquet path") {
     import java.nio.file.{Files, Paths}
-    import graft.fhir.{FhirMain, MongoRawstatStore}
+    import graft.fhir.MongoRawstatStore
     val outParquet = Files.createTempDirectory("graft-rs-pq").toString
     val outMongo = Files.createTempDirectory("graft-rs-mg").toString
     // connector seams replaced by a parquet round-trip in the store's OWN
@@ -220,6 +243,52 @@ class FhirPipelineSpec extends AnyFunSuite {
         .collect().map(_.toString).sorted.toSeq
       assert(a == b, s"fact table $t differs across rawstat stores")
     }
+  }
+
+  test("FhirMain.run: a failing resource sink is rethrown with a failing " +
+      "fact write suppressed, and every other branch still writes") {
+    import java.nio.file.{Files, Paths}
+    // fresh throwables per run: addSuppressed mutates the one rethrown
+    def failingResources(e: Throwable): ResourceSink = new ResourceSink {
+      def writeResources(routed: DataFrame): Unit = throw e
+      def reset(): Unit = ()
+    }
+    def factsRefusing(refused: String, e: Throwable, out: String): FactSink =
+      new FactSink {
+        private val parquet = new ParquetSink(out)
+        def writeFacts(table: String, facts: DataFrame): Unit =
+          if (table == refused) throw e else parquet.writeFacts(table, facts)
+        def clearFactTables(tables: Seq[String]): Unit = ()
+      }
+    val facts = Seq("synth_pop_facts", "synth_disease_facts",
+      "synth_condition_facts")
+
+    val both = Files.createTempDirectory("graft-fail-both").toString
+    val resourceFailure = new IllegalStateException("resource sink down")
+    val factFailure = new IllegalStateException("disease facts refused")
+    val thrown = intercept[IllegalStateException] {
+      FhirMain.run(spark, bundlesPath, both, None, None, "2020-01-01",
+        resourceSink = Some(failingResources(resourceFailure)),
+        factSink = Some(
+          factsRefusing("synth_disease_facts", factFailure, both)))
+    }
+    assert(thrown eq resourceFailure)
+    assert(thrown.getSuppressed.toSeq == Seq(factFailure))
+    assert(spark.read.parquet(s"$both/rawstat").count() == 6)
+    for (t <- facts)
+      assert(Files.exists(Paths.get(both, t)) == (t != "synth_disease_facts"),
+        t)
+
+    val alone = Files.createTempDirectory("graft-fail-res").toString
+    val onlyFailure = new IllegalStateException("resource sink down")
+    val thrownAlone = intercept[IllegalStateException] {
+      FhirMain.run(spark, bundlesPath, alone, None, None, "2020-01-01",
+        resourceSink = Some(failingResources(onlyFailure)))
+    }
+    assert((thrownAlone eq onlyFailure) && thrownAlone.getSuppressed.isEmpty)
+    assert(spark.read.parquet(s"$alone/rawstat").count() == 6)
+    for (t <- facts)
+      assert(Files.exists(Paths.get(alone, t)), t)
   }
 
   test("S7: the Mongo read schema matches the rawstat the pipeline builds") {

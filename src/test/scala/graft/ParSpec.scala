@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -40,5 +40,24 @@ class ParSpec extends AnyFunSuite {
     assert(thrown eq first)
     assert(thrown.getSuppressed.toSeq == Seq(second))
     assert(finished.get == 1, "the slow branch must finish before the throw")
+  }
+
+  test("Par.both returns each branch's result, runs the two branches " +
+      "concurrently, and fails like Par.all") {
+    val started = new CountDownLatch(2)
+    def meet(): Boolean = {
+      started.countDown()
+      started.await(5, TimeUnit.SECONDS)
+    }
+    val (a, b) = Par.both(() => (meet(), "left"), () => (meet(), 2))
+    assert(a == (true, "left") && b == (true, 2),
+      "each branch waits for the other to start, so both ran at once")
+
+    val left = new IllegalStateException("left")
+    val right = new IllegalArgumentException("right")
+    val thrown = intercept[IllegalStateException] {
+      Par.both(() => throw left, () => throw right)
+    }
+    assert((thrown eq left) && thrown.getSuppressed.toSeq == Seq(right))
   }
 }

@@ -182,6 +182,29 @@ class SinksSpec extends AnyFunSuite {
       new java.util.Properties).count() == 4)
   }
 
+  test("CopyFactSink: three concurrent fact writes bootstrap one fresh " +
+    "schema and land every row") {
+    // FhirMain.run writes the three fact tables at once, so each write's
+    // CREATE SCHEMA races the other two
+    val url = "jdbc:derby:memory:graftCopyConcurrent;create=true"
+    val sink = new CopyFactSink(url, Some("synth_par"),
+      new java.util.Properties, CopyFactSink.jdbcCopyIn)
+    val rows = Seq("pop_facts", "disease_facts", "condition_facts")
+      .zipWithIndex.map { case (t, i) =>
+        t -> (0 until 5 + i).map(k => (s"cs$k", i, k, 0, k))
+      }
+    graft.engine.Par.all(rows.map { case (t, rs) =>
+      val df = rs.map { case (cs, a, p, m, f) => (cs, a, p.toLong, m.toLong,
+        f.toLong) }.toDF("cs_fips", "age_id", "pop", "pop_male", "pop_female")
+      () => sink.writeFacts(t, df)
+    }: _*)
+    for ((t, want) <- rows) {
+      val got = spark.read.jdbc(url, s"synth_par.$t", new java.util.Properties)
+        .as[(String, Int, Int, Int, Int)].collect().toSeq.sorted
+      assert(got == want.sorted, t)
+    }
+  }
+
   test("COPY linesReader streams lazily — no eager drain of the iterator") {
     var pulled = 0
     val lines = Iterator.continually { pulled += 1; "x" * 10 }.take(1000)
