@@ -243,7 +243,7 @@ object AtRest {
       // corpus's. Fall back to computing inline (correct by definition,
       // touches no artifact) rather than retrying into a live writer.
       val onDisk =
-        try Some(spark.read.parquet(s"$path/$relName").head().getDouble(0))
+        try Some(Tables.parquet(spark, s"$path/$relName").head().getDouble(0))
         catch { case _: Exception => None }
       onDisk
         .filter(_ => readStamp(spark, path, metaName).contains(stamp))

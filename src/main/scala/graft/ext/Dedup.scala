@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Checkpoints.MaterializeOps
+import graft.engine.Tables
 import graft.ext.TextAnalysis._
 
 /** Deduplication operators for LLM training-data pipelines: exact
@@ -1192,7 +1193,7 @@ object Dedup {
             // the NEW pairs only, materialized BEFORE any append so the
             // at-rest prefix probe inside cannot see batch rows
             val newPairs = newDocPairs(baseDocs,
-              spark.read.parquet(s"$path/prefix"), sgBatch, batchPrefix,
+              Tables.parquet(spark, s"$path/prefix"), sgBatch, batchPrefix,
               n, threshold).materialized
             // base pairs snapshotted (materialized) BEFORE the appends
             // start — a lazy read racing a concurrent append could list
@@ -1238,7 +1239,7 @@ object Dedup {
     * [[writeDedupIndex]] build — a plain parquet scan, no recompute.
     */
   def readDedupPairs(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = spark.read.parquet(s"$path/pairs")
+      path: String): DataFrame = Tables.parquet(spark, s"$path/pairs")
 
   private val DedupLshMeta = "_graft_dedup_lsh_meta"
 
@@ -1400,7 +1401,7 @@ object Dedup {
             val internal = lshPairsFromBanded(sgBatch, batchKeys,
               threshold)
             // batch×base: band-key equi-join against the at-rest index
-            val baseKeys = spark.read.parquet(s"$path/bands")
+            val baseKeys = Tables.parquet(spark, s"$path/bands")
             val cand = batchKeys
               .select(col("band"), col("bkey"), col("doc_id").as("na"),
                 col("sz").as("sza"))
@@ -1460,7 +1461,7 @@ object Dedup {
     * (spec-asserted), but the expensive half is one parquet scan.
     */
   def readDedupClusters(docs: DataFrame, path: String): DataFrame = {
-    val labels = docs.sparkSession.read.parquet(s"$path/clusters")
+    val labels = Tables.parquet(docs.sparkSession, s"$path/clusters")
     docs.select(col("doc_id"))
       .join(labels.withColumnRenamed("cluster", "edge_cluster"),
         Seq("doc_id"), "left")
@@ -2577,7 +2578,7 @@ object Dedup {
           Some((unionStamp, () => {
             val batchChunks = cdcChunks(newDocs, p)
               .select(col("doc_id"), col("fp")).distinct().materialized
-            val all = spark.read.parquet(s"$path/chunks")
+            val all = Tables.parquet(spark, s"$path/chunks")
               .unionByName(batchChunks)
             // pairs overwrite first (it only READS chunks — untouched
             // at this point), then the batch rows append to the chunk
@@ -2597,7 +2598,7 @@ object Dedup {
 
   /** The at-rest containment pair relation of a [[writeCdcIndex]] dir. */
   def readCdcPairs(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = spark.read.parquet(s"$path/pairs")
+      path: String): DataFrame = Tables.parquet(spark, s"$path/pairs")
 
   private val DfMeta = "_graft_df_meta"
 
@@ -2672,7 +2673,7 @@ object Dedup {
     */
   def readShingleDf(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/df")
+    Tables.parquet(spark, s"$path/df")
       .groupBy(col("s")).agg(sum(col("f")).as("f"))
 
   /** Compact an at-rest [[writeShingleDfIndex]]: a long-lived streaming
@@ -2769,7 +2770,7 @@ object Dedup {
         .map(_.getLen).sum
       val nOut = math.max(1,
         math.ceil(bytes / (128.0 * 1024 * 1024)).toInt)
-      spark.read.parquet(dirStr).repartition(nOut)
+      Tables.parquet(spark, dirStr).repartition(nOut)
         .write.mode("overwrite").parquet(tmp.toString)
       if (!fs.rename(dirp, old))
         sys.error(s"compaction rename failed: $dirp -> $old")

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Tables
+
 /** End-to-end training-data pipeline CLI — the corpus-side counterpart of
   * `graft.fhir.FhirMain` (which drives the reference-parity ingest): one
   * invocation takes a raw documents+embeddings directory to training
@@ -36,7 +38,6 @@ object PipelineMain {
 
   def run(spark: SparkSession, inDir: String, outDir: String,
       scrubText: Boolean, semDedup: Boolean): (Long, Long) = {
-    import graft.engine.Tables
     runFrames(spark, Tables.load(spark, inDir, "documents"),
       Tables.load(spark, inDir, "embeddings"), outDir, scrubText, semDedup)
   }
@@ -114,7 +115,7 @@ object PipelineMain {
       .parquet(s"$outDir/shards")
     // the manifest aggregates the WRITTEN shards, not the pre-write
     // plan, so it documents what is actually on disk
-    val written = spark.read.parquet(s"$outDir/shards")
+    val written = Tables.parquet(spark, s"$outDir/shards")
     Export.shardManifest(written)
       .write.mode("overwrite").parquet(s"$outDir/manifest")
     // optional post-export planning artifacts, both computed from the
@@ -159,7 +160,6 @@ object PipelineMain {
     graft.engine.GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
-    import graft.engine.Tables
     val (kept, total) = runFrames(spark,
       Tables.load(spark, inDir, "documents"),
       Tables.load(spark, inDir, "embeddings"), outDir,

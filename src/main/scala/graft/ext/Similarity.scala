@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Checkpoints.MaterializeOps
+import graft.engine.Tables
 
 /** Training + assignment profile for the at-rest index builders
   * ([[Similarity.writeKnnIndex]] / [[Similarity.writeIvfIndex]] and their
@@ -767,7 +768,7 @@ object Similarity {
         if (stamp.startsWith(basePrefix))
           Some((unionCorpus + "|model=" + stamp.substring(basePrefix.length),
             () => {
-              val cents = spark.read.parquet(s"$path/_centroids")
+              val cents = Tables.parquet(spark, s"$path/_centroids")
               // the exact row shape writeIvfIndex persists: (cid, ce,
               // cn) under the cell= partition column, assigned through
               // the SAME per-vector route as the seed (profile seam)
@@ -822,7 +823,7 @@ object Similarity {
       val staged = new org.apache.hadoop.fs.Path(rootDir + "__compact_tmp")
       fs.delete(staged, true)
       val cells = over.map(_.getName.stripPrefix("cell=").toLong)
-      val df = spark.read.parquet(rootDir)
+      val df = Tables.parquet(spark, rootDir)
         .filter(col("cell").isin(cells: _*))
       // repartition by cell ⇒ one task per cell ⇒ exactly one file per
       // compacted cell dir; partition pruning keeps the read to the
@@ -1049,7 +1050,7 @@ object Similarity {
           // the probed-cell collect class (dim-table scale)
           val touched = assignedBatch.select(col("cell")).distinct()
             .as[Long].collect().sorted
-          val baseMembers = spark.read.parquet(s"$path/cells")
+          val baseMembers = Tables.parquet(spark, s"$path/cells")
             .filter(col("cell").isin(touched: _*))
             .select(col("cid"), col("embedding").as("ce"),
               norm(col("embedding")).as("cn"),
@@ -1091,7 +1092,7 @@ object Similarity {
     */
   def readKnnEdges(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/edges")
+    Tables.parquet(spark, s"$path/edges")
       .select(col("cid"), col("cell").cast("long").as("cell"),
         col("nid"), col("cos"))
 
@@ -1101,7 +1102,7 @@ object Similarity {
     * (the cross-JVM face of the session centroid memo).
     */
   def readKnnCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = spark.read.parquet(s"$path/_centroids")
+      path: String): DataFrame = Tables.parquet(spark, s"$path/_centroids")
 
   /** Probe a [[writeIvfIndex]] table. The probed cell ids are collected
     * to literals — nprobe × |query batch| longs, the same bounded driver
@@ -1114,7 +1115,7 @@ object Similarity {
       nprobe: Int = 0, probeFrac: Double = probeFracDefault): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val centDf = spark.read.parquet(s"$indexPath/_centroids")
+    val centDf = Tables.parquet(spark, s"$indexPath/_centroids")
     val cent = centroidRelation(centDf)
     // nprobe ≤ 0 (the default) = ADAPTIVE: probe width derived from the
     // at-rest index's own cell count via [[adaptiveNprobe]], holding
@@ -1129,7 +1130,7 @@ object Similarity {
     // the scoring join's broadcast side
     val q = probeCells(queries, cent, np).materialized
     val cells = q.select(col("cell")).distinct().as[Long].collect().sorted
-    val idx = spark.read.parquet(indexPath)
+    val idx = Tables.parquet(spark, indexPath)
       .filter(col("cell").isin(cells.toIndexedSeq: _*))
       .select(col("cid"), col("ce"), col("cn"),
         col("cell").cast("long").as("cell"))
@@ -1169,11 +1170,11 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val cent = centroidRelation(
-      spark.read.parquet(s"$indexPath/_centroids"))
+      Tables.parquet(spark, s"$indexPath/_centroids"))
     // per-cell loads: reads ONLY the `cell` partition column —
     // footer/metadata-bound at any index size (ivfCellLoadStats'
     // property), k rows out
-    val loads = spark.read.parquet(indexPath)
+    val loads = Tables.parquet(spark, indexPath)
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("mass"))
     val total = loads.agg(sum(col("mass"))).as[Long].head()
@@ -1181,7 +1182,7 @@ object Similarity {
     val q = massProbeCells(queries, cent, loads, target, floor)
       .materialized
     val cells = q.select(col("cell")).distinct().as[Long].collect().sorted
-    val idx = spark.read.parquet(indexPath)
+    val idx = Tables.parquet(spark, indexPath)
       .filter(col("cell").isin(cells.toIndexedSeq: _*))
       .select(col("cid"), col("ce"), col("cn"),
         col("cell").cast("long").as("cell"))
@@ -1230,7 +1231,7 @@ object Similarity {
     */
   def ivfCellLoadStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val loads = spark.read.parquet(path).groupBy(col("cell"))
+    val loads = Tables.parquet(spark, path).groupBy(col("cell"))
       .agg(count(lit(1)).as("c"))
     loads.agg(
       count(lit(1)).cast("integer").as("n_cells"),

@@ -3,7 +3,7 @@ package graft.fhir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{GraftSession, Par}
+import graft.engine.{GraftSession, Par, Tables}
 
 /** CLI entry point mirroring the reference's flag surface (main.go:29-39):
   *
@@ -165,7 +165,7 @@ object FhirMain {
     def readDim(spec: String): DataFrame = spec.split("#", 2) match {
       case Array(url, table) if url.startsWith("jdbc:") =>
         spark.read.jdbc(url, table, new java.util.Properties)
-      case _ => spark.read.parquet(spec)
+      case _ => Tables.parquet(spark, spec)
     }
     def dims(): (DataFrame, DataFrame) = (
       RawStats.loadCousubDim(cousubPath
@@ -179,20 +179,17 @@ object FhirMain {
 
     val t0 = System.nanoTime()
     def writeResources(bundles: DataFrame): Unit = {
-      // persisted: MongoResourceSink runs one distinct + one filtered write
-      // per collection, and -debug adds a count — without the cache the
-      // explode + reference-rewrite lineage recomputes N+1 times
-      val routed = BundleIngest.routeResources(bundles).persist()
-      try {
-        resSink.writeResources(routed)
-        // -debug: per-collection routing counts (reference main.go:295-299
-        // prints per-bundle diagnostics behind the same flag)
-        if (debug)
-          routed.groupBy("collection").count().orderBy("collection")
-            .collect().foreach { r =>
-              println(s"[debug] ${r.getString(0)}: ${r.getLong(1)} resources")
-            }
-      } finally routed.unpersist()
+      // not cached: `bundles` is, the parquet sink reads `routed` once, and
+      // a sink that reads it more often caches it (MongoResourceSink)
+      val routed = BundleIngest.routeResources(bundles)
+      resSink.writeResources(routed)
+      // -debug: per-collection routing counts (reference main.go:295-299
+      // prints per-bundle diagnostics behind the same flag)
+      if (debug)
+        routed.groupBy("collection").count().orderBy("collection")
+          .collect().foreach { r =>
+            println(s"[debug] ${r.getString(0)}: ${r.getLong(1)} resources")
+          }
     }
 
     def stats(bundles: DataFrame, nBundles: Long, cousubDim: DataFrame,
@@ -222,9 +219,10 @@ object FhirMain {
         job("synth_condition_facts", FactJobs.conditionFacts))
     }
 
-    // phase 1: the dim reads (a footer job each from parquet) and the
-    // bundle plan (file listing, schema resolution and the rewrite's
-    // expression tree, mostly driver work) need nothing from each other.
+    // phase 1: the dim reads (a listing and a footer read each from
+    // parquet) and the bundle plan (file listing, schema resolution and the
+    // rewrite's expression tree, mostly driver work) need nothing from each
+    // other.
     // Caching starts after both, so a failed dim read leaves no cached
     // plan behind.
     val ((cousubDim, diseaseDim), scan) = Par.both(() => dims(),

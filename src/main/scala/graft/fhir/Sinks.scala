@@ -6,6 +6,8 @@ import java.util.Properties
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import graft.engine.Tables
+
 /** Sink/reset abstraction for the reference's external surfaces
   * (SURVEY §2.1 S5–S10): resources go to one collection per type, facts to
   * three relational tables, with truncate/drop reset ops. Tests run
@@ -51,13 +53,17 @@ trait RawstatStore {
 }
 
 /** Default store: a parquet table in the warehouse dir (the engine's
-  * local materialized-view shape).
+  * local materialized-view shape). The read-back takes its schema from the
+  * table's footer on the driver ([[graft.engine.Tables.parquet]]), so the
+  * three rollups plan without waiting on a schema-inference job, as
+  * [[MongoRawstatStore]] skips the connector's sampling pass by supplying
+  * its schema.
   */
 class ParquetRawstatStore(warehouseDir: String) extends RawstatStore {
   def write(rawstat: DataFrame): Unit =
     rawstat.write.mode("overwrite").parquet(s"$warehouseDir/rawstat")
   def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.read.parquet(s"$warehouseDir/rawstat")
+    Tables.parquet(spark, s"$warehouseDir/rawstat")
 }
 
 /** S6+S7 in their reference form: rawstat lives in a Mongo collection.
@@ -166,24 +172,27 @@ class MongoResourceSink(uri: String, database: String) extends ResourceSink {
     // — including fallback lower(type)+"s" names for resource types outside
     // the fixed 11 — so the collection list comes from the data, not from
     // Schemas.collections. The distinct is over collection *names* (bounded
-    // by the number of resource types, dozens at most), not rows. Callers
-    // pass a cached `routed` (FhirMain persists it) so the ingest lineage
-    // is not recomputed once per collection.
-    val colls = routed.select(col("collection")).distinct()
-      .collect().map(_.getString(0)).sorted
-    colls.foreach { coll =>
-      val mode =
-        if (dropPending && !overwritten.contains(coll)) "overwrite"
-        else "append"
-      writeCollection(
-        routed.filter(col("collection") === coll).select(col("resource.*")),
-        coll, mode)
-    }
-    // marked only after every collection in THIS call wrote: a mid-loop
-    // failure marks nothing, so a retried writeResources overwrites the
-    // whole call's collections again instead of appending duplicates into
-    // the ones that succeeded
-    if (dropPending) overwritten ++= colls
+    // by the number of resource types, dozens at most), not rows. `routed`
+    // is cached for the call, so the explode + reference-rewrite lineage
+    // runs once, not once per collection plus once for the distinct.
+    routed.persist()
+    try {
+      val colls = routed.select(col("collection")).distinct()
+        .collect().map(_.getString(0)).sorted
+      colls.foreach { coll =>
+        val mode =
+          if (dropPending && !overwritten.contains(coll)) "overwrite"
+          else "append"
+        writeCollection(
+          routed.filter(col("collection") === coll).select(col("resource.*")),
+          coll, mode)
+      }
+      // marked only after every collection in THIS call wrote: a mid-loop
+      // failure marks nothing, so a retried writeResources overwrites the
+      // whole call's collections again instead of appending duplicates into
+      // the ones that succeeded
+      if (dropPending) overwritten ++= colls
+    } finally routed.unpersist()
   }
 
   /** The one connector touchpoint — the mode/bookkeeping logic above is

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.engine.Tables
 import graft.fhir.{BundleIngest, Schemas}
 
 /** Structured-Streaming variants (SURVEY §7.4-7 — extension; the reference
@@ -73,15 +74,15 @@ object Streams {
   /** The testdata `events` parquet as a file-source stream. A streaming
     * schema must be explicit, so probe the batch footer for the on-disk `ts`
     * type (nanos-as-long vs TIMESTAMP_NTZ — the generator has produced both)
-    * and apply the same normalization as [[graft.engine.Tables]].
+    * and apply the same normalization as [[Tables]].
     */
   def eventsStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     // file-source streaming needs a directory; point at the sf dir and
     // glob-filter down to the events file(s)
-    graft.engine.Tables.normalizeEventTs(
+    Tables.normalizeEventTs(
       spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
@@ -363,7 +364,7 @@ object Streams {
     * ([[graft.ext.Dedup.extendDedupIndexLsh]] — banded-key probe, work
     * ∝ the batch). The driver tracks the LANDED DIRECTORY LIST, not a
     * chained-union DataFrame: base is one flat
-    * `spark.read.parquet(dirs: _*)` scan each batch, so the analyzed
+    * `Tables.parquet(spark, dirs: _*)` scan each batch, so the analyzed
     * plan the stamp hashes stays constant-depth at any stream lifetime
     * (a per-batch `base.union(landed)` chain made stamp analysis — and
     * analyzer memory — grow linearly in batch count), and the
@@ -514,7 +515,7 @@ object Streams {
     * [[graft.ext.Similarity.extendKnnIndex]] — the batch assigned
     * against the FROZEN base centroids, only touched cells' edges
     * recomputed, so per-batch work is ∝ batch + touched-cell mass,
-    * never a re-train. Base is a flat `spark.read.parquet(dirs: _*)`
+    * never a re-train. Base is a flat `Tables.parquet(spark, dirs: _*)`
     * each batch with the flat union passed as `unionView`, so stamps
     * stay constant-depth and keep matching across any stream lifetime.
     * Model refresh stays an OFFLINE decision (an ensure over the union
@@ -867,9 +868,9 @@ object Streams {
           var covered = job.snapshot
           catchUp.foreach { d =>
             graft.ext.Similarity.extendIvfIndex(
-              spark.read.parquet(covered: _*), spark.read.parquet(d),
+              Tables.parquet(spark, covered: _*), Tables.parquet(spark, d),
               job.sidePath, nCentroids, iters,
-              unionView = Some(spark.read.parquet((covered :+ d): _*)),
+              unionView = Some(Tables.parquet(spark, (covered :+ d): _*)),
               profile = profile)
             covered = covered :+ d
           }
@@ -1092,10 +1093,10 @@ object Streams {
     val base = landed.filterNot(_ == newQ)
     def step(): Unit = {
       if (base.isEmpty)
-        ensure(spark.read.parquet(landed: _*))
+        ensure(Tables.parquet(spark, landed: _*))
       else
-        extend(spark.read.parquet(base: _*), spark.read.parquet(newQ),
-          Some(spark.read.parquet(landed: _*)))
+        extend(Tables.parquet(spark, base: _*), Tables.parquet(spark, newQ),
+          Some(Tables.parquet(spark, landed: _*)))
       ()
     }
     @annotation.tailrec
@@ -1134,7 +1135,7 @@ object Streams {
     * the index stamps can fingerprint them), then run one
     * [[indexMaintenanceBatch]] step, threading the landed-dir list
     * through the closure so every batch's base is one flat
-    * constant-depth `read.parquet(dirs: _*)` plan.
+    * constant-depth `Tables.parquet(spark, dirs: _*)` plan.
     */
   private def indexMaintenanceStream(src: DataFrame, corpusDir: String,
       checkpoint: String, ensure: DataFrame => Boolean,
@@ -1641,14 +1642,14 @@ object Streams {
           .filter(_.getPath.getName.endsWith(".parquet"))
           .map(_.getLen).sum
       }.sum
-      spark.read.parquet(src: _*)
+      Tables.parquet(spark, src: _*)
         .repartition(math.max(1,
           math.ceil(bytes.toDouble / targetBytes).toInt))
         .write.mode("overwrite").parquet(newPath.toString)
       val newLanded = (if (foldAll) Vector.empty[String] else cdirs) :+
         fs.makeQualified(newPath).toString
-      val moved = restamp(spark.read.parquet(landed: _*),
-        spark.read.parquet(newLanded: _*))
+      val moved = restamp(Tables.parquet(spark, landed: _*),
+        Tables.parquet(spark, newLanded: _*))
       if (!moved) {
         // foreign/absent stamp (an offline writer intervened): abort —
         // the invisible c dir goes away and the layout stays as-is

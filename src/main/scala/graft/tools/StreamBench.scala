@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Tables
+
 /** Structured-streaming throughput micro-bench (BASELINE.md's streaming
   * row): a rate source deliberately over-provisioned past pipeline
   * capacity drives (a) the watermarked tumbling-window aggregation
@@ -83,7 +85,7 @@ object StreamBench {
     // stream-static join + windowed bounded-heap top-k
     val corpusDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val corpus = spark.read.parquet(s"$corpusDir/embeddings.parquet")
+    val corpus = Tables.parquet(spark, s"$corpusDir/embeddings.parquet")
     // per-query work here is orders of magnitude above the row-shaped
     // pipelines above (64-float synth + bucket probe + ranked join), so
     // the ANN stream gets its own offered rate — still over-provisioned
