@@ -1,6 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
+import org.apache.spark.sql.functions.col
 
 /** Fingerprint-stamped build-or-reuse for artifacts AT REST — the seam
   * behind `Similarity.ensureIvfIndex` and `Dedup.ensureDedupIndex`.
@@ -37,14 +42,6 @@ object AtRest {
   final class ConcurrentWriterException(msg: String)
     extends IllegalStateException(msg)
 
-  /** Run `build` only when the sidecar `path/metaName` is absent or its
-    * content differs from `stamp` (or `force`). `force` is the
-    * out-of-band-mutation hatch: data fingerprints typically see only
-    * file (path, length, mtime), so a rewrite preserving sizes within
-    * mtime granularity — or an object-store restore preserving mtimes —
-    * needs an explicit rebuild lever. Returns true when a (re)build
-    * happened.
-    */
   /** The sidecar's current stamp, if a well-formed one exists — the
     * read half of [[ensureStamped]], exposed so incremental extenders
     * (e.g. `Dedup.extendDedupIndex`) can distinguish "artifact matches
@@ -87,8 +84,8 @@ object AtRest {
 
   /** The shared INCREMENTAL-EXTENSION protocol over a stamped artifact
     * — the one place the stamp/crash/drift discipline lives, so the
-    * four at-rest families (exact dedup pairs, LSH dedup keys, kNN
-    * edges+centroids, IVF corpus) cannot drift apart:
+    * six at-rest families ([[extend]] drives all of them) cannot drift
+    * apart:
     *
     *  1. if the current stamp already `coversUnion` → no-op (false);
     *  2. else if `extendFrom(currentStamp)` recognizes the artifact as
@@ -107,8 +104,8 @@ object AtRest {
     * covered, so base-side probe work (e.g. a sampled banding decision)
     * stays off the no-op path. Returns true when any build ran.
     */
-  def extendStamped(spark: SparkSession, path: String, metaName: String,
-      coversUnion: String => Boolean,
+  private[graft] def extendStamped(spark: SparkSession, path: String,
+      metaName: String, coversUnion: String => Boolean,
       extendFrom: String => Option[(String, () => Unit)])(
       rebuild: => Boolean): Boolean = {
     // lock-free no-op fast path: readers of a covered artifact never
@@ -136,6 +133,14 @@ object AtRest {
     }
   }
 
+  /** Run `build` only when the sidecar `path/metaName` is absent or its
+    * content differs from `stamp` (or `force`). `force` is the
+    * out-of-band-mutation hatch: data fingerprints typically see only
+    * file (path, length, mtime), so a rewrite preserving sizes within
+    * mtime granularity — or an object-store restore preserving mtimes —
+    * needs an explicit rebuild lever. Returns true when a (re)build
+    * happened.
+    */
   def ensureStamped(spark: SparkSession, path: String, metaName: String,
       stamp: String, force: Boolean)(build: => Unit): Boolean = {
     val metaPath = new org.apache.hadoop.fs.Path(path, metaName)
@@ -174,8 +179,8 @@ object AtRest {
     * leaves everything untouched. Returns true only when a new stamp
     * was written.
     */
-  def restampIf(spark: SparkSession, path: String, metaName: String)(
-      rewrite: String => Option[String]): Boolean =
+  private[graft] def restampIf(spark: SparkSession, path: String,
+      metaName: String)(rewrite: String => Option[String]): Boolean =
     readStamp(spark, path, metaName).nonEmpty &&
       withMutationLease(spark, path, metaName) {
         readStamp(spark, path, metaName).flatMap(rewrite) match {
@@ -194,7 +199,7 @@ object AtRest {
     * caller's mutation must leave the logical content unchanged (the
     * stamp is the same corpus's). Returns true when the mutation ran.
     */
-  def compactStamped(spark: SparkSession, path: String,
+  private[graft] def compactStamped(spark: SparkSession, path: String,
       metaName: String)(mutate: => Unit): Boolean =
     readStamp(spark, path, metaName) match {
       case None => false
@@ -210,6 +215,258 @@ object AtRest {
             }
         }
       }
+    }
+
+  /** One at-rest index family, declared once as a value. The six
+    * families (in `Dedup`: exact pairs, LSH keys, CDC chunks, the
+    * shingle-df sidecar; in `Similarity`: IVF and kNN) are each a
+    * `Family` built from their hyperparameters, and [[ensure]],
+    * [[extend]], [[compact]], [[restamp]] and [[read]] run the one
+    * lifecycle for all of them.
+    *
+    * A family names its on-disk [[Layout]], its stamp (`key`, plus the
+    * optional `model` term), its full build, and its `delta` (the
+    * in-place mutation that folds a new batch into an index stamped for
+    * the base). `P` is the per-corpus parameter the stamp carries; it is
+    * resolved once per call from the corpus being built or from the
+    * union being extended to, and handed to the key, the build and the
+    * delta.
+    *
+    * The stamp rules, which decide whether an extension may run:
+    *
+    * Exact match (`model = None`). The stamp is `key(corpus, p)`. An
+    * index covers the union when its stamp equals the union's key, and
+    * an extension runs when it equals the base's key. Anything else
+    * rebuilds the union from scratch.
+    *
+    * Banding carried in the stamp (LSH keys, `P` = (numHashes, bands)).
+    * The banding is part of the key and is resolved from the UNION, so
+    * the base's key is computed under the union's banding too. A base
+    * stamp written under other banding then fails the exact match, and
+    * the index rebuilds instead of probing batch keys against base keys
+    * hashed under another banding.
+    *
+    * Frozen `|model=` term (IVF, kNN). The stamp is
+    * `key(corpus) + "|model=" + model(corpus)`, the model naming the
+    * corpus the centroids were trained on. An extension keeps the
+    * model: it runs when the stamp starts with the base's
+    * `key + "|model="` and writes the union's key with the base
+    * stamp's model term carried over verbatim. An [[ensure]] over the
+    * extended union sees its own model term differ and re-trains.
+    */
+  final case class Family[P](
+      layout: Layout,
+      params: DataFrame => P,
+      key: (DataFrame, P) => String,
+      model: Option[DataFrame => String],
+      build: (DataFrame, String, P) => Unit,
+      delta: (DataFrame, DataFrame, String, P) => Unit) {
+
+    private[AtRest] def stamp(corpus: DataFrame, p: P): String =
+      key(corpus, p) + model.fold("")(m => ModelTerm + m(corpus))
+
+    /** What follows key `k` in `stamp` when `stamp` belongs to the
+      * corpus keyed `k`: "" under exact match, the frozen model term
+      * under the model rule; None otherwise.
+      */
+    private[AtRest] def tail(stamp: String, k: String): Option[String] =
+      if (model.isEmpty) Option.when(stamp == k)("")
+      else Option.when(stamp.startsWith(k + ModelTerm))(
+        stamp.substring(k.length))
+  }
+
+  private val ModelTerm = "|model="
+
+  /** A family's index as it sits on disk, whatever its hyperparameters:
+    * the stamp sidecar `meta` and the `accreting` relations its deltas
+    * append to. [[compact]] and [[restamp]] need nothing else.
+    */
+  final case class Layout(meta: String, accreting: Seq[Accreting])
+
+  /** A relation under an index dir that extensions APPEND to, so a
+    * long-lived index accretes one file set per batch. `rel` is the
+    * subdirectory ("" for the index root); `cells` marks a
+    * `cell=`-partitioned relation, compacted cell by cell; `merge`, when
+    * set, folds the shards into one relation (the df sidecar's sum) in
+    * place of a plain re-bucketing.
+    */
+  final case class Accreting(rel: String, cells: Boolean = false,
+      merge: Option[DataFrame => DataFrame] = None)
+
+  /** Build `corpus`'s index at `path` unless its stamp already matches
+    * (or `force`). Returns true when a (re)build happened.
+    */
+  def ensure[P](f: Family[P], corpus: DataFrame, path: String,
+      force: Boolean): Boolean = {
+    val p = f.params(corpus)
+    ensureStamped(corpus.sparkSession, path, f.layout.meta,
+      f.stamp(corpus, p), force)(f.build(corpus, path, p))
+  }
+
+  /** Fold `batch` into the index of `base` at `path` through
+    * [[extendStamped]]: a no-op when the stamp covers the union, the
+    * family's delta when it is the base's under the family's stamp rule,
+    * and a full build of the union otherwise. `unionView` is the
+    * caller's canonical plan of base ∪ batch (a flat multi-dir read),
+    * whose stamp the next extension's base then matches; rows must equal
+    * base ∪ batch. Returns true when any build ran.
+    */
+  def extend[P](f: Family[P], base: DataFrame, batch: DataFrame,
+      path: String, unionView: Option[DataFrame]): Boolean = {
+    val spark = base.sparkSession
+    val union = unionView.getOrElse(base.union(batch))
+    val p = f.params(union)
+    val unionKey = f.key(union, p)
+    extendStamped(spark, path, f.layout.meta,
+      coversUnion = f.tail(_, unionKey).isDefined,
+      extendFrom = s => f.tail(s, f.key(base, p)).map(t =>
+        (unionKey + t, () => f.delta(base, batch, path, p)))) {
+      ensureStamped(spark, path, f.layout.meta, f.stamp(union, p),
+        force = true)(f.build(union, path, p))
+    }
+  }
+
+  /** Compact the layout's accreting relations that hold more than
+    * `budget` parquet files (per `cell=` dir for a cell relation; budget
+    * 0 compacts every non-empty one). Lock-free no-op, stamp untouched,
+    * when none is over budget; otherwise the rewrite runs in
+    * [[compactStamped]]'s window: rows unchanged, each relation swapped
+    * in by [[swapDir]]. Returns true when a compaction ran.
+    */
+  def compact(l: Layout, spark: SparkSession, path: String,
+      budget: Int): Boolean = {
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    def over(a: Accreting): Seq[Path] = {
+      val dir = relDir(path, a.rel)
+      val dirs =
+        if (!a.cells) Seq(dir)
+        else children(fs, dir)
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
+          .map(_.getPath)
+      dirs.filter(parquetFiles(fs, _).size > budget)
+    }
+    l.accreting.exists(over(_).nonEmpty) &&
+      compactStamped(spark, path, l.meta) {
+        l.accreting.foreach { a =>
+          val dirs = over(a)
+          if (dirs.nonEmpty)
+            if (a.cells) compactCells(spark, fs, relDir(path, a.rel), dirs)
+            else compactFlat(spark, fs, dirs.head, a.merge)
+        }
+      }
+  }
+
+  /** Move the index's stamp to a rewritten one with the artifact
+    * untouched (a landed-corpus consolidation: same rows, new read
+    * plan). `rewrite` returning None leaves everything as is. Returns
+    * true only when a new stamp was written.
+    */
+  def restamp(l: Layout, spark: SparkSession, path: String)(
+      rewrite: String => Option[String]): Boolean =
+    restampIf(spark, path, l.meta)(rewrite)
+
+  /** The relation `rel` of the index at `path` ("" for the root). A
+    * hidden-named relation (`_centroids`, kept out of reads of the root
+    * by its name) is read through its data files, so the read neither
+    * hands Spark a root path its file index ignores nor logs
+    * "All paths were ignored".
+    */
+  def read(spark: SparkSession, path: String, rel: String): DataFrame = {
+    val dir = relDir(path, rel)
+    if (!FooterBridge.hidden(dir.getName)) Tables.parquet(spark, dir.toString)
+    else {
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      val files = children(fs, dir)
+        .filter(s => s.isFile && !FooterBridge.hidden(s.getPath.getName))
+        .map(_.getPath.toString).sorted
+      Tables.parquet(spark, (if (files.isEmpty) Seq(dir.toString)
+        else files): _*)
+    }
+  }
+
+  private def relDir(path: String, rel: String): Path =
+    if (rel.isEmpty) new Path(path) else new Path(path, rel)
+
+  /** The entries of `dir`; none when it is absent. */
+  private def children(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: FileNotFoundException => Nil }
+
+  /** The parquet files directly under `dir`. */
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    children(fs, dir).filter(_.getPath.getName.endsWith(".parquet"))
+
+  /** Rewrite one flat relation through `dir_compact_tmp`: merged when
+    * the relation has a `merge`, else re-bucketed to ⌈bytes / 128 MB⌉
+    * files with rows unchanged.
+    */
+  private def compactFlat(spark: SparkSession, fs: FileSystem, dir: Path,
+      merge: Option[DataFrame => DataFrame]): Unit = {
+    val staged = new Path(dir.toString + "_compact_tmp")
+    val retired = new Path(dir.toString + "_compact_old")
+    // reclaim any orphan of an earlier crashed compaction
+    fs.delete(staged, true)
+    fs.delete(retired, true)
+    swapDir(fs, dir, staged, retired) {
+      val rows = Tables.parquet(spark, dir.toString)
+      (merge match {
+        case Some(m) => m(rows)
+        case None =>
+          val bytes = parquetFiles(fs, dir).map(_.getLen).sum
+          rows.repartition(math.max(1,
+            math.ceil(bytes / (128.0 * 1024 * 1024)).toInt))
+      }).write.mode("overwrite").parquet(staged.toString)
+    }
+  }
+
+  /** Rewrite ONLY the over-budget `cell=` dirs of a cell relation to
+    * one file per cell: one repartition-by-cell job for all of them into
+    * a SIBLING staging root (partition discovery of `root` never sees
+    * it), then a [[swapDir]] per cell. Untouched cells are never read
+    * and stay byte-identical.
+    */
+  private def compactCells(spark: SparkSession, fs: FileSystem, root: Path,
+      over: Seq[Path]): Unit = {
+    val staged = new Path(root.toString + "__compact_tmp")
+    fs.delete(staged, true)
+    try {
+      val cells = over.map(_.getName.stripPrefix("cell=").toLong)
+      val df = Tables.parquet(spark, root.toString)
+        .filter(col("cell").isin(cells: _*))
+      // repartition by cell ⇒ one task, hence one file, per cell
+      df.select(df.columns.filterNot(_ == "cell").map(col) :+
+          col("cell"): _*)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(staged.toString)
+      over.foreach { live =>
+        swapDir(fs, live, new Path(staged, live.getName),
+          new Path(staged, live.getName + ".old"))(())
+      }
+    } finally fs.delete(staged, true)
+  }
+
+  /** The one directory swap of every compaction: run `stage` (which
+    * writes the replacement to `staged`), then `live` → `retired` and
+    * `staged` → `live` — two renames, not delete-then-rename, so the
+    * window in which `live` is absent is one metadata op wide and the
+    * old file set is removed only AFTER the new one serves. The old and
+    * new sets never coexist under `live`: a reader that planned its scan
+    * against the old set completes on it or fails on the vanished paths
+    * (retry), never a mixed read. A failure between the renames restores
+    * the old set; the caller's stampless window covers anything worse.
+    */
+  private def swapDir(fs: FileSystem, live: Path, staged: Path,
+      retired: Path)(stage: => Unit): Unit =
+    try {
+      stage
+      if (!fs.rename(live, retired))
+        sys.error(s"compaction rename failed: $live -> $retired")
+      if (!fs.rename(staged, live))
+        sys.error(s"compaction rename failed: $staged -> $live")
+    } finally {
+      if (!fs.exists(live) && fs.exists(retired)) fs.rename(retired, live)
+      fs.delete(staged, true)
+      if (fs.exists(live)) fs.delete(retired, true)
     }
 
   /** A memoized SCALAR decision statistic at rest — the

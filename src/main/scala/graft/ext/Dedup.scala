@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.engine.AtRest
 import graft.engine.Checkpoints.MaterializeOps
-import graft.engine.Tables
 import graft.ext.TextAnalysis._
 
 /** Deduplication operators for LLM training-data pipelines: exact
@@ -789,24 +789,35 @@ object Dedup {
     // branches would otherwise each re-evaluate the (expensive)
     // pair-generation lineage — measured 2× the whole LSH pipeline
     val p = pairs.select(col("da"), col("db")).materialized
-    // mirrored edges, materialized so every iteration re-reads a flat
-    // cached relation instead of re-running the union over p
-    val edges = p.toDF("src", "dst")
-      .union(p.select(col("db"), col("da")).toDF("src", "dst"))
-      .materialized
     // propagate over edge-touched nodes ONLY: a node with no edge never
     // changes label, so singletons (the overwhelming majority of a real
     // corpus — near-dup graphs are sparse) stay out of every iteration's
     // join + aggregate and re-enter once at the end via coalesce. The
     // iterating relation is O(|edge endpoints|), not O(corpus). Init =
     // round one: label(v) = min(v, neighbors(v)) via one groupBy.
-    val (labels, _) = ccMinLabelLoop(edges, maxIters)
+    labelCorpus(docs, ccMinLabelLoop(symmetricEdges(p), maxIters)._1)
+  }
+
+  /** The mirrored (src, dst) edge relation of a (da, db) pair relation,
+    * materialized so every CC iteration re-reads a flat cached relation
+    * instead of re-running the union over the pairs.
+    */
+  private def symmetricEdges(pairs: DataFrame): DataFrame = {
+    val p = pairs.select(col("da"), col("db"))
+    p.toDF("src", "dst")
+      .union(p.select(col("db"), col("da")).toDF("src", "dst"))
+      .materialized
+  }
+
+  /** Every corpus doc with its component label: the edge-touched
+    * `labels` joined back, singletons labelled by their own doc_id.
+    */
+  private def labelCorpus(docs: DataFrame, labels: DataFrame): DataFrame =
     docs.select(col("doc_id"))
       .join(labels.withColumnRenamed("cluster", "edge_cluster"),
         Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("edge_cluster"), col("doc_id")).as("cluster"))
-  }
 
   /** The near-dup clusters APPLIED: the surviving corpus after fuzzy
     * dedup — the x50 rewrite's fuzzy analog, and the final step of the
@@ -905,19 +916,10 @@ object Dedup {
       probeRounds: Int = 5, maxRounds: Int = 30): DataFrame = {
     require(probeRounds >= 1, s"probeRounds must be >= 1: $probeRounds")
     val p = pairs.select(col("da"), col("db")).materialized
-    val edges = p.toDF("src", "dst")
-      .union(p.select(col("db"), col("da")).toDF("src", "dst"))
-      .materialized
     val (probeLabels, _, converged) =
-      ccMinLabelLoopBounded(edges, probeRounds)
-    val labels =
-      if (converged) probeLabels
-      else ccAlternatingLoop(p, maxRounds)._1
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("cluster", "edge_cluster"),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("edge_cluster"), col("doc_id")).as("cluster"))
+      ccMinLabelLoopBounded(symmetricEdges(p), probeRounds)
+    labelCorpus(docs,
+      if (converged) probeLabels else ccAlternatingLoop(p, maxRounds)._1)
   }
 
   /** Session-lifetime memo of the expensive near-dup ARTIFACTS — the
@@ -989,19 +991,10 @@ object Dedup {
   def cachedClusters(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
       maxIters: Int = 50): DataFrame = {
     val pairs = cachedPairs(docs, n, threshold)
-    val labels =
+    labelCorpus(docs,
       memoized(artifactKey(docs, s"ccLabels:$n:$threshold:$maxIters")) {
-        val p = pairs.select(col("da"), col("db"))
-        val edges = p.toDF("src", "dst")
-          .union(p.select(col("db"), col("da")).toDF("src", "dst"))
-          .materialized
-        ccMinLabelLoop(edges, maxIters)._1
-      }
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("cluster", "edge_cluster"),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("edge_cluster"), col("doc_id")).as("cluster"))
+        ccMinLabelLoop(symmetricEdges(pairs), maxIters)._1
+      })
   }
 
   /** The near-dup artifacts AT REST: the verified pair relation
@@ -1036,19 +1029,20 @@ object Dedup {
       () => pairs.write.mode("overwrite").parquet(s"$path/pairs"),
       () => prefixIndexRows(sg, threshold)
         .write.mode("overwrite").parquet(s"$path/prefix"),
-      () => {
-        val p = pairs.select(col("da"), col("db"))
-        val edges = p.toDF("src", "dst")
-          .union(p.select(col("db"), col("da")).toDF("src", "dst"))
-          .materialized
-        ccMinLabelLoop(edges, maxIters)._1
-          .write.mode("overwrite").parquet(s"$path/clusters")
-      })
+      () => writeClusters(pairs, path, maxIters))
   }
+
+  /** pairs → symmetric edges → [[ccMinLabelLoop]] → `path/clusters`:
+    * the label write every pair-index build and extension ends with.
+    */
+  private def writeClusters(pairs: DataFrame, path: String,
+      maxIters: Int): Unit =
+    ccMinLabelLoop(symmetricEdges(pairs), maxIters)._1
+      .write.mode("overwrite").parquet(s"$path/clusters")
 
   /** The PPJoin-style PREFIX rows of a shingled relation, with 64-bit
     * hashed keys — the at-rest probe index `writeDedupIndex` persists
-    * and [[newDocPairs]] joins against. Shingles are canonically
+    * and the exact family's delta joins against. Shingles are canonically
     * ordered by their STRING (not rarest-first like
     * [[prefixCollisions]]): document frequencies drift as a corpus
     * grows, so an at-rest index needs an order that is stable across
@@ -1071,17 +1065,8 @@ object Dedup {
           .as("s"))
       .select(col("doc_id"), col("sz"), xxhash64(col("s")).as("sh"))
 
-  /** [[writeDedupIndex]] only when needed — the [[Similarity
-    * .ensureIvfIndex]] discipline applied to the dedup artifacts: the
-    * corpus data fingerprint + plan hash + hyperparameters are stamped
-    * into a `_graft_dedup_meta` sidecar after a successful build and
-    * compared on entry, so an unchanged corpus reuses the at-rest pair
-    * graph and labels across JVMs and days while any drift (or `force`,
-    * the out-of-band-mutation hatch) rebuilds. Crash-safety and FS
-    * plumbing live in [[graft.engine.AtRest.ensureStamped]]. Returns
-    * true when a (re)build happened.
-    */
-  private val DedupMeta = "_graft_dedup_meta"
+  private val DedupLayout = AtRest.Layout("_graft_dedup_meta",
+    Seq(AtRest.Accreting("prefix")))
 
   private def dedupStamp(docs: DataFrame, n: Int, threshold: Double,
       maxIters: Int): String =
@@ -1091,84 +1076,126 @@ object Dedup {
       docs.queryExecution.analyzed.semanticHash(), n, threshold, maxIters, 2)
       .mkString(":")
 
-  def ensureDedupIndex(docs: DataFrame, path: String, n: Int = 3,
-      threshold: Double = 0.5, maxIters: Int = 50,
-      force: Boolean = false): Boolean =
-    graft.engine.AtRest.ensureStamped(docs.sparkSession, path,
-      DedupMeta, dedupStamp(docs, n, threshold, maxIters), force) {
-      writeDedupIndex(docs, path, n, threshold, maxIters)
-    }
-
-  /** Every verified pair INVOLVING the new batch, in
+  /** The exact near-dup index family ([[writeDedupIndex]]). Its delta
+    * finds every verified pair INVOLVING the new batch, in
     * [[jaccardPairsIndexHashed]]'s exact (da < db, j) contract:
     * batch-internal pairs from the hashed index over the batch alone,
     * plus batch×base pairs from an ASYMMETRIC prefix-filtered probe
     * (the batch's prefix rows against the base's AT-REST prefix index
     * — the x59/x31 incremental shape, so the base is never re-joined
-    * against itself nor even re-shingled). Together
-    * with the base's own pair relation this IS the full corpus pair
-    * set: every pair of base∪batch has either both ends in the base
-    * (at rest already), both in the batch (the index here), or one in
-    * each (the probe here) — which is what makes
-    * [[extendDedupIndex]]'s incremental result provably equal to a
-    * batch rebuild (x121 hash-asserts it against the full-corpus
-    * oracle every round).
+    * against itself nor even re-shingled). Together with the base's own
+    * pair relation this IS the full corpus pair set: every pair of
+    * base∪batch has either both ends in the base (at rest already),
+    * both in the batch, or one in each — which is what makes the
+    * incremental result provably equal to a batch rebuild (x121
+    * hash-asserts it against the full-corpus oracle every round).
+    *
+    * The prefix×prefix candidate join — NOT a raw full-shingle
+    * equi-join, whose Σ df_batch·df_base mass re-opens the hot-shingle
+    * blowup x06's scale story documents on saturated corpora: a
+    * corpus-saturating boilerplate shingle sits in almost no prefix and
+    * contributes ~0 candidates. The probe's candidate mass still grows
+    * with the base on SATURATED vocabularies (measured 386 s at a fixed
+    * 2 000-doc batch / 498 k base, SCALE.md round 12, where the LSH
+    * family's banded-key probe runs 48.5 s), so this exact form is the
+    * below-saturation/validation path and the LSH family is the
+    * production default at scale.
     */
-  private[graft] def newDocPairs(base: DataFrame, basePrefix: DataFrame,
-      sgBatch: DataFrame, batchPrefix: DataFrame, n: Int,
+  private def dedupFamily(n: Int, threshold: Double, maxIters: Int) =
+    AtRest.Family[Unit](DedupLayout, _ => (),
+      key = (docs, _) => dedupStamp(docs, n, threshold, maxIters),
+      model = None,
+      build = (docs, path, _) =>
+        writeDedupIndex(docs, path, n, threshold, maxIters),
+      delta = (base, batch, path, _) => {
+        val sgBatch = shingled(batch, n).materialized
+        val batchPrefix = prefixIndexRows(sgBatch, threshold)
+        // the NEW pairs only, materialized BEFORE any append so the
+        // at-rest prefix probe inside cannot see batch rows
+        val newPairs = jaccardPairsFromShingled(sgBatch, threshold)
+          .unionByName(crossPairs(batchPrefix,
+            AtRest.read(base.sparkSession, path, "prefix"), Seq("sh"),
+            sgBatch, base, n, threshold))
+          .materialized
+        appendPairs(path, newPairs, "prefix", batchPrefix, maxIters)
+      })
+
+  /** Batch×base pairs of a pair-index delta: candidates from the
+    * batch's probe rows equi-joined to the base's at-rest probe rows on
+    * `keys` (size-ratio pruned), then the exact verify. The verify is
+    * CANDIDATE-bounded on the base side: only the base docs that appear
+    * in a candidate pair are re-shingled (a left-semi prune before the
+    * tokenizer), so per-batch work is O(batch) + O(candidates) — never
+    * an O(base) pass. Output in canonical global orientation (base and
+    * batch ids interleave).
+    */
+  private def crossPairs(batchRows: DataFrame, baseRows: DataFrame,
+      keys: Seq[String], sgBatch: DataFrame, base: DataFrame, n: Int,
       threshold: Double): DataFrame = {
-    val internal = jaccardPairsFromShingled(sgBatch, threshold)
-    // prefix×prefix candidate join — NOT the raw full-shingle equi-join
-    // of the first draft, whose Σ df_batch·df_base mass re-opened the
-    // hot-shingle blowup x06's scale story documents on saturated
-    // corpora. Both sides carry only their string-ordered prefix rows
-    // (lossless for J ≥ t — see [[prefixIndexRows]]), so a
-    // corpus-saturating boilerplate shingle sits in almost no prefix
-    // and contributes ~0 candidates instead of df_batch·df_base.
-    val cand = batchPrefix
-      .select(col("sh"), col("doc_id").as("na"), col("sz").as("sza"))
-      .join(basePrefix
-        .select(col("sh"), col("doc_id").as("nb"), col("sz").as("szb")),
-        Seq("sh"))
+    def side(rows: DataFrame, id: String, sz: String) =
+      rows.select(keys.map(col) :+ col("doc_id").as(id) :+
+        col("sz").as(sz): _*)
+    val cand = side(batchRows, "na", "sza")
+      .join(side(baseRows, "nb", "szb"), keys)
       .filter(least(col("sza"), col("szb")).cast(DoubleType) /
         greatest(col("sza"), col("szb")) >= threshold - 1e-6)
       .select(col("na"), col("nb")).distinct()
       .materialized
-    // exact verify is CANDIDATE-bounded on the base side: only the base
-    // docs that actually appear in a candidate pair are re-shingled (a
-    // left-semi prune before the tokenizer), so per-batch work is
-    // O(batch) + O(candidates) — never an O(base) pass
     val sgBaseCand = shingled(
       base.join(cand.select(col("nb").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi"), n)
-    val cross = cand
+    cand
       .join(sgBatch.select(col("doc_id").as("na"), col("sg").as("sga")), "na")
       .join(sgBaseCand.select(col("doc_id").as("nb"), col("sg").as("sgb")),
         "nb")
       .select(col("na"), col("nb"),
         round(jaccard(col("sga"), col("sgb")), 6).as("j"))
       .filter(col("j") >= threshold)
-      // canonical global orientation — base and batch ids interleave
       .select(least(col("na"), col("nb")).as("da"),
         greatest(col("na"), col("nb")).as("db"), col("j"))
-    internal.unionByName(cross)
   }
+
+  /** The pair families' delta tail. r20: the pair relation is
+    * APPENDED, not union-overwritten — an extension writes O(batch
+    * pairs) bytes where it rewrote the whole accumulated relation
+    * before (at 100 TB the base relation dwarfs every batch). The base
+    * pairs are snapshotted (materialized) BEFORE the appends start — a
+    * lazy read racing a concurrent append could list half-committed new
+    * files — and then three independent actions overlap (guide §2.6):
+    * append the new pairs, append the batch's probe rows to `probeRel`,
+    * and re-run the CC fixpoint over base ∪ new (measured FLAT — ~1 s
+    * at every probed scale, SCALE.md). A crash mid-append leaves the
+    * stampless dir of the extension window → full rebuild on next entry.
+    */
+  private def appendPairs(path: String, newPairs: DataFrame,
+      probeRel: String, probeRows: DataFrame, maxIters: Int): Unit = {
+    val basePairs = readDedupPairs(newPairs.sparkSession, path).materialized
+    graft.engine.Par.all(
+      () => newPairs.write.mode("append").parquet(s"$path/pairs"),
+      () => probeRows.write.mode("append").parquet(s"$path/$probeRel"),
+      () => writeClusters(basePairs.unionByName(newPairs), path, maxIters))
+  }
+
+  /** [[writeDedupIndex]] only when needed — the [[Similarity
+    * .ensureIvfIndex]] discipline applied to the dedup artifacts: the
+    * corpus data fingerprint + plan hash + hyperparameters are stamped
+    * into a `_graft_dedup_meta` sidecar after a successful build and
+    * compared on entry, so an unchanged corpus reuses the at-rest pair
+    * graph and labels across JVMs and days while any drift (or `force`,
+    * the out-of-band-mutation hatch) rebuilds. Crash-safety and FS
+    * plumbing live in [[graft.engine.AtRest]]. Returns true when a
+    * (re)build happened.
+    */
+  def ensureDedupIndex(docs: DataFrame, path: String, n: Int = 3,
+      threshold: Double = 0.5, maxIters: Int = 50,
+      force: Boolean = false): Boolean =
+    AtRest.ensure(dedupFamily(n, threshold, maxIters), docs, path, force)
 
   /** Extend an at-rest [[writeDedupIndex]] with a NEW document batch
     * WITHOUT re-probing the base against itself — the cross-job shape
     * a 100 TB pipeline actually runs (yesterday's corpus is indexed;
     * today's crawl lands): if the sidecar stamp matches `baseDocs`,
-    * only [[newDocPairs]] runs (batch-internal + batch×base prefix
-    * probe — no base×base re-join and no O(base) re-shingle; but the
-    * probe's candidate mass Σ_key pdf_batch·pdf_base still grows with
-    * the base on SATURATED vocabularies — measured 386 s at a fixed
-    * 2 000-doc batch / 498 k base, SCALE.md round 12, where
-    * [[extendDedupIndexLsh]]'s banded-key probe runs 48.5 s — so this
-    * exact form is the below-saturation/validation path and the LSH
-    * index family is the production default at scale), the pair
-    * relation is appended
-    * at rest, and the CC fixpoint re-runs over the combined edges
-    * (measured FLAT — ~1 s at every probed scale, SCALE.md); the
+    * only the family's delta runs (see [[dedupFamily]]), and the
     * artifacts are then re-stamped for `baseDocs.union(newDocs)`, so a
     * later [[ensureDedupIndex]] over the same union reuses them. A
     * drifted or missing stamp falls back to a full rebuild over the
@@ -1177,81 +1204,28 @@ object Dedup {
     */
   def extendDedupIndex(baseDocs: DataFrame, newDocs: DataFrame,
       path: String, n: Int = 3, threshold: Double = 0.5,
-      maxIters: Int = 50): Boolean = {
-    val spark = baseDocs.sparkSession
-    val union = baseDocs.union(newDocs)
-    val unionStamp = dedupStamp(union, n, threshold, maxIters)
-    // the stamp/crash/drift protocol lives in AtRest.extendStamped;
-    // this body only states WHAT extends and WHAT rebuilds
-    graft.engine.AtRest.extendStamped(spark, path, DedupMeta,
-      coversUnion = _ == unionStamp,
-      extendFrom = s =>
-        if (s == dedupStamp(baseDocs, n, threshold, maxIters))
-          Some((unionStamp, () => {
-            val sgBatch = shingled(newDocs, n).materialized
-            val batchPrefix = prefixIndexRows(sgBatch, threshold)
-            // the NEW pairs only, materialized BEFORE any append so the
-            // at-rest prefix probe inside cannot see batch rows
-            val newPairs = newDocPairs(baseDocs,
-              Tables.parquet(spark, s"$path/prefix"), sgBatch, batchPrefix,
-              n, threshold).materialized
-            // base pairs snapshotted (materialized) BEFORE the appends
-            // start — a lazy read racing a concurrent append could list
-            // half-committed new files
-            val basePairs = readDedupPairs(spark, path).materialized
-            // r20: the pair relation is APPENDED, not union-overwritten
-            // — an extension now writes O(batch pairs) bytes where it
-            // rewrote the whole accumulated relation before (at 100 TB
-            // the base relation dwarfs every batch; the old shape made
-            // extension cost grow with corpus age). Crash mid-append
-            // leaves a stampless dir → full rebuild on next entry,
-            // same discipline as before. The three actions below are
-            // mutually independent → overlapped (guide §2.6):
-            // - append the new pairs,
-            // - roll the at-rest prefix index forward (batch rows only,
-            //   computed purely from sgBatch, never reading the files
-            //   it appends to),
-            // - run the CC fixpoint over base ∪ new (in-memory
-            //   snapshots) and overwrite the cluster labels.
-            graft.engine.Par.all(
-              () => newPairs.write.mode("append").parquet(s"$path/pairs"),
-              () => batchPrefix.write.mode("append")
-                .parquet(s"$path/prefix"),
-              () => {
-                val p = basePairs.unionByName(newPairs)
-                  .select(col("da"), col("db"))
-                val edges = p.toDF("src", "dst")
-                  .union(p.select(col("db"), col("da")).toDF("src", "dst"))
-                  .materialized
-                ccMinLabelLoop(edges, maxIters)._1
-                  .write.mode("overwrite").parquet(s"$path/clusters")
-              })
-          }))
-        else None) {
-      graft.engine.AtRest.ensureStamped(spark, path, DedupMeta,
-        unionStamp, force = true) {
-        writeDedupIndex(union, path, n, threshold, maxIters)
-      }
-    }
-  }
+      maxIters: Int = 50): Boolean =
+    AtRest.extend(dedupFamily(n, threshold, maxIters), baseDocs, newDocs,
+      path, None)
 
   /** The at-rest verified pair relation (da, db, j) of a
     * [[writeDedupIndex]] build — a plain parquet scan, no recompute.
     */
   def readDedupPairs(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = Tables.parquet(spark, s"$path/pairs")
+      path: String): DataFrame = AtRest.read(spark, path, "pairs")
 
-  private val DedupLshMeta = "_graft_dedup_lsh_meta"
+  private val DedupLshLayout = AtRest.Layout("_graft_dedup_lsh_meta",
+    Seq(AtRest.Accreting("bands")))
 
   /** The banding parameters an at-rest LSH index build (or extension)
     * runs under — the sampled auto-probe of [[jaccardPairsLshAuto]],
     * resolved AGAINST A NAMED CORPUS so the decision is reproducible
     * across JVMs: the probe samples a deterministic md5-ordered 1024
     * docs, so the same corpus always lands on the same (numHashes,
-    * bands). The chosen pair is baked into the index STAMP — an
-    * extension re-derives the base's parameters the same way, and any
-    * drift (a corpus whose probe flips the banding, a sidecar written
-    * under other banding) mismatches the stamp and falls back to a full
+    * bands). The chosen pair is baked into the index STAMP (the
+    * LSH family's `P`, resolved from the union an extension builds): a
+    * corpus whose probe flips the banding, or a sidecar written under
+    * other banding, mismatches the stamp and falls back to a full
     * rebuild instead of ever probing batch keys against base keys
     * hashed under different banding.
     */
@@ -1265,35 +1239,12 @@ object Dedup {
       maxIters: Int, params: (Int, Int)): String =
     // banding params as EXPLICIT h=/b= fields (v2): v1 stamped them
     // positionally through Seq.mkString, which numerically widened the
-    // Ints to "128.0" and coupled the parse to the stamp's exact field
-    // count — a composition change silently broke lshStampParams. A
-    // v1 stamp no longer parses, which is the safe arm: full
-    // string-equality gating means an unparsed stamp rebuilds, never
+    // Ints to "128.0". A v1 stamp never equals a v2 key, which is the
+    // safe arm: full string-equality gating means it rebuilds, never
     // mixes key spaces.
     Seq(Similarity.corpusFingerprint(docs),
       docs.queryExecution.analyzed.semanticHash(), n, threshold, maxIters,
       s"h=${params._1}", s"b=${params._2}", 2).mkString(":")
-
-  /** The (numHashes, bands) a [[dedupLshStamp]] was written under —
-    * the at-rest keys' actual banding, read back from the sidecar so an
-    * extension never has to RE-PROBE the base corpus to reconstruct it
-    * (a redundant corpus scan per batch, and stricter than the
-    * soundness invariant: what extension needs is at-rest banding ==
-    * the banding the union build would use, not that a fresh base
-    * probe would still pick the stamped value).
-    */
-  private def lshStampParams(stamp: String): Option[(Int, Int)] = {
-    // keyed fields, not positions: immune to composition drift, and an
-    // unrecognized (e.g. v1) stamp simply fails the subsequent
-    // full-equality gate into a rebuild
-    val f = stamp.split(":")
-    val h = f.collectFirst { case s if s.startsWith("h=") => s.drop(2) }
-    val b = f.collectFirst { case s if s.startsWith("b=") => s.drop(2) }
-    for {
-      hv <- h.flatMap(s => scala.util.Try(s.toInt).toOption)
-      bv <- b.flatMap(s => scala.util.Try(s.toInt).toOption)
-    } yield (hv, bv)
-  }
 
   /** The LSH-keyed at-rest near-dup index — [[writeDedupIndex]] with
     * banded minhash keys (`path/bands`) in place of the exact prefix
@@ -1322,137 +1273,66 @@ object Dedup {
     graft.engine.Par.all(
       () => keys.write.mode("overwrite").parquet(s"$path/bands"),
       () => pairs.write.mode("overwrite").parquet(s"$path/pairs"),
-      () => {
-        val p = pairs.select(col("da"), col("db"))
-        val edges = p.toDF("src", "dst")
-          .union(p.select(col("db"), col("da")).toDF("src", "dst"))
-          .materialized
-        ccMinLabelLoop(edges, maxIters)._1
-          .write.mode("overwrite").parquet(s"$path/clusters")
-      })
+      () => writeClusters(pairs, path, maxIters))
   }
+
+  /** The LSH dedup index family ([[writeDedupIndexLsh]]) — the
+    * 100×-CAPABLE counterpart of [[dedupFamily]]: its delta finds
+    * batch×base candidates by equi-joining the batch's band keys
+    * against the base's AT-REST key index on (band, bkey), so per-batch
+    * work is the batch's own banding + a collision-bounded candidate
+    * join + a candidate-bounded exact verify — the quantity banding
+    * CONTROLS (the auto probe flips to r=4 exactly when collision mass
+    * saturates), where the exact prefix probe's Σ_key df·df mass grows
+    * with the base on saturated vocabularies (measured: fixed 2 000-doc
+    * batch against a 498 000-doc saturated base — prefix probe 386 s,
+    * this path's row in SCALE.md round 12). Batch-internal pairs use the
+    * same banded semantics over the batch alone.
+    */
+  private[graft] def dedupLshFamily(n: Int = 3, threshold: Double = 0.5,
+      maxIters: Int = 50) =
+    AtRest.Family[(Int, Int)](DedupLshLayout, lshIndexParams(_, n),
+      key = dedupLshStamp(_, n, threshold, maxIters, _),
+      model = None,
+      build = (docs, path, params) => writeDedupIndexLsh(docs, path, n,
+        threshold, maxIters, Some(params)),
+      delta = (base, batch, path, params) => {
+        val sgBatch = shingled(batch, n).materialized
+        val batchKeys = bandedKeys(sgBatch, params._1, params._2)
+          .materialized
+        val newPairs = lshPairsFromBanded(sgBatch, batchKeys, threshold)
+          .unionByName(crossPairs(batchKeys,
+            AtRest.read(base.sparkSession, path, "bands"),
+            Seq("band", "bkey"), sgBatch, base, n, threshold))
+          .materialized
+        appendPairs(path, newPairs, "bands", batchKeys, maxIters)
+      })
 
   /** [[writeDedupIndexLsh]] behind the stamped build-or-reuse seam —
     * the LSH twin of [[ensureDedupIndex]]. Returns true on (re)build.
     */
   def ensureDedupIndexLsh(docs: DataFrame, path: String, n: Int = 3,
       threshold: Double = 0.5, maxIters: Int = 50,
-      force: Boolean = false): Boolean = {
-    val params = lshIndexParams(docs, n)
-    graft.engine.AtRest.ensureStamped(docs.sparkSession, path,
-      DedupLshMeta, dedupLshStamp(docs, n, threshold, maxIters, params),
-      force) {
-      writeDedupIndexLsh(docs, path, n, threshold, maxIters, Some(params))
-    }
-  }
+      force: Boolean = false): Boolean =
+    AtRest.ensure(dedupLshFamily(n, threshold, maxIters), docs, path, force)
 
-  /** Incremental extension of an at-rest LSH dedup index — the
-    * 100×-CAPABLE counterpart of [[extendDedupIndex]]: batch×base
-    * candidates come from equi-joining the batch's band keys against
-    * the base's AT-REST key index on (band, bkey), so per-batch work is
-    * the batch's own banding + a collision-bounded candidate join + a
-    * candidate-bounded exact verify — the quantity banding CONTROLS
-    * (the auto probe flips to r=4 exactly when collision mass
-    * saturates), where the exact prefix probe's Σ_key df·df mass grows
-    * with the base on saturated vocabularies (measured: fixed 2 000-doc
-    * batch against a 498 000-doc saturated base — prefix probe 386 s,
-    * this path's row in SCALE.md round 12). Same crash discipline as
-    * the exact extension: the base stamp comes off before the first
-    * overwrite; the base-side verify re-shingles ONLY candidate docs
-    * (left-semi prune). Returns true when any build ran.
+  /** Incremental extension of an at-rest LSH dedup index (see
+    * [[dedupLshFamily]]). `unionView` is the CANONICAL plan of
+    * base ∪ batch when the caller has one (e.g. a flat multi-dir parquet
+    * read over every landed batch): the stamp written after this
+    * extension hashes the union's analyzed plan, so a long-running
+    * caller chaining .union() per batch would deepen the stamped plan —
+    * and the next call's driver-side analysis cost — linearly in batch
+    * count. With a flat view the stamp stays constant-depth and the
+    * NEXT extension's baseDocs (the same flat read) matches it. Rows
+    * must equal baseDocs ∪ newDocs; semantics are unchanged when
+    * absent. Returns true when any build ran.
     */
   def extendDedupIndexLsh(baseDocs: DataFrame, newDocs: DataFrame,
       path: String, n: Int = 3, threshold: Double = 0.5,
-      maxIters: Int = 50, unionView: Option[DataFrame] = None): Boolean = {
-    val spark = baseDocs.sparkSession
-    // `unionView` is the CANONICAL plan of base ∪ batch when the caller
-    // has one (e.g. a flat multi-dir parquet read over every landed
-    // batch): the stamp written after this extension hashes the union's
-    // analyzed plan, so a long-running caller chaining .union() per
-    // batch would deepen the stamped plan — and the next call's
-    // driver-side analysis cost — linearly in batch count. With a flat
-    // view the stamp stays constant-depth and the NEXT extension's
-    // baseDocs (the same flat read) matches it. Rows must equal
-    // baseDocs ∪ newDocs; semantics are unchanged when absent.
-    val union = unionView.getOrElse(baseDocs.union(newDocs))
-    val unionParams = lshIndexParams(union, n)
-    val unionStamp = dedupLshStamp(union, n, threshold, maxIters,
-      unionParams)
-    graft.engine.AtRest.extendStamped(spark, path, DedupLshMeta,
-      coversUnion = _ == unionStamp,
-      // extend only when the at-rest keys were hashed under the SAME
-      // banding the union build would use — a probe that flips the
-      // banding between base and union (a corpus crossing saturation)
-      // must rebuild, never mix key spaces. The base's banding is
-      // PARSED FROM THE STAMP (it is the at-rest keys' ground truth),
-      // not re-probed: a streaming caller extends per micro-batch, and
-      // the old fresh-probe-of-base cost one corpus scan per batch
-      extendFrom = s => {
-        val baseParams = lshStampParams(s)
-        if (baseParams.contains(unionParams) &&
-            s == dedupLshStamp(baseDocs, n, threshold, maxIters,
-              unionParams))
-          Some((unionStamp, () => {
-            val sgBatch = shingled(newDocs, n).materialized
-            val batchKeys = bandedKeys(sgBatch, unionParams._1,
-              unionParams._2).materialized
-            // batch-internal pairs: the same banded semantics over the
-            // batch alone
-            val internal = lshPairsFromBanded(sgBatch, batchKeys,
-              threshold)
-            // batch×base: band-key equi-join against the at-rest index
-            val baseKeys = Tables.parquet(spark, s"$path/bands")
-            val cand = batchKeys
-              .select(col("band"), col("bkey"), col("doc_id").as("na"),
-                col("sz").as("sza"))
-              .join(baseKeys.select(col("band"), col("bkey"),
-                col("doc_id").as("nb"), col("sz").as("szb")),
-                Seq("band", "bkey"))
-              .filter(least(col("sza"), col("szb")).cast(DoubleType) /
-                greatest(col("sza"), col("szb")) >= threshold - 1e-6)
-              .select(col("na"), col("nb")).distinct()
-              .materialized
-            val sgBaseCand = shingled(
-              baseDocs.join(cand.select(col("nb").as("doc_id")).distinct(),
-                Seq("doc_id"), "left_semi"), n)
-            val cross = cand
-              .join(sgBatch.select(col("doc_id").as("na"),
-                col("sg").as("sga")), "na")
-              .join(sgBaseCand.select(col("doc_id").as("nb"),
-                col("sg").as("sgb")), "nb")
-              .select(col("na"), col("nb"),
-                round(jaccard(col("sga"), col("sgb")), 6).as("j"))
-              .filter(col("j") >= threshold)
-              .select(least(col("na"), col("nb")).as("da"),
-                greatest(col("na"), col("nb")).as("db"), col("j"))
-            // r20: append-only pair extension + overlapped actions —
-            // same shape and crash argument as [[extendDedupIndex]]
-            // (new pairs materialized before any append; base pairs
-            // snapshotted before the appends start)
-            val newPairs = internal.unionByName(cross).materialized
-            val basePairs = readDedupPairs(spark, path).materialized
-            graft.engine.Par.all(
-              () => newPairs.write.mode("append").parquet(s"$path/pairs"),
-              () => batchKeys.write.mode("append").parquet(s"$path/bands"),
-              () => {
-                val p = basePairs.unionByName(newPairs)
-                  .select(col("da"), col("db"))
-                val edges = p.toDF("src", "dst")
-                  .union(p.select(col("db"), col("da")).toDF("src", "dst"))
-                  .materialized
-                ccMinLabelLoop(edges, maxIters)._1
-                  .write.mode("overwrite").parquet(s"$path/clusters")
-              })
-          }))
-        else None
-      }) {
-      graft.engine.AtRest.ensureStamped(spark, path, DedupLshMeta,
-        unionStamp, force = true) {
-        writeDedupIndexLsh(union, path, n, threshold, maxIters,
-          Some(unionParams))
-      }
-    }
-  }
+      maxIters: Int = 50, unionView: Option[DataFrame] = None): Boolean =
+    AtRest.extend(dedupLshFamily(n, threshold, maxIters), baseDocs,
+      newDocs, path, unionView)
 
   /** Full corpus labeling from a [[writeDedupIndex]] build: the at-rest
     * edge-touched labels joined back to the corpus, singletons
@@ -1460,14 +1340,8 @@ object Dedup {
     * [[dedupClusters]] over the same corpus and parameters
     * (spec-asserted), but the expensive half is one parquet scan.
     */
-  def readDedupClusters(docs: DataFrame, path: String): DataFrame = {
-    val labels = Tables.parquet(docs.sparkSession, s"$path/clusters")
-    docs.select(col("doc_id"))
-      .join(labels.withColumnRenamed("cluster", "edge_cluster"),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("edge_cluster"), col("doc_id")).as("cluster"))
-  }
+  def readDedupClusters(docs: DataFrame, path: String): DataFrame =
+    labelCorpus(docs, AtRest.read(docs.sparkSession, path, "clusters"))
 
   /** Alternating large-star / small-star connected components (Kiveris,
     * Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected Components
@@ -1733,6 +1607,8 @@ object Dedup {
     else (numHashes, numHashes / 2, perDocR2)
   }
 
+  private val LshProbeMeta = "_graft_lshprobe_meta"
+
   /** [[jaccardPairsLsh]] with the banding parameters chosen PER CORPUS —
     * the production default and x07's declared path, from a base budget
     * of [[LshNumHashes]].
@@ -1748,10 +1624,8 @@ object Dedup {
     * silently dropped ≈ 13% of j≈0.5 borderline pairs), the measured
     * remedy class that flattened the 100× probe from 449 s at r=2 to
     * 16.4 s at 128/32 — 256/64 re-measured in SCALE.md's round-12 row.
-    */
-  private val LshProbeMeta = "_graft_lshprobe_meta"
-
-  /** `probeIndexPath`: the banding decision at rest — the fourth auto
+    *
+    * `probeIndexPath`: the banding decision at rest — the fourth auto
     * family under [[graft.engine.AtRest.statStamped]]'s discipline
     * (see [[simhashNearDupAuto]]). The memoized scalar is the chosen
     * HASH BUDGET: [[chooseLshBands]]' two layouts are (h, h/2) and
@@ -2513,7 +2387,8 @@ object Dedup {
           .as("recall"))
   }
 
-  private val CdcMeta = "_graft_cdc_meta"
+  private val CdcLayout = AtRest.Layout("_graft_cdc_meta",
+    Seq(AtRest.Accreting("chunks")))
 
   private def cdcStamp(docs: DataFrame, p: Int, threshold: Double,
       maxDf: Option[Long]): String =
@@ -2538,20 +2413,11 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$path/pairs")
   }
 
-  /** [[writeCdcIndex]] behind the stamped build-or-reuse seam. */
-  def ensureCdcIndex(docs: DataFrame, path: String, p: Int = 8,
-      threshold: Double = 0.5, maxDf: Option[Long] = Some(100L),
-      force: Boolean = false): Boolean =
-    graft.engine.AtRest.ensureStamped(docs.sparkSession, path, CdcMeta,
-      cdcStamp(docs, p, threshold, maxDf), force) {
-      writeCdcIndex(docs, path, p, threshold, maxDf)
-    }
-
-  /** Incremental extension of an at-rest CDC containment index — the
-    * batch is CHUNKED ALONE (chunking is per-document, so
+  /** The CDC containment index family ([[writeCdcIndex]]). Its delta
+    * CHUNKS THE BATCH ALONE (chunking is per-document, so
     * chunks(base) ∪ chunks(batch) == chunks(base ∪ batch) exactly —
-    * content-defined boundaries never straddle documents), appended to
-    * the at-rest chunk relation, and the pair stage re-runs over the
+    * content-defined boundaries never straddle documents), appends it to
+    * the at-rest chunk relation, and re-runs the pair stage over the
     * skinny persisted chunks. The corpus is never re-tokenized: per
     * batch, the heavy linear pass is ∝ the batch, and the recomputed
     * pair join's mass is bounded by TRUE duplication (the capped-df
@@ -2561,46 +2427,50 @@ object Dedup {
     * of now, and must leave every pair — old and new — exactly as a
     * from-scratch build would drop it (incremental == from-scratch is
     * spec-asserted, and x142's oracle is the full-corpus chain).
-    * Protocol (no-op / extend / drift-rebuild, crash ⇒ stampless dir ⇒
-    * clean rebuild) is [[graft.engine.AtRest.extendStamped]]'s.
+    */
+  private[graft] def cdcFamily(p: Int, threshold: Double,
+      maxDf: Option[Long]) =
+    AtRest.Family[Unit](CdcLayout, _ => (),
+      key = (docs, _) => cdcStamp(docs, p, threshold, maxDf),
+      model = None,
+      build = (docs, path, _) => writeCdcIndex(docs, path, p, threshold,
+        maxDf),
+      delta = (_, batch, path, _) => {
+        val batchChunks = cdcChunks(batch, p)
+          .select(col("doc_id"), col("fp")).distinct().materialized
+        val all = AtRest.read(batch.sparkSession, path, "chunks")
+          .unionByName(batchChunks)
+        // pairs overwrite first (it only READS chunks — untouched at
+        // this point), then the batch rows append to the chunk
+        // relation; a crash between the two leaves a stampless dir and
+        // the retry rebuilds cleanly
+        cdcPairsFromChunks(all, threshold, maxDf)
+          .write.mode("overwrite").parquet(s"$path/pairs")
+        batchChunks.write.mode("append").parquet(s"$path/chunks")
+      })
+
+  /** [[writeCdcIndex]] behind the stamped build-or-reuse seam. */
+  def ensureCdcIndex(docs: DataFrame, path: String, p: Int = 8,
+      threshold: Double = 0.5, maxDf: Option[Long] = Some(100L),
+      force: Boolean = false): Boolean =
+    AtRest.ensure(cdcFamily(p, threshold, maxDf), docs, path, force)
+
+  /** Incremental extension of an at-rest CDC containment index (see
+    * [[cdcFamily]]); `unionView` as in [[extendDedupIndexLsh]].
     */
   def extendCdcIndex(baseDocs: DataFrame, newDocs: DataFrame,
       path: String, p: Int = 8, threshold: Double = 0.5,
       maxDf: Option[Long] = Some(100L),
-      unionView: Option[DataFrame] = None): Boolean = {
-    val spark = baseDocs.sparkSession
-    val union = unionView.getOrElse(baseDocs.union(newDocs))
-    val unionStamp = cdcStamp(union, p, threshold, maxDf)
-    graft.engine.AtRest.extendStamped(spark, path, CdcMeta,
-      coversUnion = _ == unionStamp,
-      extendFrom = s =>
-        if (s == cdcStamp(baseDocs, p, threshold, maxDf))
-          Some((unionStamp, () => {
-            val batchChunks = cdcChunks(newDocs, p)
-              .select(col("doc_id"), col("fp")).distinct().materialized
-            val all = Tables.parquet(spark, s"$path/chunks")
-              .unionByName(batchChunks)
-            // pairs overwrite first (it only READS chunks — untouched
-            // at this point), then the batch rows append to the chunk
-            // relation; a crash between the two leaves a stampless dir
-            // and the retry rebuilds cleanly
-            cdcPairsFromChunks(all, threshold, maxDf)
-              .write.mode("overwrite").parquet(s"$path/pairs")
-            batchChunks.write.mode("append").parquet(s"$path/chunks")
-          }))
-        else None) {
-      graft.engine.AtRest.ensureStamped(spark, path, CdcMeta,
-        unionStamp, force = true) {
-        writeCdcIndex(union, path, p, threshold, maxDf)
-      }
-    }
-  }
+      unionView: Option[DataFrame] = None): Boolean =
+    AtRest.extend(cdcFamily(p, threshold, maxDf), baseDocs, newDocs, path,
+      unionView)
 
   /** The at-rest containment pair relation of a [[writeCdcIndex]] dir. */
   def readCdcPairs(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = Tables.parquet(spark, s"$path/pairs")
+      path: String): DataFrame = AtRest.read(spark, path, "pairs")
 
-  private val DfMeta = "_graft_df_meta"
+  private val DfLayout = AtRest.Layout("_graft_df_meta",
+    Seq(AtRest.Accreting("df", merge = Some(mergeDf))))
 
   private def dfStamp(docs: DataFrame, n: Int): String =
     Seq(Similarity.corpusFingerprint(docs),
@@ -2615,6 +2485,12 @@ object Dedup {
   private def shingleDfPartial(docs: DataFrame, n: Int): DataFrame =
     shingled(docs, n).select(explode(col("sg")).as("s"))
       .groupBy(col("s")).agg(count(lit(1)).as("f"))
+
+  /** Sum (s, f) shards per shingle: the df relation's read and its
+    * compaction.
+    */
+  private def mergeDf(shards: DataFrame): DataFrame =
+    shards.groupBy(col("s")).agg(sum(col("f")).as("f"))
 
   /** The corpus shingle document-frequency relation AT REST — the
     * x141/x135 shared input behind the stamp seam, so repeated
@@ -2633,211 +2509,71 @@ object Dedup {
     shingleDfPartial(docs, n).write.mode("overwrite")
       .parquet(s"$path/df")
 
+  /** The shingle-df sidecar family ([[writeShingleDfIndex]]): the delta
+    * shingles the batch ALONE and appends its partial counts as a new
+    * shard — work ∝ the batch, the base untouched on disk (spec asserts
+    * file-grain invariance). Its compaction MERGES the shards: the
+    * summed relation is content-equivalent (df is a sum), so after
+    * thousands of streaming batches readers sum one vocabulary-sized
+    * relation instead of thousands of shards.
+    */
+  private[graft] def dfFamily(n: Int = 3) =
+    AtRest.Family[Unit](DfLayout, _ => (),
+      key = (docs, _) => dfStamp(docs, n),
+      model = None,
+      build = (docs, path, _) => writeShingleDfIndex(docs, path, n),
+      delta = (_, batch, path, _) =>
+        shingleDfPartial(batch, n).write.mode("append").parquet(s"$path/df"))
+
   /** [[writeShingleDfIndex]] behind the stamped build-or-reuse seam. */
   def ensureShingleDfIndex(docs: DataFrame, path: String, n: Int = 3,
       force: Boolean = false): Boolean =
-    graft.engine.AtRest.ensureStamped(docs.sparkSession, path, DfMeta,
-      dfStamp(docs, n), force) {
-      writeShingleDfIndex(docs, path, n)
-    }
+    AtRest.ensure(dfFamily(n), docs, path, force)
 
-  /** Incremental extension of an at-rest [[writeShingleDfIndex]]: the
-    * batch is shingled ALONE and its partial counts appended as a new
-    * shard — work ∝ the batch, the base untouched on disk (spec
-    * asserts file-grain invariance). Protocol (no-op / extend /
-    * drift-rebuild, crash ⇒ stampless dir ⇒ clean rebuild) is
-    * [[graft.engine.AtRest.extendStamped]]'s. Returns true when any
-    * build ran.
+  /** Incremental extension of an at-rest [[writeShingleDfIndex]] (see
+    * [[dfFamily]]). Returns true when any build ran.
     */
   def extendShingleDfIndex(baseDocs: DataFrame, newDocs: DataFrame,
       path: String, n: Int = 3,
-      unionView: Option[DataFrame] = None): Boolean = {
-    val spark = baseDocs.sparkSession
-    val union = unionView.getOrElse(baseDocs.union(newDocs))
-    val unionStamp = dfStamp(union, n)
-    graft.engine.AtRest.extendStamped(spark, path, DfMeta,
-      coversUnion = _ == unionStamp,
-      extendFrom = s =>
-        if (s == dfStamp(baseDocs, n))
-          Some((unionStamp, () =>
-            shingleDfPartial(newDocs, n).write.mode("append")
-              .parquet(s"$path/df")))
-        else None) {
-      ensureShingleDfIndex(union, path, n)
-    }
-  }
+      unionView: Option[DataFrame] = None): Boolean =
+    AtRest.extend(dfFamily(n), baseDocs, newDocs, path, unionView)
 
   /** The merged (s, f) document-frequency relation of a
     * [[writeShingleDfIndex]] dir — shards summed per shingle, exactly
     * the live [[shingleDfPartial]] values over the stamped corpus.
     */
   def readShingleDf(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    Tables.parquet(spark, s"$path/df")
-      .groupBy(col("s")).agg(sum(col("f")).as("f"))
+      path: String): DataFrame = mergeDf(AtRest.read(spark, path, "df"))
 
-  /** Compact an at-rest [[writeShingleDfIndex]]: a long-lived streaming
-    * sidecar accretes one partial-count shard per micro-batch, so after
-    * thousands of batches readers sum thousands × vocabulary rows. The
-    * merged relation is CONTENT-EQUIVALENT to the shards (df is a sum),
-    * so compaction rewrites `path/df` as the single pre-merged relation
-    * under the SAME stamp — the usual mutation discipline (stamp off
+  /** Compact an at-rest [[writeShingleDfIndex]]: rewrite `path/df` as
+    * the single pre-merged relation under the SAME stamp (stamp off
     * during the rewrite; a crash leaves a stampless dir and the next
     * ensure rebuilds). No-op when the stamp is absent. Returns true
     * when a compaction ran.
     */
   def compactShingleDfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean =
-    // AtRest.compactStamped owns the lease/stamp window (stamp off,
-    // mutate, same stamp back — writers excluded throughout; a crash
-    // leaves a stampless dir the next ensure rebuilds cleanly)
-    graft.engine.AtRest.compactStamped(spark, path, DfMeta) {
-      // staged through a sibling dir + rename: parquet cannot
-      // overwrite a directory it is reading, and the relation is
-      // corpus-vocabulary-sized — never driver-collected
-      val dfp = new org.apache.hadoop.fs.Path(path, "df")
-      val tmp = new org.apache.hadoop.fs.Path(path, "df_compact_tmp")
-      val old = new org.apache.hadoop.fs.Path(path, "df_compact_old")
-      val fs = dfp.getFileSystem(spark.sessionState.newHadoopConf())
-      // reclaim any orphan left by an earlier crashed compaction —
-      // nothing else ever removes the staging dirs
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-      try {
-        readShingleDf(spark, path)
-          .write.mode("overwrite").parquet(tmp.toString)
-        // swap via two renames, not delete-then-rename: the window in
-        // which `df` is absent is one metadata op wide instead of an
-        // O(shards) recursive delete (seconds at 4096 streaming shards
-        // on an object store), and the old file set is removed only
-        // AFTER the merged one is serving. A reader that planned its
-        // scan against the old set either completes on it or fails on
-        // the vanished paths — the old and new sets never coexist
-        // under `df`, so a mixed (silently double-counted) read is
-        // structurally impossible (spec-pinned, interleaved reader).
-        if (!fs.rename(dfp, old))
-          sys.error(s"compaction rename failed: $dfp -> $old")
-        if (!fs.rename(tmp, dfp))
-          sys.error(s"compaction rename failed: $tmp -> $dfp")
-        fs.delete(old, true)
-      } finally {
-        // crash between the renames: restore the old set rather than
-        // leaving the dir df-less (the stamp is off, so even an
-        // unrestorable crash only costs the next ensure a rebuild)
-        if (!fs.exists(dfp) && fs.exists(old)) fs.rename(old, dfp)
-        fs.delete(tmp, true) // no-op when the rename landed
-        if (fs.exists(dfp)) fs.delete(old, true)
-      }
-    }
-
-  /** Parquet-file count of one flat relation dir — the lock-free
-    * pre-check the compaction faces use to no-op without touching the
-    * stamp (0 when the dir is absent).
-    */
-  private def flatFileCount(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    try fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    catch { case _: java.io.FileNotFoundException => 0 }
-  }
-
-  /** Rewrite one accreted FLAT relation dir (the extend faces'
-    * `append` targets: the exact index's `prefix`, the LSH index's
-    * `bands`, the CDC index's `chunks` — one file set lands per
-    * micro-batch, so a long-lived stream accretes thousands of tiny
-    * files and every read pays open + footer overhead per file) to a
-    * byte-size-bounded file count: rows unchanged — these relations
-    * are bags of exact rows, unlike the df relation there is nothing
-    * to merge — just re-bucketed to ⌈bytes / 128 MB⌉ files. Same
-    * two-atomic-renames swap as [[compactShingleDfIndex]] (old and new
-    * sets never coexist under the live dir; crash between the renames
-    * restored in the finally arm). MUST run inside the owning
-    * artifact's mutation window — the public faces wrap it in
-    * [[graft.engine.AtRest.compactStamped]].
-    */
-  private def compactFlatParquetDir(
-      spark: org.apache.spark.sql.SparkSession, dirStr: String): Unit = {
-    val dirp = new org.apache.hadoop.fs.Path(dirStr)
-    val tmp = new org.apache.hadoop.fs.Path(dirStr + "_compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(dirStr + "_compact_old")
-    val fs = dirp.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    try {
-      val bytes = fs.listStatus(dirp)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-      val nOut = math.max(1,
-        math.ceil(bytes / (128.0 * 1024 * 1024)).toInt)
-      Tables.parquet(spark, dirStr).repartition(nOut)
-        .write.mode("overwrite").parquet(tmp.toString)
-      if (!fs.rename(dirp, old))
-        sys.error(s"compaction rename failed: $dirp -> $old")
-      if (!fs.rename(tmp, dirp))
-        sys.error(s"compaction rename failed: $tmp -> $dirp")
-      fs.delete(old, true)
-    } finally {
-      if (!fs.exists(dirp) && fs.exists(old)) fs.rename(old, dirp)
-      fs.delete(tmp, true)
-      if (fs.exists(dirp)) fs.delete(old, true)
-    }
-  }
+      path: String): Boolean = AtRest.compact(DfLayout, spark, path, 0)
 
   /** Compact the exact dedup index's accreted `prefix` relation (its
     * `pairs`/`clusters` are OVERWRITTEN whole per extension and never
-    * accrete). No-op — lock-free, stamp untouched — at or under
-    * `maxShards` files; otherwise the usual lease/stamp mutation
-    * window. Returns true when a compaction ran.
+    * accrete) to ⌈bytes / 128 MB⌉ files, rows unchanged. No-op —
+    * lock-free, stamp untouched — at or under `maxShards` files;
+    * otherwise the usual lease/stamp mutation window. Returns true when
+    * a compaction ran.
     */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, maxShards: Int = 256): Boolean =
-    flatFileCount(spark, s"$path/prefix") > maxShards &&
-      graft.engine.AtRest.compactStamped(spark, path, DedupMeta) {
-        compactFlatParquetDir(spark, s"$path/prefix")
-      }
+    AtRest.compact(DedupLayout, spark, path, maxShards)
 
   /** [[compactDedupIndex]] for the LSH index's accreted `bands`. */
   def compactDedupIndexLsh(spark: org.apache.spark.sql.SparkSession,
       path: String, maxShards: Int = 256): Boolean =
-    flatFileCount(spark, s"$path/bands") > maxShards &&
-      graft.engine.AtRest.compactStamped(spark, path, DedupLshMeta) {
-        compactFlatParquetDir(spark, s"$path/bands")
-      }
+    AtRest.compact(DedupLshLayout, spark, path, maxShards)
 
   /** [[compactDedupIndex]] for the CDC index's accreted `chunks`. */
   def compactCdcIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, maxShards: Int = 256): Boolean =
-    flatFileCount(spark, s"$path/chunks") > maxShards &&
-      graft.engine.AtRest.compactStamped(spark, path, CdcMeta) {
-        compactFlatParquetDir(spark, s"$path/chunks")
-      }
-
-  /** Move the at-rest LSH dedup index's stamp (and its `_dfindex`
-    * sidecar's, when present) from `oldCorpus`'s read plan to
-    * `newCorpus`'s — rows must be identical (a landed-corpus
-    * consolidation; see [[graft.ext.Similarity.corpusPrefixRewrite]]).
-    * Returns the MAIN index's outcome; a foreign sidecar stamp just
-    * means the sidecar rebuilds on its next extension (its drift arm),
-    * never a wrong value.
-    */
-  def restampDedupIndexLsh(spark: org.apache.spark.sql.SparkSession,
-      path: String, oldCorpus: DataFrame,
-      newCorpus: DataFrame): Boolean = {
-    val rewrite = Similarity.corpusPrefixRewrite(oldCorpus, newCorpus)
-    val main = graft.engine.AtRest.restampIf(spark, path,
-      DedupLshMeta)(rewrite)
-    graft.engine.AtRest.restampIf(spark, s"$path/_dfindex",
-      DfMeta)(rewrite)
-    main
-  }
-
-  /** [[restampDedupIndexLsh]] for the CDC containment index. */
-  def restampCdcIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, oldCorpus: DataFrame,
-      newCorpus: DataFrame): Boolean =
-    graft.engine.AtRest.restampIf(spark, path, CdcMeta)(
-      Similarity.corpusPrefixRewrite(oldCorpus, newCorpus))
+    AtRest.compact(CdcLayout, spark, path, maxShards)
 
   private val ContProbeMeta = "_graft_contprobe_meta"
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Checkpoints.MaterializeOps
-import graft.engine.Tables
+import graft.engine.{AtRest, Tables}
 
 /** Training + assignment profile for the at-rest index builders
   * ([[Similarity.writeKnnIndex]] / [[Similarity.writeIvfIndex]] and their
@@ -683,7 +683,7 @@ object Similarity {
 
   /** The profile's stamp token — dash-separated inside so it stays ONE
     * colon-field of the corpus part (the stamp format the extenders
-    * parse by prefix; see lshStampParams' lesson on field coupling).
+    * match by prefix).
     */
   private def profileToken(p: IndexProfile): String = p match {
     case IndexProfile.Exact => "exact"
@@ -691,17 +691,8 @@ object Similarity {
       (if (hier) "hier" else "sampled") + s"-$r-$c-$n"
   }
 
-  /** [[writeIvfIndex]] only when needed: the corpus data fingerprint +
-    * plan hash + hyperparameters are stamped into a `_graft_ivf_meta`
-    * sidecar at write time and compared on entry, so an unchanged corpus
-    * reuses the index at rest instead of re-training and re-writing it —
-    * the deployment shape for a resident index, where the build
-    * amortizes across every query batch and the probe cost is all that
-    * remains (~0.5 s vs the 2.1–2.6 s build+probe at sf0.1). Goes
-    * through the Hadoop FS API so the path can live on any cluster
-    * filesystem. Returns true when a (re)build happened.
-    */
-  private[graft] val IvfMeta = "_graft_ivf_meta"
+  private[graft] val IvfLayout = AtRest.Layout("_graft_ivf_meta",
+    Seq(AtRest.Accreting("", cells = true)))
 
   /** v2: the stamp carries a `model=` term (see [[knnCorpusPart]]'s
     * rationale) so [[extendIvfIndex]] can roll the corpus forward under
@@ -716,162 +707,70 @@ object Similarity {
       profileToken(resolveProfile(nCentroids, profile)))
       .mkString(":")
 
+  /** The IVF corpus index family ([[writeIvfIndex]]) — the simplest
+    * member of the incremental at-rest families: its delta assigns the
+    * batch against the frozen at-rest centroids (one broadcast argmax
+    * over the batch alone, through the SAME per-vector route as the
+    * seed — the profile seam) and APPENDS the assigned rows into their
+    * `cell=` partition directories. Nothing existing is rewritten — IVF
+    * cell membership of old vectors cannot change under a frozen model
+    * — so per-batch work is exactly the batch's assignment + its
+    * partitioned write, and a probe over the extended index equals
+    * [[topKIvf]] with the base-trained centroids over the union (x139
+    * hash-asserts it). The stamp's model term rides from the base stamp
+    * into the union stamp: an extension NEVER re-trains (the standard
+    * IVF maintenance trade), an [[ensureIvfIndex]] over the union does.
+    */
+  private[graft] def ivfFamily(nCentroids: Int, iters: Int,
+      profile: IndexProfile) =
+    AtRest.Family[Unit](IvfLayout, _ => (),
+      key = (corpus, _) => ivfCorpusPart(corpus, nCentroids, iters, profile),
+      model = Some(knnModelPart),
+      build = (corpus, path, _) =>
+        writeIvfIndex(corpus, path, nCentroids, iters, profile),
+      delta = (_, batch, path, _) =>
+        assignWithProfile(batch, readKnnCentroids(batch.sparkSession, path),
+          profile).write.mode("append").partitionBy("cell").parquet(path))
+
+  /** [[writeIvfIndex]] only when needed: the corpus data fingerprint +
+    * plan hash + hyperparameters are stamped into a `_graft_ivf_meta`
+    * sidecar at write time and compared on entry, so an unchanged corpus
+    * reuses the index at rest instead of re-training and re-writing it —
+    * the deployment shape for a resident index, where the build
+    * amortizes across every query batch and the probe cost is all that
+    * remains (~0.5 s vs the 2.1–2.6 s build+probe at sf0.1). `force` is
+    * the out-of-band-mutation hatch (the at-rest analogue of
+    * [[invalidateTrainedCentroids]]). Returns true when a (re)build
+    * happened.
+    */
   def ensureIvfIndex(corpus: DataFrame, path: String, nCentroids: Int = 8,
       iters: Int = 3, force: Boolean = false,
-      profile: IndexProfile = IndexProfile.Exact): Boolean = {
-    val stamp = ivfCorpusPart(corpus, nCentroids, iters, profile) +
-      "|model=" + knnModelPart(corpus)
-    // `force` is the out-of-band-mutation hatch (the at-rest analogue of
-    // [[invalidateTrainedCentroids]]); stamp/crash semantics live in
-    // [[graft.engine.AtRest.ensureStamped]], shared with
-    // [[graft.ext.Dedup.ensureDedupIndex]].
-    graft.engine.AtRest.ensureStamped(corpus.sparkSession, path,
-      IvfMeta, stamp, force) {
-      writeIvfIndex(corpus, path, nCentroids, iters, profile)
-    }
-  }
+      profile: IndexProfile = IndexProfile.Exact): Boolean =
+    AtRest.ensure(ivfFamily(nCentroids, iters, profile), corpus, path, force)
 
-  /** Extend an at-rest [[writeIvfIndex]] with a NEW vector batch — the
-    * simplest member of the incremental at-rest family (x116/x121
-    * pairs, x137 LSH keys, x138 kNN edges): assign the batch against
-    * the frozen at-rest centroids (one broadcast argmax over the batch
-    * alone) and APPEND the assigned rows into their `cell=` partition
-    * directories. Nothing existing is rewritten — IVF cell membership
-    * of old vectors cannot change under a frozen model — so per-batch
-    * work is exactly the batch's assignment + its partitioned write,
-    * and a probe over the extended index equals [[topKIvf]] with the
-    * base-trained centroids over the union (x139 hash-asserts it).
-    * Stamp discipline identical to [[extendKnnIndex]]: base stamp off
-    * before the first mutation (a crashed append rebuilds — the static
-    * overwrite wipes any torn files), model term carried forward so an
-    * [[ensureIvfIndex]] over the union re-trains. Returns true when
-    * any build ran.
+  /** Extend an at-rest [[writeIvfIndex]] with a NEW vector batch (see
+    * [[ivfFamily]]). `unionView`: the canonical base ∪ batch plan for
+    * the stamp when the caller has one (a flat multi-dir read); rows
+    * must equal baseCorpus ∪ newCorpus. Returns true when any build ran.
     */
   def extendIvfIndex(baseCorpus: DataFrame, newCorpus: DataFrame,
       path: String, nCentroids: Int = 8, iters: Int = 3,
       unionView: Option[DataFrame] = None,
-      profile: IndexProfile = IndexProfile.Exact): Boolean = {
-    val spark = baseCorpus.sparkSession
-    // canonical base ∪ batch plan for the stamp when the caller has one
-    // (a flat multi-dir read) — same contract as extendKnnIndex's
-    // unionView: rows must equal baseCorpus ∪ newCorpus
-    val union = unionView.getOrElse(baseCorpus.union(newCorpus))
-    val unionCorpus = ivfCorpusPart(union, nCentroids, iters, profile)
-    val basePrefix = ivfCorpusPart(baseCorpus, nCentroids, iters,
-      profile) + "|model="
-    // AtRest.extendStamped owns the stamp/crash/drift protocol; the
-    // model term rides from the base stamp into the union stamp — an
-    // extension NEVER re-trains (the standard IVF maintenance trade)
-    graft.engine.AtRest.extendStamped(spark, path, IvfMeta,
-      coversUnion = _.startsWith(unionCorpus + "|model="),
-      extendFrom = stamp =>
-        if (stamp.startsWith(basePrefix))
-          Some((unionCorpus + "|model=" + stamp.substring(basePrefix.length),
-            () => {
-              val cents = Tables.parquet(spark, s"$path/_centroids")
-              // the exact row shape writeIvfIndex persists: (cid, ce,
-              // cn) under the cell= partition column, assigned through
-              // the SAME per-vector route as the seed (profile seam)
-              assignWithProfile(newCorpus, cents, profile)
-                .write.mode("append").partitionBy("cell").parquet(path)
-            }))
-        else None) {
-      ensureIvfIndex(union, path, nCentroids, iters, profile = profile)
-    }
-  }
-
-  /** Cell directories of `root` holding more than `budget` parquet
-    * files — the accretion the extend faces' append-per-batch writes
-    * build up in a long-lived index (each micro-batch lands one file
-    * set per touched cell; after thousands of batches a hot cell holds
-    * thousands of tiny files and every probe pays open + footer
-    * overhead per file).
-    */
-  private def overBudgetCellDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      budget: Int): Seq[org.apache.hadoop.fs.Path] =
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .map(_.getPath)
-      .filter(d => fs.listStatus(d)
-        .count(f => f.getPath.getName.endsWith(".parquet")) > budget)
-
-  /** Rewrite ONLY the over-budget `cell=` dirs of an index relation to
-    * one file per cell — work ∝ the over-budget cell MASS (the
-    * localized-extension discipline applied to maintenance: untouched
-    * cells are never read, their files stay byte-identical), one
-    * repartition-by-cell job for all touched cells, then a per-cell
-    * two-atomic-renames swap (the [[graft.ext.Dedup.compactShingleDfIndex]]
-    * discipline: old and new file sets never coexist under a live cell
-    * dir, so a reader planned against the old set completes on it or
-    * fails fast and retries — never a mixed view; staging lives in a
-    * SIBLING of the root so partition discovery never sees it). Values
-    * identical by construction: same rows, same partition dirs. MUST
-    * run inside the artifact's mutation window — the public faces wrap
-    * it in [[graft.engine.AtRest.compactStamped]] (stamp off during the
-    * rewrite; a crash leaves a stampless dir the next ensure rebuilds,
-    * and the finally arm restores any cell caught between its two
-    * renames). Returns the number of compacted cells.
-    */
-  private def compactCellDirs(spark: org.apache.spark.sql.SparkSession,
-      rootDir: String, budget: Int): Int = {
-    val root = new org.apache.hadoop.fs.Path(rootDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val over = overBudgetCellDirs(fs, root, budget)
-    if (over.isEmpty) 0
-    else {
-      val staged = new org.apache.hadoop.fs.Path(rootDir + "__compact_tmp")
-      fs.delete(staged, true)
-      val cells = over.map(_.getName.stripPrefix("cell=").toLong)
-      val df = Tables.parquet(spark, rootDir)
-        .filter(col("cell").isin(cells: _*))
-      // repartition by cell ⇒ one task per cell ⇒ exactly one file per
-      // compacted cell dir; partition pruning keeps the read to the
-      // over-budget dirs
-      df.select(df.columns.filterNot(_ == "cell").map(col) :+
-          col("cell"): _*)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(staged.toString)
-      try {
-        over.foreach { live =>
-          val neu = new org.apache.hadoop.fs.Path(staged, live.getName)
-          val old = new org.apache.hadoop.fs.Path(staged,
-            live.getName + ".old")
-          if (!fs.rename(live, old))
-            sys.error(s"compaction rename failed: $live -> $old")
-          if (!fs.rename(neu, live))
-            sys.error(s"compaction rename failed: $neu -> $live")
-        }
-      } finally {
-        // a cell caught between its two renames: restore the old set
-        over.foreach { live =>
-          val old = new org.apache.hadoop.fs.Path(staged,
-            live.getName + ".old")
-          if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live)
-        }
-        fs.delete(staged, true)
-      }
-      over.size
-    }
-  }
+      profile: IndexProfile = IndexProfile.Exact): Boolean =
+    AtRest.extend(ivfFamily(nCentroids, iters, profile), baseCorpus,
+      newCorpus, path, unionView)
 
   /** Compact an at-rest [[writeIvfIndex]] dir's accreted cell
-    * partitions (see [[compactCellDirs]]). No-op — lock-free, stamp
-    * untouched — when no cell exceeds `maxFilesPerCell`; otherwise the
-    * usual mutation discipline under the writer lease. Returns true
-    * when a compaction ran.
+    * partitions: each extension lands one file set per touched cell, so
+    * after thousands of batches a hot cell holds thousands of tiny files
+    * and every probe pays open + footer overhead per file. Only cells
+    * over `maxFilesPerCell` files are rewritten, one file each, values
+    * identical. No-op — lock-free, stamp untouched — when no cell is
+    * over budget. Returns true when a compaction ran.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxFilesPerCell: Int = 32): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(root) &&
-      overBudgetCellDirs(fs, root, maxFilesPerCell).nonEmpty &&
-      graft.engine.AtRest.compactStamped(spark, path, IvfMeta) {
-        compactCellDirs(spark, path, maxFilesPerCell); ()
-      }
-  }
+      path: String, maxFilesPerCell: Int = 32): Boolean =
+    AtRest.compact(IvfLayout, spark, path, maxFilesPerCell)
 
   /** Compact an at-rest [[writeKnnIndex]] dir's accreted `cells`
     * partitions. The edge relation never accretes — extensions
@@ -880,15 +779,8 @@ object Similarity {
     * discipline as [[compactIvfIndex]].
     */
   def compactKnnIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxFilesPerCell: Int = 32): Boolean = {
-    val cellsRoot = new org.apache.hadoop.fs.Path(path, "cells")
-    val fs = cellsRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(cellsRoot) &&
-      overBudgetCellDirs(fs, cellsRoot, maxFilesPerCell).nonEmpty &&
-      graft.engine.AtRest.compactStamped(spark, path, KnnMeta) {
-        compactCellDirs(spark, s"$path/cells", maxFilesPerCell); ()
-      }
-  }
+      path: String, maxFilesPerCell: Int = 32): Boolean =
+    AtRest.compact(KnnLayout, spark, path, maxFilesPerCell)
 
   /** Layout version folded into the kNN-index stamp so a format change
     * invalidates v-old artifact dirs instead of misreading them.
@@ -897,7 +789,8 @@ object Similarity {
     * term naming the training corpus. */
   private val KnnIndexLayoutVersion = 2
 
-  private val KnnMeta = "_graft_knn_meta"
+  private[graft] val KnnLayout = AtRest.Layout("_graft_knn_meta",
+    Seq(AtRest.Accreting("cells", cells = true)))
 
   /** The corpus half of the kNN-index stamp — everything EXCEPT which
     * corpus the centroids were trained on. [[extendKnnIndex]] keeps the
@@ -966,124 +859,94 @@ object Similarity {
     cents.write.mode("overwrite").parquet(s"$path/_centroids")
   }
 
+  /** The model half of the kNN- and IVF-index stamps: which corpus the
+    * centroids were trained on — file fingerprint AND plan hash (the
+    * fingerprint alone is constant for non-file relations, e.g. test
+    * fixtures).
+    */
+  private def knnModelPart(trainedOn: DataFrame): String =
+    corpusFingerprint(trainedOn) + ":" +
+      trainedOn.queryExecution.analyzed.semanticHash()
+
+  /** The kNN edge index family ([[writeKnnIndex]]) — the reason the v2
+    * layout partitions by cell. Its delta assigns new vectors against
+    * the AT-REST centroids (one broadcast argmax over the batch alone —
+    * the model is frozen across extensions, the standard IVF
+    * maintenance trade), and because edges are CELL-LOCAL, only the
+    * cells the batch actually lands in change: it reads base members of
+    * touched cells via partition-pruned scans, recomputes those cells'
+    * top-k edges over base∪batch members, and dynamic-partition-
+    * overwrites exactly those edge directories — per-batch work ∝ the
+    * batch and its touched-cell mass, never the corpus. The result is
+    * provably IDENTICAL to a from-scratch edge build over the union with
+    * the same centroids (cell-locality makes untouched cells' edges
+    * invariant; spec-asserted), which is what lets x138's oracle
+    * replicate it exactly: base-trained Lloyd + union assignment + cell
+    * edges. The stamp's model term is carried from the base, so chained
+    * extensions keep extending while an [[ensureKnnIndex]] over the
+    * union sees the model drift and re-trains.
+    */
+  private[graft] def knnFamily(k: Int = 5, perCell: Int = 250,
+      profile: IndexProfile = IndexProfile.Exact) =
+    AtRest.Family[Unit](KnnLayout, _ => (),
+      key = (emb, _) => knnCorpusPart(emb, k, perCell, profile),
+      model = Some(knnModelPart),
+      build = (emb, path, _) => writeKnnIndex(emb, path, k, perCell, profile),
+      delta = (_, batch, path, _) => {
+        val spark = batch.sparkSession
+        import spark.implicits._
+        // same per-vector assignment function as the seed (profile
+        // seam) — the extended-equals-from-scratch invariant per profile
+        val assignedBatch = assignWithProfile(batch,
+          readKnnCentroids(spark, path), profile).materialized
+        // bounded driver state: ≤ min(|batch|, cell count) longs — the
+        // probed-cell collect class (dim-table scale)
+        val touched = assignedBatch.select(col("cell")).distinct()
+          .as[Long].collect().sorted
+        val members = AtRest.read(spark, path, "cells")
+          .filter(col("cell").isin(touched: _*))
+          .select(col("cid"), col("embedding").as("ce"),
+            norm(col("embedding")).as("cn"),
+            col("cell").cast("long").as("cell"))
+          .unionByName(assignedBatch
+            .select(col("cid"), col("ce"), col("cn"), col("cell")))
+          .materialized
+        // r20 (guide §2.6): the touched-cell edge overwrite and the cell
+        // append are independent (different subdirs, both read only
+        // materialized inputs) — overlapped. The dynamic overwrite mode
+        // is this write's own option, never the shared session conf.
+        graft.engine.Par.all(
+          () => knnEdges(members, k).write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("cell").parquet(s"$path/edges"),
+          () => assignedBatch
+            .select(col("cid"), col("ce").as("embedding"), col("cell"))
+            .write.mode("append").partitionBy("cell")
+            .parquet(s"$path/cells"))
+      })
+
   /** [[writeKnnIndex]] only when needed — the [[ensureIvfIndex]] /
     * `Dedup.ensureDedupIndex` stamp protocol (data fingerprint + plan
     * hash + hyperparameters + layout version, written after the build,
     * compared on entry) applied to the kNN edge artifact. Returns true
     * when a (re)build happened.
     */
-  /** The model half of the kNN-index stamp: which corpus the centroids
-    * were trained on — file fingerprint AND plan hash (the fingerprint
-    * alone is constant for non-file relations, e.g. test fixtures).
-    */
-  private def knnModelPart(trainedOn: DataFrame): String =
-    corpusFingerprint(trainedOn) + ":" +
-      trainedOn.queryExecution.analyzed.semanticHash()
-
   def ensureKnnIndex(emb: DataFrame, path: String, k: Int,
       perCell: Int = 250, force: Boolean = false,
-      profile: IndexProfile = IndexProfile.Exact): Boolean = {
-    val stamp = knnCorpusPart(emb, k, perCell, profile) +
-      "|model=" + knnModelPart(emb)
-    graft.engine.AtRest.ensureStamped(emb.sparkSession, path,
-      KnnMeta, stamp, force) {
-      writeKnnIndex(emb, path, k, perCell, profile)
-    }
-  }
+      profile: IndexProfile = IndexProfile.Exact): Boolean =
+    AtRest.ensure(knnFamily(k, perCell, profile), emb, path, force)
 
-  /** Extend an at-rest [[writeKnnIndex]] with a NEW embedding batch —
-    * the `Dedup.extendDedupIndexLsh` shape for the graph family, and
-    * the reason the v2 layout partitions by cell: new vectors are
-    * assigned against the AT-REST centroids (one broadcast argmax over
-    * the batch alone — the model is frozen across extensions, the
-    * standard IVF maintenance trade), and because edges are CELL-LOCAL,
-    * only the cells the batch actually lands in change. The extension
-    * therefore reads base members of touched cells via partition-pruned
-    * scans, recomputes those cells' top-k edges over base∪batch
-    * members, and dynamic-partition-overwrites exactly those edge
-    * directories — per-batch work ∝ the batch and its touched-cell
-    * mass, never the corpus. The result is provably IDENTICAL to a
-    * from-scratch edge build over the union with the same centroids
-    * (cell-locality makes untouched cells' edges invariant;
-    * spec-asserted), which is what lets x138's oracle replicate it
-    * exactly: base-trained Lloyd + union assignment + cell edges.
-    *
-    * Stamp discipline: the base stamp comes off before the first
-    * overwrite (crash ⇒ rebuild, never a double-extend); the new stamp
-    * carries the union's corpus part with the model term UNCHANGED, so
-    * chained extensions keep extending while an [[ensureKnnIndex]] over
-    * the union sees the model drift and re-trains. Returns true when
+  /** Extend an at-rest [[writeKnnIndex]] with a NEW embedding batch
+    * (see [[knnFamily]]) — the `Dedup.extendDedupIndexLsh` shape for the
+    * graph family, with the same `unionView` contract. Returns true when
     * any build ran.
     */
   def extendKnnIndex(baseEmb: DataFrame, newEmb: DataFrame, path: String,
       k: Int, perCell: Int = 250,
       unionView: Option[DataFrame] = None,
-      profile: IndexProfile = IndexProfile.Exact): Boolean = {
-    val spark = baseEmb.sparkSession
-    import spark.implicits._
-    // canonical base ∪ batch plan for the stamp, when the caller has
-    // one (a flat multi-dir parquet read) — same contract as
-    // Dedup.extendDedupIndexLsh's unionView: rows must equal
-    // baseEmb ∪ newEmb; keeps a streaming caller's stamped plan
-    // constant-depth instead of one union deeper per micro-batch
-    val union = unionView.getOrElse(baseEmb.union(newEmb))
-    val unionCorpus = knnCorpusPart(union, k, perCell, profile)
-    val basePrefix = knnCorpusPart(baseEmb, k, perCell, profile) +
-      "|model="
-    // AtRest.extendStamped owns the stamp/crash/drift protocol; the
-    // model term rides from the base stamp into the union stamp —
-    // extensions keep the frozen model, only an ensure-over-union
-    // re-trains
-    graft.engine.AtRest.extendStamped(spark, path, KnnMeta,
-      coversUnion = _.startsWith(unionCorpus + "|model="),
-      extendFrom = stamp =>
-        if (stamp.startsWith(basePrefix))
-          Some((unionCorpus + "|model=" + stamp.substring(basePrefix.length),
-            () => {
-          val cents = readKnnCentroids(spark, path)
-          // same per-vector assignment function as the seed (profile
-          // seam) — the extended-equals-from-scratch invariant per
-          // profile
-          val assignedBatch = assignWithProfile(newEmb, cents, profile)
-            .materialized
-          // bounded driver state: ≤ min(|batch|, cell count) longs —
-          // the probed-cell collect class (dim-table scale)
-          val touched = assignedBatch.select(col("cell")).distinct()
-            .as[Long].collect().sorted
-          val baseMembers = Tables.parquet(spark, s"$path/cells")
-            .filter(col("cell").isin(touched: _*))
-            .select(col("cid"), col("embedding").as("ce"),
-              norm(col("embedding")).as("cn"),
-              col("cell").cast("long").as("cell"))
-          val members = baseMembers.unionByName(assignedBatch
-            .select(col("cid"), col("ce"), col("cn"), col("cell")))
-            .materialized
-          val prev = spark.conf
-            .getOption("spark.sql.sources.partitionOverwriteMode")
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-            "dynamic")
-          // r20 (guide §2.6): the touched-cell edge overwrite and the
-          // cell append are independent (different subdirs, both read
-          // only materialized inputs; append ignores the overwrite-mode
-          // conf) — overlapped. The conf window wraps both branches.
-          try graft.engine.Par.all(
-            () => knnEdges(members, k).write.mode("overwrite")
-              .partitionBy("cell").parquet(s"$path/edges"),
-            () => assignedBatch
-              .select(col("cid"), col("ce").as("embedding"), col("cell"))
-              .write.mode("append").partitionBy("cell")
-              .parquet(s"$path/cells"))
-          finally prev match {
-            case Some(v) => spark.conf
-              .set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => spark.conf
-              .unset("spark.sql.sources.partitionOverwriteMode")
-          }
-            }))
-        else None) {
-      ensureKnnIndex(union, path, k, perCell, profile = profile)
-    }
-  }
+      profile: IndexProfile = IndexProfile.Exact): Boolean =
+    AtRest.extend(knnFamily(k, perCell, profile), baseEmb, newEmb, path,
+      unionView)
 
   /** The at-rest edge relation of a [[writeKnnIndex]] dir — re-selected
     * to the canonical (cid, cell, nid, cos) shape with the partition
@@ -1092,17 +955,18 @@ object Similarity {
     */
   def readKnnEdges(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    Tables.parquet(spark, s"$path/edges")
+    AtRest.read(spark, path, "edges")
       .select(col("cid"), col("cell").cast("long").as("cell"),
         col("nid"), col("cos"))
 
-  /** The trained-centroid sidecar of a [[writeKnnIndex]] dir — the
-    * (vec_id, embedding) shape every `centroids` parameter takes, so a
-    * cold consumer can reuse the trained model without re-running Lloyd
-    * (the cross-JVM face of the session centroid memo).
+  /** The trained-centroid sidecar of a [[writeKnnIndex]] or
+    * [[writeIvfIndex]] dir — the (vec_id, embedding) shape every
+    * `centroids` parameter takes, so a cold consumer can reuse the
+    * trained model without re-running Lloyd (the cross-JVM face of the
+    * session centroid memo).
     */
   def readKnnCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = Tables.parquet(spark, s"$path/_centroids")
+      path: String): DataFrame = AtRest.read(spark, path, "_centroids")
 
   /** Probe a [[writeIvfIndex]] table. The probed cell ids are collected
     * to literals — nprobe × |query batch| longs, the same bounded driver
@@ -1115,7 +979,7 @@ object Similarity {
       nprobe: Int = 0, probeFrac: Double = probeFracDefault): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val centDf = Tables.parquet(spark, s"$indexPath/_centroids")
+    val centDf = readKnnCentroids(spark, indexPath)
     val cent = centroidRelation(centDf)
     // nprobe ≤ 0 (the default) = ADAPTIVE: probe width derived from the
     // at-rest index's own cell count via [[adaptiveNprobe]], holding
@@ -1169,8 +1033,7 @@ object Similarity {
       s"bad topKIvfIndexedMass args: $massFrac, $floor")
     val spark = queries.sparkSession
     import spark.implicits._
-    val cent = centroidRelation(
-      Tables.parquet(spark, s"$indexPath/_centroids"))
+    val cent = centroidRelation(readKnnCentroids(spark, indexPath))
     // per-cell loads: reads ONLY the `cell` partition column —
     // footer/metadata-bound at any index size (ivfCellLoadStats'
     // property), k rows out
@@ -1268,38 +1131,6 @@ object Similarity {
     */
   val refreshImbalanceDefault = 8.0
 
-  /** Distributed Lloyd k-means refinement for IVF centroids. Init is the
-    * deterministic first-N (same as [[topKIvf]]'s default); each
-    * iteration assigns every vector to its nearest centroid by cosine
-    * and recomputes cell means per dimension (posexplode → per-(cell,
-    * dim) mean → array reassembly), i.e. two narrow shuffles per
-    * iteration keyed on (cell, dim) — the textbook scalable k-means
-    * shape (k-means|| init would slot in the same way). A cell that
-    * loses all members simply disappears (fewer, better-shaped cells).
-    * Output schema matches the corpus (`vec_id` = cell id, `embedding`),
-    * so it drops straight into [[topKIvf]]'s `centroids` override.
-    *
-    * The centroid relation is k×d floats — dim-class driver state (the
-    * PQ codebook's class) — so each iteration COLLECTS it and inlines
-    * the next assignment as literal-array expressions: the per-vector
-    * argmax is pure whole-stage codegen (k [[graft.functions.VecDot]]
-    * calls against constant arrays, centroid norms constant-folded), no
-    * broadcast exchange and no join anywhere in the loop. Besides being
-    * the cheapest map-side shape at 100 TB, this keeps consumers free:
-    * the returned relation is k local rows, never a lazy training chain
-    * re-run at every downstream use (the join-based form cost x15 the
-    * full 3-iteration lineage per reference — measured 5.2 s vs 2.8 s
-    * for the identical result).
-    *
-    * Fully engine-portable so the DuckDB oracle can unroll the identical
-    * iterations (ExtQueries.kmeansCte): assignment cosines are rounded to
-    * 6 digits with the low-id tie-break (same convention as [[topKIvf]];
-    * `array_max` over (cc, -id) structs = the former max_by), and the
-    * per-dimension mean is computed over values quantized to 1e-6
-    * — an exact BIGINT sum (order-independent, unlike a parallel double
-    * sum) followed by two IEEE double divisions and a float cast, each
-    * bit-deterministic in both engines.
-    */
   /** Session-lifetime memo of trained centroid sets, keyed by the
     * corpus's canonicalized plan hash + hyperparameters. Training is
     * deterministic, so reuse is exact — the trained index is the same
@@ -1356,24 +1187,6 @@ object Similarity {
       newCorpus.queryExecution.analyzed.semanticHash() + ":"
     s => if (s.startsWith(o)) Some(n + s.substring(o.length)) else None
   }
-
-  /** Move an at-rest kNN index's stamp from `oldCorpus`'s read plan to
-    * `newCorpus`'s — rows must be identical (a landed-corpus
-    * consolidation). The artifact and its frozen model are untouched;
-    * returns false when the stamp is absent or foreign.
-    */
-  def restampKnnIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, oldCorpus: DataFrame,
-      newCorpus: DataFrame): Boolean =
-    graft.engine.AtRest.restampIf(spark, path, KnnMeta)(
-      corpusPrefixRewrite(oldCorpus, newCorpus))
-
-  /** [[restampKnnIndex]] for the IVF corpus artifact. */
-  def restampIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, oldCorpus: DataFrame,
-      newCorpus: DataFrame): Boolean =
-    graft.engine.AtRest.restampIf(spark, path, IvfMeta)(
-      corpusPrefixRewrite(oldCorpus, newCorpus))
 
   /** Invalidation hook for callers that mutate inputs out-of-band in ways
     * the (plan, file-metadata) key cannot see — e.g. an object store that
@@ -1483,6 +1296,38 @@ object Similarity {
     math.min(nCells, math.max(floor, math.ceil(nCells * frac).toInt))
   }
 
+  /** Distributed Lloyd k-means refinement for IVF centroids. Init is the
+    * deterministic first-N (same as [[topKIvf]]'s default); each
+    * iteration assigns every vector to its nearest centroid by cosine
+    * and recomputes cell means per dimension (posexplode → per-(cell,
+    * dim) mean → array reassembly), i.e. two narrow shuffles per
+    * iteration keyed on (cell, dim) — the textbook scalable k-means
+    * shape (k-means|| init would slot in the same way). A cell that
+    * loses all members simply disappears (fewer, better-shaped cells).
+    * Output schema matches the corpus (`vec_id` = cell id, `embedding`),
+    * so it drops straight into [[topKIvf]]'s `centroids` override.
+    *
+    * The centroid relation is k×d floats — dim-class driver state (the
+    * PQ codebook's class) — so each iteration COLLECTS it and inlines
+    * the next assignment as literal-array expressions: the per-vector
+    * argmax is pure whole-stage codegen (k [[graft.functions.VecDot]]
+    * calls against constant arrays, centroid norms constant-folded), no
+    * broadcast exchange and no join anywhere in the loop. Besides being
+    * the cheapest map-side shape at 100 TB, this keeps consumers free:
+    * the returned relation is k local rows, never a lazy training chain
+    * re-run at every downstream use (the join-based form cost x15 the
+    * full 3-iteration lineage per reference — measured 5.2 s vs 2.8 s
+    * for the identical result).
+    *
+    * Fully engine-portable so the DuckDB oracle can unroll the identical
+    * iterations (ExtQueries.kmeansCte): assignment cosines are rounded to
+    * 6 digits with the low-id tie-break (same convention as [[topKIvf]];
+    * `array_max` over (cc, -id) structs = the former max_by), and the
+    * per-dimension mean is computed over values quantized to 1e-6
+    * — an exact BIGINT sum (order-independent, unlike a parallel double
+    * sum) followed by two IEEE double divisions and a float cast, each
+    * bit-deterministic in both engines.
+    */
   def trainCentroids(corpus: DataFrame, nCentroids: Int = 8,
       iters: Int = 3, init: String = "first"): DataFrame = {
     val spark = corpus.sparkSession

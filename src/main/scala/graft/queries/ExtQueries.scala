@@ -1937,7 +1937,7 @@ object ExtQueries {
     // verdict #5 — "every default rides the gate"): x153's drift
     // relation extended with the threshold comparison and the
     // futility-slack arithmetic the streaming maintenance step
-    // actually evaluates (Streams.ivfExtendAndCompact). The literals
+    // actually evaluates (Streams.ivfPolicy). The literals
     // come from the SAME constants the policy reads
     // (Similarity.refreshImbalanceDefault, Streams.FutileSlack), so a
     // default change moves this query's rows and the DuckDB hash

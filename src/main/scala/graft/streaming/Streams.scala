@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.engine.Tables
+import graft.engine.{AtRest, Tables}
+import graft.ext.{Dedup, Similarity}
 import graft.fhir.{BundleIngest, Schemas}
 
 /** Structured-Streaming variants (SURVEY §7.4-7 — extension; the reference
@@ -355,6 +356,36 @@ object Streams {
 
   // ---- streaming at-rest index maintenance ------------------------------
 
+  /** One at-rest index a maintenance stream keeps fresh: a
+    * [[graft.engine.AtRest.Family]] at `path` whose accreting relations
+    * self-compact past `budget` files after every extension (each
+    * micro-batch appends a file set, so a long-lived stream would
+    * otherwise accrete tiny files without bound; the no-op pre-check is
+    * one listStatus per batch). `around` is a family's own step policy
+    * wrapped around its extension — IVF's retrain adoption and refresh;
+    * by default it just runs the extension.
+    */
+  private[graft] final case class Maintained(family: AtRest.Family[_],
+      path: String, budget: Int,
+      around: (DataFrame, DataFrame, Option[DataFrame], () => Unit) => Unit =
+        (_, _, _, extend) => extend()) {
+
+    def ensure(corpus: DataFrame): Unit = {
+      AtRest.ensure(family, corpus, path, force = false); ()
+    }
+
+    def extend(base: DataFrame, batch: DataFrame,
+        union: Option[DataFrame]): Unit =
+      around(base, batch, union, () => {
+        AtRest.extend(family, base, batch, path, union)
+        AtRest.compact(family.layout, base.sparkSession, path, budget); ()
+      })
+
+    def restamp(oldCorpus: DataFrame, newCorpus: DataFrame): Boolean =
+      AtRest.restamp(family.layout, oldCorpus.sparkSession, path)(
+        Similarity.corpusPrefixRewrite(oldCorpus, newCorpus))
+  }
+
   /** Keep the at-rest LSH dedup index (x137's artifact) FRESH as a
     * document stream lands — the daily-crawl loop collapsed to a
     * micro-batch cadence: each batch is persisted under
@@ -362,37 +393,16 @@ object Streams {
     * fingerprint them), then either seeds the index
     * ([[graft.ext.Dedup.ensureDedupIndexLsh]]) or extends it
     * ([[graft.ext.Dedup.extendDedupIndexLsh]] — banded-key probe, work
-    * ∝ the batch). The driver tracks the LANDED DIRECTORY LIST, not a
-    * chained-union DataFrame: base is one flat
-    * `Tables.parquet(spark, dirs: _*)` scan each batch, so the analyzed
-    * plan the stamp hashes stays constant-depth at any stream lifetime
-    * (a per-batch `base.union(landed)` chain made stamp analysis — and
-    * analyzer memory — grow linearly in batch count), and the
-    * `unionView` passed to the extension is the same flat read over
-    * dirs ∪ {new}, which is exactly the base plan the NEXT batch
-    * constructs — so stamps keep matching and the run never re-probes
-    * base×base.
-    *
-    * Restart semantics ([[dedupIndexBatch]]): the first batch of a
-    * (re)started query LISTS the existing `corpusDir/b*` directories
-    * and EXTENDS from them — after a clean shutdown the at-rest stamp
-    * still matches the flat read over the landed prefix, so recovery
-    * is one ordinary incremental step, never a rebuild of a corpus
-    * 1000× the batch. A drifted or torn prefix falls through to a
-    * full rebuild COVERING every landed batch (the crash-safe floor;
-    * previously a post-restart rebuild covered only the replayed
-    * micro-batch and every earlier landed batch silently dropped out).
+    * ∝ the batch). Landed-dir lineage and restart semantics are
+    * [[indexMaintenanceBatch]]'s.
     */
   def dedupIndexStream(docs: DataFrame, corpusDir: String,
       indexPath: String, checkpoint: String,
       dfSidecar: Boolean = true): StreamingQuery =
     indexMaintenanceStream(docs, corpusDir, checkpoint,
-      ensure = dedupEnsure(indexPath, dfSidecar),
-      extend = dedupExtend(indexPath, dfSidecar),
-      restamp = Some((o, n) => graft.ext.Dedup
-        .restampDedupIndexLsh(o.sparkSession, indexPath, o, n)))
+      dedupIndexes(indexPath, dfSidecar))
 
-  /** The dedup face's (ensure, extend): the LSH key index plus — when
+  /** The dedup face's indexes: the LSH key index plus — when
     * `dfSidecar` (the default) — the corpus shingle-df sidecar
     * (`_dfindex`, underscore-named so parquet directory reads of the
     * index skip it) maintained in the same step. The sidecar is the
@@ -408,42 +418,13 @@ object Streams {
     * keep it on when auto probes run against the stream's corpus and
     * switch it off for pure dedup pipelines.
     */
-  private def dedupEnsure(indexPath: String,
-      dfSidecar: Boolean): DataFrame => Boolean =
-    docs => {
-      val built = graft.ext.Dedup.ensureDedupIndexLsh(docs, indexPath)
-      if (dfSidecar)
-        graft.ext.Dedup.ensureShingleDfIndex(docs,
-          s"$indexPath/_dfindex")
-      built
-    }
-
-  private def dedupExtend(indexPath: String, dfSidecar: Boolean,
+  private def dedupIndexes(indexPath: String, dfSidecar: Boolean,
       dfMaxShards: Int = DfSidecarMaxShards,
-      bandMaxShards: Int = BandMaxShards)
-      : (DataFrame, DataFrame, Option[DataFrame]) => Boolean =
-    (base, batch, union) => {
-      val built = graft.ext.Dedup.extendDedupIndexLsh(base, batch,
-        indexPath, unionView = union)
-      // the LSH key relation accretes one file set per batch; past the
-      // shard budget, re-bucket it under the same stamp (rows
-      // unchanged) so reader cost stays bounded at any stream lifetime
-      graft.ext.Dedup.compactDedupIndexLsh(base.sparkSession,
-        indexPath, bandMaxShards)
-      if (dfSidecar) {
-        val sidecar = s"$indexPath/_dfindex"
-        graft.ext.Dedup.extendShingleDfIndex(base, batch, sidecar,
-          unionView = union)
-        // self-maintenance: a stream accretes shard files per batch;
-        // past the budget, compact to the pre-merged relation under
-        // the same stamp so reader cost stays bounded at any stream
-        // lifetime (one cheap listStatus per batch buys it)
-        if (dfShardCount(base.sparkSession, sidecar) > dfMaxShards)
-          graft.ext.Dedup.compactShingleDfIndex(base.sparkSession,
-            sidecar)
-      }
-      built
-    }
+      bandMaxShards: Int = BandMaxShards): Seq[Maintained] =
+    Maintained(Dedup.dedupLshFamily(), indexPath, bandMaxShards) +:
+      (if (!dfSidecar) Nil
+       else Seq(Maintained(Dedup.dfFamily(), s"$indexPath/_dfindex",
+         dfMaxShards)))
 
   /** Shard-file budget before the streaming df sidecar self-compacts:
     * each micro-batch appends up to `shuffle.partitions` part files,
@@ -471,25 +452,8 @@ object Streams {
     */
   private[graft] val CellFileBudget = 32
 
-  private def dfShardCount(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path, "df")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    try fs.listStatus(p)
-      .count(_.getPath.getName.endsWith(".parquet"))
-    catch { case _: java.io.FileNotFoundException => 0 }
-  }
-
-  /** One [[dedupIndexStream]] maintenance step, factored out of the
-    * foreachBatch closure so recovery is directly testable. With no
-    * in-memory dir list (the first batch of a (re)started query), the
-    * landed `b*` dirs are LISTED and — when any predate this batch —
-    * the step EXTENDS from them: a cleanly-shut-down stream resumes
-    * incrementally (the at-rest stamp still matches the flat read over
-    * the landed prefix), never re-paying a full rebuild of a corpus
-    * that may be 1000× the batch. A drifted or torn prefix falls
-    * through extendStamped's rebuild arm to an ensure over the WHOLE
-    * landed corpus — the crash-safe floor. Returns the updated list.
+  /** One [[dedupIndexStream]] maintenance step (see
+    * [[indexMaintenanceBatch]]). Returns the updated landed list.
     */
   private[graft] def dedupIndexBatch(
       spark: org.apache.spark.sql.SparkSession, corpusDir: String,
@@ -500,11 +464,7 @@ object Streams {
       bandMaxShards: Int = BandMaxShards,
       maxLandedDirs: Int = LandedDirBudget): Vector[String] =
     indexMaintenanceBatch(spark, corpusDir, newDir, prev,
-      ensure = dedupEnsure(indexPath, dfSidecar),
-      extend = dedupExtend(indexPath, dfSidecar, dfMaxShards,
-        bandMaxShards),
-      restamp = Some((o, n) => graft.ext.Dedup
-        .restampDedupIndexLsh(spark, indexPath, o, n)),
+      dedupIndexes(indexPath, dfSidecar, dfMaxShards, bandMaxShards),
       maxLandedDirs = maxLandedDirs)
 
   /** [[dedupIndexStream]]'s discipline applied to the at-rest kNN
@@ -515,12 +475,9 @@ object Streams {
     * [[graft.ext.Similarity.extendKnnIndex]] — the batch assigned
     * against the FROZEN base centroids, only touched cells' edges
     * recomputed, so per-batch work is ∝ batch + touched-cell mass,
-    * never a re-train. Base is a flat `Tables.parquet(spark, dirs: _*)`
-    * each batch with the flat union passed as `unionView`, so stamps
-    * stay constant-depth and keep matching across any stream lifetime.
-    * Model refresh stays an OFFLINE decision (an ensure over the union
-    * re-trains — the x138 discipline), exactly the standard IVF
-    * maintenance trade.
+    * never a re-train. Model refresh stays an OFFLINE decision (an
+    * ensure over the union re-trains — the x138 discipline), exactly
+    * the standard IVF maintenance trade.
     */
   def knnIndexStream(emb: DataFrame, corpusDir: String,
       indexPath: String, checkpoint: String, k: Int = 5,
@@ -528,34 +485,11 @@ object Streams {
       profile: graft.ext.IndexProfile = graft.ext.IndexProfile.Production())
       : StreamingQuery =
     indexMaintenanceStream(emb, corpusDir, checkpoint,
-      ensure = graft.ext.Similarity.ensureKnnIndex(_, indexPath, k,
-        perCell, profile = profile),
-      extend = knnExtendAndCompact(indexPath, k, perCell, profile),
-      restamp = Some((o, n) => graft.ext.Similarity
-        .restampKnnIndex(o.sparkSession, indexPath, o, n)))
+      Seq(Maintained(Similarity.knnFamily(k, perCell, profile), indexPath,
+        CellFileBudget)))
 
-  /** The kNN face's extend step plus self-maintenance: every extension
-    * appends one file set into its touched `cells/cell=` partitions,
-    * so a long-lived stream accretes tiny files without bound; past
-    * [[CellFileBudget]] files in any cell the member relation
-    * self-compacts (over-budget cells only — work ∝ their mass, the
-    * same localized discipline as the extension itself; the no-op
-    * pre-check is one listStatus per batch, the df sidecar's price).
-    */
-  private def knnExtendAndCompact(indexPath: String, k: Int,
-      perCell: Int, profile: graft.ext.IndexProfile,
-      cellFileBudget: Int = CellFileBudget)
-      : (DataFrame, DataFrame, Option[DataFrame]) => Boolean =
-    (base, batch, union) => {
-      val built = graft.ext.Similarity.extendKnnIndex(base, batch,
-        indexPath, k, perCell, unionView = union, profile = profile)
-      graft.ext.Similarity.compactKnnIndex(base.sparkSession,
-        indexPath, cellFileBudget)
-      built
-    }
-
-  /** [[dedupIndexBatch]]'s recovery discipline for the kNN family —
-    * the incremental-resume property matters MOST here: a restarted
+  /** [[indexMaintenanceBatch]] for the kNN family — the
+    * incremental-resume property matters MOST here: a restarted
     * stream that re-ensured over the landed corpus would re-train the
     * whole model (the training elephant), where extending from the
     * landed prefix keeps the frozen at-rest centroids and pays only
@@ -570,23 +504,20 @@ object Streams {
       maxLandedDirs: Int = LandedDirBudget)
       : Vector[String] =
     indexMaintenanceBatch(spark, corpusDir, newDir, prev,
-      ensure = graft.ext.Similarity.ensureKnnIndex(_, indexPath, k,
-        perCell, profile = profile),
-      extend = knnExtendAndCompact(indexPath, k, perCell, profile,
-        cellFileBudget),
-      restamp = Some((o, n) => graft.ext.Similarity
-        .restampKnnIndex(spark, indexPath, o, n)),
+      Seq(Maintained(Similarity.knnFamily(k, perCell, profile), indexPath,
+        cellFileBudget)),
       maxLandedDirs = maxLandedDirs)
 
-  /** The third at-rest artifact kind's streaming face — the IVF corpus
-    * (x44/x139): each embedding micro-batch lands under
-    * `corpusDir/b<id>`, the first batch of a (re)started query seeds
+  /** The IVF corpus artifact's streaming face (x44/x139): each
+    * embedding micro-batch lands under `corpusDir/b<id>`, the first
+    * batch of a (re)started query seeds
     * [[graft.ext.Similarity.ensureIvfIndex]] over every landed dir, and
     * later batches run [[graft.ext.Similarity.extendIvfIndex]] — the
     * batch assigned against the FROZEN centroids and APPENDED into its
     * `cell=` partitions; old rows never move, so this is the lightest
-    * of the three maintenance loops (no derived edges to recompute).
-    * Same flat landed-dir lineage as [[dedupIndexStream]].
+    * of the maintenance loops (no derived edges to recompute). Its
+    * step policy ([[ivfPolicy]]) adopts finished background retrains
+    * and re-trains a drifted model.
     */
   def ivfIndexStream(emb: DataFrame, corpusDir: String,
       indexPath: String, checkpoint: String, nCentroids: Int = 8,
@@ -594,36 +525,32 @@ object Streams {
       profile: graft.ext.IndexProfile = graft.ext.IndexProfile.Production())
       : StreamingQuery =
     indexMaintenanceStream(emb, corpusDir, checkpoint,
-      ensure = graft.ext.Similarity.ensureIvfIndex(_, indexPath,
-        nCentroids, iters, profile = profile),
-      extend = ivfExtendAndCompact(indexPath, nCentroids, iters,
-        profile),
-      restamp = Some((o, n) => graft.ext.Similarity
-        .restampIvfIndex(o.sparkSession, indexPath, o, n)))
+      Seq(ivfMaintained(indexPath, nCentroids, iters, profile)))
 
-  /** [[knnExtendAndCompact]] for the IVF corpus artifact (its root
-    * `cell=` partitions are the accreting relation).
-    */
-  private def ivfExtendAndCompact(indexPath: String, nCentroids: Int,
+  private def ivfMaintained(indexPath: String, nCentroids: Int,
       iters: Int, profile: graft.ext.IndexProfile,
       cellFileBudget: Int = CellFileBudget,
       refreshImbalance: Option[Double] =
-        Some(graft.ext.Similarity.refreshImbalanceDefault),
-      refreshAsync: Boolean = true)
-      : (DataFrame, DataFrame, Option[DataFrame]) => Boolean =
-    (base, batch, union) => {
+        Some(Similarity.refreshImbalanceDefault),
+      refreshAsync: Boolean = true): Maintained =
+    Maintained(Similarity.ivfFamily(nCentroids, iters, profile), indexPath,
+      cellFileBudget, ivfPolicy(indexPath, nCentroids, iters, profile,
+        refreshImbalance, refreshAsync))
+
+  /** The IVF face's step policy around each extension. A background
+    * retrain that finished since the last step is adopted FIRST, so
+    * this batch extends the fresh model; its futility bookkeeping reads
+    * the same threshold as the breach check after the extension.
+    */
+  private def ivfPolicy(indexPath: String, nCentroids: Int,
+      iters: Int, profile: graft.ext.IndexProfile,
+      refreshImbalance: Option[Double], refreshAsync: Boolean)
+      : (DataFrame, DataFrame, Option[DataFrame], () => Unit) => Unit =
+    (base, batch, union, extend) => {
       val spark = base.sparkSession
-      // a background retrain that finished since the last step is
-      // adopted FIRST, so this batch extends the fresh model; its
-      // futility bookkeeping reads the same threshold as the breach
-      // check below
       adoptIvfRetrain(spark, indexPath, rootDirs(base), nCentroids,
         iters, profile, refreshImbalance)
-      val built = graft.ext.Similarity.extendIvfIndex(base, batch,
-        indexPath, nCentroids, iters, unionView = union,
-        profile = profile)
-      graft.ext.Similarity.compactIvfIndex(spark, indexPath,
-        cellFileBudget)
+      extend()
       // refresh policy (DEFAULT-ON since round 17 at the measured
       // threshold — Similarity.refreshImbalanceDefault's scaladoc
       // carries the recall-vs-cost curve): once extensions have
@@ -700,7 +627,6 @@ object Streams {
               }
           }
         }
-      built
     }
 
   /** How far past a proven-futile imbalance the load must grow before
@@ -864,7 +790,7 @@ object Streams {
           // missing-dir between the two renames — the documented cost
           // of a swap-based layout without pointer indirection.
           graft.engine.AtRest.withMutationLease(spark, indexPath,
-            graft.ext.Similarity.IvfMeta) {
+            graft.ext.Similarity.IvfLayout.meta) {
           var covered = job.snapshot
           catchUp.foreach { d =>
             graft.ext.Similarity.extendIvfIndex(
@@ -889,13 +815,13 @@ object Streams {
           try fs.delete(retired, true)
           catch { case _: java.io.IOException => () }
           val liveStamp = graft.engine.AtRest.readStamp(spark, indexPath,
-            graft.ext.Similarity.IvfMeta)
+            graft.ext.Similarity.IvfLayout.meta)
           graft.engine.AtRest.deleteStamp(spark, indexPath,
-            graft.ext.Similarity.IvfMeta)
+            graft.ext.Similarity.IvfLayout.meta)
           if (!fs.rename(live, retired)) {
             liveStamp.foreach { st =>
               graft.engine.AtRest.ensureStamped(spark, indexPath,
-                graft.ext.Similarity.IvfMeta, st, force = true) {}
+                graft.ext.Similarity.IvfLayout.meta, st, force = true) {}
             }
             log.warn(s"async IVF retrain for $indexPath: could not " +
               "retire the live index — keeping it; the side index " +
@@ -989,7 +915,7 @@ object Streams {
     catch { case _: java.io.IOException => () }
   }
 
-  /** [[dedupIndexBatch]]'s recovery discipline for the IVF family. */
+  /** [[indexMaintenanceBatch]] for the IVF family. */
   private[graft] def ivfIndexBatch(
       spark: org.apache.spark.sql.SparkSession, corpusDir: String,
       newDir: String, prev: Option[Vector[String]], indexPath: String,
@@ -1002,24 +928,19 @@ object Streams {
       refreshAsync: Boolean = true)
       : Vector[String] =
     indexMaintenanceBatch(spark, corpusDir, newDir, prev,
-      ensure = graft.ext.Similarity.ensureIvfIndex(_, indexPath,
-        nCentroids, iters, profile = profile),
-      extend = ivfExtendAndCompact(indexPath, nCentroids, iters,
-        profile, cellFileBudget, refreshImbalance, refreshAsync),
-      restamp = Some((o, n) => graft.ext.Similarity
-        .restampIvfIndex(spark, indexPath, o, n)),
+      Seq(ivfMaintained(indexPath, nCentroids, iters, profile,
+        cellFileBudget, refreshImbalance, refreshAsync)),
       maxLandedDirs = maxLandedDirs)
 
-  /** The FOURTH artifact kind's streaming face — the CDC containment
-    * index (x140/x142): each document micro-batch lands under
-    * `corpusDir/b<id>`, the first batch of a (re)started query seeds
+  /** The CDC containment index's streaming face (x140/x142): each
+    * document micro-batch lands under `corpusDir/b<id>`, the first
+    * batch of a (re)started query seeds
     * [[graft.ext.Dedup.ensureCdcIndex]] over every landed dir, and
     * later batches run [[graft.ext.Dedup.extendCdcIndex]] — the batch
     * chunked ALONE (per-document boundaries make the chunk relation
     * exactly mergeable) and the dup-bounded pair stage re-run over the
     * skinny persisted chunks, with the cap + denominators recomputed
-    * over the union exactly as from-scratch. Same flat landed-dir
-    * lineage and restart-resume semantics as the other three faces.
+    * over the union exactly as from-scratch.
     */
   def cdcIndexStream(docs: DataFrame, corpusDir: String,
       indexPath: String, checkpoint: String, p: Int = 8,
@@ -1027,44 +948,9 @@ object Streams {
       maxDf: Option[Long] = Some(100L),
       chunkMaxShards: Int = ChunkMaxShards): StreamingQuery =
     indexMaintenanceStream(docs, corpusDir, checkpoint,
-      ensure = graft.ext.Dedup.ensureCdcIndex(_, indexPath, p,
-        threshold, maxDf),
-      extend = cdcExtendAndCompact(indexPath, p, threshold, maxDf,
-        chunkMaxShards),
-      restamp = Some((o, n) => graft.ext.Dedup
-        .restampCdcIndex(o.sparkSession, indexPath, o, n)))
+      Seq(Maintained(Dedup.cdcFamily(p, threshold, maxDf), indexPath,
+        chunkMaxShards)))
 
-  /** The CDC face's extend plus self-maintenance: the persisted chunk
-    * relation accretes one file set per batch; past the shard budget
-    * it is re-bucketed under the same stamp (rows unchanged).
-    */
-  private def cdcExtendAndCompact(indexPath: String, p: Int,
-      threshold: Double, maxDf: Option[Long], chunkMaxShards: Int)
-      : (DataFrame, DataFrame, Option[DataFrame]) => Boolean =
-    (base, batch, union) => {
-      val built = graft.ext.Dedup.extendCdcIndex(base, batch,
-        indexPath, p, threshold, maxDf, unionView = union)
-      graft.ext.Dedup.compactCdcIndex(base.sparkSession, indexPath,
-        chunkMaxShards)
-      built
-    }
-
-  /** THE at-rest index maintenance step, shared by all four artifact
-    * kinds (dedup LSH keys / kNN edges / IVF corpus / CDC containment
-    * chunks) — one place for
-    * the land→flat-read→seed-or-extend shape, parameterized by the
-    * family's (ensure, extend) the way
-    * [[graft.engine.AtRest.extendStamped]] unified the extenders.
-    * With no in-memory dir list (the first batch of a (re)started
-    * query) the landed `b*` dirs are LISTED and — when any predate
-    * this batch — the step EXTENDS from them: a cleanly-shut-down
-    * stream resumes incrementally (the at-rest stamp still matches the
-    * flat read over the landed prefix), never re-paying a full rebuild
-    * (for the kNN family, a re-TRAIN) of a corpus that may be 1000×
-    * the batch. A drifted or torn prefix falls through extendStamped's
-    * rebuild arm to an ensure over the WHOLE landed corpus — the
-    * crash-safe floor. Returns the updated landed list.
-    */
   /** Bounded retry for a lease REFUSAL inside one maintenance step —
     * fail-fast is right for a batch job, but a streaming micro-batch
     * that collides with an offline `ensure` over the same index must
@@ -1078,26 +964,49 @@ object Streams {
   private[graft] val LeaseRetryDefault = 3
   private[graft] val LeaseBackoffMsDefault = 2000L
 
+  /** THE at-rest index maintenance step, shared by every streaming
+    * face: land→flat-read→seed-or-extend over the face's
+    * [[Maintained]] indexes, in order. The driver tracks the LANDED
+    * DIRECTORY LIST, not a chained-union DataFrame: base is one flat
+    * `Tables.parquet(spark, dirs: _*)` scan each batch, so the analyzed
+    * plan the stamps hash stays constant-depth at any stream lifetime
+    * (a per-batch `base.union(landed)` chain made stamp analysis — and
+    * analyzer memory — grow linearly in batch count), and the union
+    * view handed to each extension is the same flat read over
+    * dirs ∪ {new}, which is exactly the base plan the NEXT batch
+    * constructs — so stamps keep matching.
+    *
+    * With no in-memory dir list (the first batch of a (re)started
+    * query) the landed `b*` dirs are LISTED and — when any predate
+    * this batch — the step EXTENDS from them: a cleanly-shut-down
+    * stream resumes incrementally (the at-rest stamp still matches the
+    * flat read over the landed prefix), never re-paying a full rebuild
+    * (for the kNN family, a re-TRAIN) of a corpus that may be 1000×
+    * the batch. A drifted or torn prefix falls through the extension's
+    * rebuild arm to an ensure over the WHOLE landed corpus — the
+    * crash-safe floor. Past `maxLandedDirs` the landed dirs are
+    * consolidated and every index restamped ([[consolidateLanded]]).
+    * Returns the updated landed list.
+    */
   private[graft] def indexMaintenanceBatch(
       spark: org.apache.spark.sql.SparkSession, corpusDir: String,
       newDir: String, prev: Option[Vector[String]],
-      ensure: DataFrame => Boolean,
-      extend: (DataFrame, DataFrame, Option[DataFrame]) => Boolean,
+      indexes: Seq[Maintained],
       leaseRetries: Int = LeaseRetryDefault,
       leaseBackoffMs: Long = LeaseBackoffMsDefault,
-      restamp: Option[(DataFrame, DataFrame) => Boolean] = None,
       maxLandedDirs: Int = LandedDirBudget): Vector[String] = {
     val newQ = qualifiedDir(spark, newDir)
     val landed = prev.map(_ :+ newQ)
       .getOrElse(landedBatchDirs(spark, corpusDir))
     val base = landed.filterNot(_ == newQ)
     def step(): Unit = {
-      if (base.isEmpty)
-        ensure(Tables.parquet(spark, landed: _*))
-      else
-        extend(Tables.parquet(spark, base: _*), Tables.parquet(spark, newQ),
-          Some(Tables.parquet(spark, landed: _*)))
-      ()
+      val all = Tables.parquet(spark, landed: _*)
+      if (base.isEmpty) indexes.foreach(_.ensure(all))
+      else {
+        val b = Tables.parquet(spark, base: _*)
+        val n = Tables.parquet(spark, newQ)
+        indexes.foreach(_.extend(b, n, Some(all)))
+      }
     }
     @annotation.tailrec
     def attempt(left: Int): Unit = {
@@ -1121,57 +1030,37 @@ object Streams {
     attempt(leaseRetries)
     // corpus-side self-maintenance: past the dir budget, fold the b
     // tail into one consolidated dir and move the stamps to the new
-    // plan ([[consolidateLanded]]) — keeps the per-batch
-    // listing/fingerprint metadata cost bounded at any stream lifetime
-    restamp match {
-      case Some(r) if landed.size > maxLandedDirs =>
-        consolidateLanded(spark, corpusDir, landed, r)
-      case _ => landed
-    }
+    // plan — keeps the per-batch listing/fingerprint metadata cost
+    // bounded at any stream lifetime. The first index's outcome
+    // decides the fold; the others follow it (a foreign stamp there
+    // only means a rebuild on its next extension).
+    if (landed.size <= maxLandedDirs) landed
+    else consolidateLanded(spark, corpusDir, landed,
+      (o, n) => indexes.map(_.restamp(o, n)).head)
   }
 
-  /** The foreachBatch driver shared by the three `*IndexStream` faces:
-    * land the micro-batch under `corpusDir/b<id>` (stable files, so
-    * the index stamps can fingerprint them), then run one
+  /** The foreachBatch driver shared by the `*IndexStream` faces: land
+    * the micro-batch under `corpusDir/b<id>` (stable files, so the
+    * index stamps can fingerprint them), then run one
     * [[indexMaintenanceBatch]] step, threading the landed-dir list
-    * through the closure so every batch's base is one flat
-    * constant-depth `Tables.parquet(spark, dirs: _*)` plan.
+    * through the closure.
     */
   private def indexMaintenanceStream(src: DataFrame, corpusDir: String,
-      checkpoint: String, ensure: DataFrame => Boolean,
-      extend: (DataFrame, DataFrame, Option[DataFrame]) => Boolean,
-      restamp: Option[(DataFrame, DataFrame) => Boolean] = None)
-      : StreamingQuery = {
+      checkpoint: String, indexes: Seq[Maintained]): StreamingQuery = {
     claimCorpusOwner(src.sparkSession, corpusDir, checkpoint)
     var dirs: Option[Vector[String]] = None
     src.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
         val newDir = s"$corpusDir/b$id"
         batch.write.mode("overwrite").parquet(newDir)
-        dirs = Some(indexMaintenanceBatch(spark, corpusDir, newDir,
-          dirs, ensure, extend, restamp = restamp))
+        dirs = Some(indexMaintenanceBatch(batch.sparkSession, corpusDir,
+          newDir, dirs, indexes))
         ()
       }
       .start()
   }
 
-  /** One landed corpus dir ↔ one stream: two *IndexStream queries
-    * landing into the same `corpusDir` would interleave `b<id>`
-    * allocation — each stream's checkpoint numbers its OWN micro-
-    * batches from 0, so the second stream's `b0` overwrite-lands on
-    * top of the first's (silent row loss before consolidation even
-    * enters the picture). The contract is therefore claimed at stream
-    * START, fail-fast and typed: a `_graft_owner` sidecar records the
-    * owning CHECKPOINT location. A restart (same checkpoint) re-claims
-    * its own corpus — restart-resume semantics are untouched, and
-    * there is no TTL to misjudge a long gap between runs — while a
-    * different stream is refused before its first trigger. Taking
-    * over an abandoned corpus is an explicit operator action (delete
-    * the sidecar), mirroring Structured Streaming's own
-    * one-checkpoint-one-query exclusivity model.
-    */
   /** A stream's owner identity: the checkpoint location qualified
     * against its OWN filesystem (not the corpus dir's — a relative
     * path, a default-FS change, or an equivalent-but-differently-
@@ -1215,6 +1104,21 @@ object Streams {
         .toString
     } catch { case _: java.net.URISyntaxException => s }
 
+  /** One landed corpus dir ↔ one stream: two *IndexStream queries
+    * landing into the same `corpusDir` would interleave `b<id>`
+    * allocation — each stream's checkpoint numbers its OWN micro-
+    * batches from 0, so the second stream's `b0` overwrite-lands on
+    * top of the first's (silent row loss before consolidation even
+    * enters the picture). The contract is therefore claimed at stream
+    * START, fail-fast and typed: a `_graft_owner` sidecar records the
+    * owning CHECKPOINT location. A restart (same checkpoint) re-claims
+    * its own corpus — restart-resume semantics are untouched, and
+    * there is no TTL to misjudge a long gap between runs — while a
+    * different stream is refused before its first trigger. Taking
+    * over an abandoned corpus is an explicit operator action (delete
+    * the sidecar), mirroring Structured Streaming's own
+    * one-checkpoint-one-query exclusivity model.
+    */
   private[graft] def claimCorpusOwner(
       spark: org.apache.spark.sql.SparkSession, corpusDir: String,
       checkpoint: String, settleMs: Long = 2000): Unit = {

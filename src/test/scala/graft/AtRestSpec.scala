@@ -329,4 +329,174 @@ class AtRestSpec extends AnyFunSuite {
       "B's build completes and stamps after A exits")
     assert(!lease.exists(), "B's own release removes B's lease")
   }
+
+  test("crash matrix: for all six index families a failing build and a " +
+      "failing extension leave no stamp, and the retry equals the full " +
+      "build over the union row for row") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    import graft.ext.{Dedup, Similarity}
+    val s = spark
+    import s.implicits._
+    val docs = Seq(
+      (1L, "s1", "alpha beta gamma delta epsilon zeta"),
+      (2L, "s1", "alpha beta gamma delta epsilon eta"),
+      (3L, "s2", "totally different text entirely other words here"),
+      (10L, "s1", "alpha beta gamma delta epsilon theta"),
+      (11L, "s2", "totally different text entirely other words also"),
+      (12L, "s2", "an unrelated singleton document body of words"))
+      .toDF("doc_id", "source", "text")
+    val emb = (0 until 60).map(i => (i.toLong,
+      Seq(math.cos(i * 0.3f), math.sin(i * 0.3f), 0.1f * (i % 5))
+        .map(_.toFloat)))
+      .toDF("vec_id", "embedding")
+    // a plan that raises inside whatever write evaluates the column
+    def poison(df: DataFrame, c: String): DataFrame =
+      df.withColumn(c,
+        when(col(c).isNotNull, raise_error(lit("poisoned row")))
+          .otherwise(col(c)))
+    final case class Fam(name: String, all: DataFrame, baseRows: String,
+        poisonCol: String, meta: String, rels: Seq[String],
+        ensure: (DataFrame, String) => Boolean,
+        extend: (DataFrame, DataFrame, String, DataFrame) => Boolean)
+    val fams = Seq(
+      Fam("exact", docs, "doc_id < 10", "text", "_graft_dedup_meta",
+        Seq("pairs", "clusters", "prefix"),
+        Dedup.ensureDedupIndex(_, _),
+        (b, n, p, _) => Dedup.extendDedupIndex(b, n, p)),
+      Fam("lsh", docs, "doc_id < 10", "text", "_graft_dedup_lsh_meta",
+        Seq("pairs", "clusters", "bands"),
+        Dedup.ensureDedupIndexLsh(_, _),
+        (b, n, p, u) => Dedup.extendDedupIndexLsh(b, n, p,
+          unionView = Some(u))),
+      Fam("cdc", docs, "doc_id < 10", "text", "_graft_cdc_meta",
+        Seq("pairs", "chunks"),
+        Dedup.ensureCdcIndex(_, _),
+        (b, n, p, u) => Dedup.extendCdcIndex(b, n, p, unionView = Some(u))),
+      Fam("df", docs, "doc_id < 10", "text", "_graft_df_meta", Seq("df"),
+        Dedup.ensureShingleDfIndex(_, _),
+        (b, n, p, u) => Dedup.extendShingleDfIndex(b, n, p,
+          unionView = Some(u))),
+      Fam("ivf", emb, "vec_id < 40", "embedding", "_graft_ivf_meta",
+        Seq("", "_centroids"),
+        Similarity.ensureIvfIndex(_, _, nCentroids = 4),
+        (b, n, p, u) => Similarity.extendIvfIndex(b, n, p, nCentroids = 4,
+          unionView = Some(u))),
+      Fam("knn", emb, "vec_id < 40", "embedding", "_graft_knn_meta",
+        Seq("edges", "cells", "_centroids"),
+        Similarity.ensureKnnIndex(_, _, 3),
+        (b, n, p, u) => Similarity.extendKnnIndex(b, n, p, 3,
+          unionView = Some(u))))
+    def rows(dir: String, rel: String): Seq[String] =
+      AtRest.read(spark, dir, rel).collect().map(_.toString).sorted.toSeq
+    // the failure must be the poison's, raised inside the write
+    def failsPoisoned(name: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("poisoned row")),
+        s"$name: failed for another reason: $e")
+    }
+    fams.foreach { f =>
+      val base = f.all.filter(f.baseRows)
+      val batch = f.all.filter(s"NOT (${f.baseRows})")
+      val union = base.union(batch)
+      val full = tmp()
+      assert(f.ensure(union, full), s"${f.name}: full build")
+      def sameAsFull(dir: String): Unit = f.rels.foreach { r =>
+        val want = rows(full, r)
+        assert(want.nonEmpty && rows(dir, r) == want,
+          s"${f.name}: relation '$r' differs from the full build")
+      }
+      // a build that raises inside its write leaves no stamp; the retry
+      // builds the union cleanly
+      val built = tmp()
+      failsPoisoned(f.name)(f.ensure(poison(union, f.poisonCol), built))
+      assert(AtRest.readStamp(spark, built, f.meta).isEmpty,
+        s"${f.name}: a failed build must leave no stamp")
+      assert(f.ensure(union, built), s"${f.name}: retried build")
+      sameAsFull(built)
+      // an extension whose batch raises inside the delta leaves no stamp
+      // (the base's came off before the mutation); the retry with the
+      // good batch finds no base stamp and rebuilds the union
+      val extended = tmp()
+      assert(f.ensure(base, extended), s"${f.name}: base build")
+      failsPoisoned(f.name)(
+        f.extend(base, poison(batch, f.poisonCol), extended, union))
+      assert(AtRest.readStamp(spark, extended, f.meta).isEmpty,
+        s"${f.name}: a failed extension must leave no stamp")
+      assert(f.extend(base, batch, extended, union),
+        s"${f.name}: retried extension")
+      sameAsFull(extended)
+    }
+  }
+
+  test("reading the hidden _centroids sidecar logs no " +
+      "'All paths were ignored' warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import graft.ext.Similarity
+    val s = spark
+    import s.implicits._
+    val emb = (0 until 40).map(i => (i.toLong,
+      Seq(math.cos(i * 0.3f), math.sin(i * 0.3f), 0.1f * (i % 5))
+        .map(_.toFloat)))
+      .toDF("vec_id", "embedding")
+    val ivf = tmp()
+    val knn = tmp()
+    Similarity.ensureIvfIndex(emb, ivf, nCentroids = 4)
+    Similarity.ensureKnnIndex(emb, knn, 3)
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    logger.addAppender(capture)
+    def ignored(): Int = {
+      val n = lines.toArray.count(_.toString.contains("All paths were ignored"))
+      lines.clear()
+      n
+    }
+    try {
+      // the probe sees the warning a raw read of the sidecar logs
+      spark.read.parquet(s"$knn/_centroids").count()
+      assert(ignored() > 0, "the capture must see Spark's warning")
+      assert(Similarity.readKnnCentroids(spark, knn).count() > 0)
+      assert(Similarity.topKIvfIndexed(ivf, emb.limit(3), 2).count() > 0)
+      assert(ignored() == 0,
+        "centroid reads must not hand Spark an ignored root path")
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
+  test("src/main drives the stamped protocol only through the family " +
+      "lifecycle in graft/engine/AtRest.scala") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val call = """\b(extendStamped|compactStamped|restampIf)\s*\(""".r
+    assert(call.findFirstIn("AtRest.restampIf(spark, p, m)(f)").nonEmpty)
+    assert(call.findFirstIn("[[AtRest.extendStamped]]'s").isEmpty)
+    val root = Paths.get(sys.props("user.dir"), "src/main")
+    assert(Files.isDirectory(root), s"main sources not found under $root")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val offenders = files
+      .filterNot(_.endsWith(Paths.get("graft", "engine", "AtRest.scala")))
+      .flatMap { f =>
+        val text = new String(Files.readAllBytes(f), "UTF-8")
+        call.findAllMatchIn(text).map(m => s"${root.relativize(f)}: ${m.matched}")
+      }
+    assert(offenders.isEmpty,
+      "declare an AtRest.Family and call AtRest.ensure/extend/compact/" +
+        s"restamp instead: ${offenders.mkString("; ")}")
+  }
 }

@@ -421,7 +421,8 @@ class StreamingSpec extends AnyFunSuite {
     // stream lifetime, and the model still survives (restamp chain)
     val folded = Streams.consolidateLanded(spark, kc,
       Streams.landedBatchDirs(spark, kc),
-      (o, n) => Similarity.restampKnnIndex(spark, ki, o, n),
+      (o, n) => graft.engine.AtRest.restamp(Similarity.KnnLayout, spark,
+        ki)(Similarity.corpusPrefixRewrite(o, n)),
       maxConsolidated = 1)
     assert(folded.size == 1 && folded.head.split('/').last == "c6",
       s"full fold must leave one c dir: $folded")
@@ -1065,10 +1066,8 @@ test("corpus ownership: one landed corpus dir belongs to one stream " +
     def step(newDir: String, prev: Option[Vector[String]],
         retries: Int): Vector[String] =
       Streams.indexMaintenanceBatch(spark, kc, newDir, prev,
-        ensure = Similarity.ensureKnnIndex(_, ki, 3,
-          profile = IndexProfile.Production()),
-        extend = (b, n, u) => Similarity.extendKnnIndex(b, n, ki, 3,
-          unionView = u, profile = IndexProfile.Production()),
+        Seq(Streams.Maintained(Similarity.knnFamily(3,
+          profile = IndexProfile.Production()), ki, Streams.CellFileBudget)),
         leaseRetries = retries, leaseBackoffMs = 50)
     land(s"$kc/b0", 0, 30)
     val l0 = step(s"$kc/b0", None, 0)
