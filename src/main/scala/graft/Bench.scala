@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Headline benchmark main. Prints ONE JSON line to stdout for the driver
   * and writes a fuller artifact to bench_result.json plus a committed copy
@@ -184,18 +186,11 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(passes >= 1, "SPARK_GRAFT_BENCH_PASSES must be >= 1")
-    val spark = graft.engine.GraftSession.staticConfs
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      .getOrCreate()
-    graft.engine.GraftSession.tune(spark)
+    val spark = graft.engine.GraftSession.build(
+      s"local[$cpus]", "graft-bench", cpus.toInt)
     // optional "k=v,k=v" runtime-conf overrides for conf-keyed measured
     // runs (e.g. spark.graft.checkpoint.mode=reliable for SCALE.md's
-    // durability-overhead rows) — applied after tune() so an override
+    // durability-overhead rows) — applied after the build so an override
     // always wins
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
@@ -254,14 +249,15 @@ object Bench {
       * means the delta may credit another pass's tasks, the suspected
       * mechanism for the degraded r17 run's anomalously LOW cache-
       * rider CPUs that then bound the gate), whether the query rode
-      * the session memos (cache-rider), and the first error message
-      * if any pass threw. The first failing pass stops further passes
-      * for that query — re-running a broken query buys nothing and a
-      * slow failure would triple the wasted wall time.
+      * the session memos (cache-rider), the generated-class compiles
+      * and compile milliseconds of each successful pass, and the first
+      * error message if any pass threw. The first failing pass stops
+      * further passes for that query — re-running a broken query buys
+      * nothing and a slow failure would triple the wasted wall time.
       */
     case class QRes(name: String, times: Seq[Double], cpus: Seq[Double],
         gcs: Seq[Double], trusted: Seq[Boolean], rider: Boolean,
-        err: Option[String]) {
+        compiles: Seq[Long], compileMs: Seq[Double], err: Option[String]) {
       def min: Option[Double] = if (times.nonEmpty) Some(times.min) else None
       // CPU min over TRUSTED passes only: a misattributed delta must
       // never become this run's number nor the next run's reference.
@@ -297,6 +293,8 @@ object Bench {
       val cpus = scala.collection.mutable.ArrayBuffer.empty[Double]
       val gcs = scala.collection.mutable.ArrayBuffer.empty[Double]
       val trusted = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+      val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val compileMs = scala.collection.mutable.ArrayBuffer.empty[Double]
       // every query starts self-contained (round-17 verdict #6: the
       // in-suite CPU of a memo-riding query measured "whoever paid the
       // build this pass", spread 0.45×–2.5× across same-code runs):
@@ -316,6 +314,10 @@ object Bench {
         val preOk = drain()
         val cpu0 = cpuListener.cpuNs.get()
         val gc0 = cpuListener.gcMs.get()
+        // JVM-wide codegen counters: in local mode the driver's and the
+        // executors' compiles both land here
+        val cc0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val cns0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         try {
           // toRdd.count(), NOT Dataset.count(): the latter rewrites the
@@ -335,6 +337,8 @@ object Bench {
           cpus += (cpuListener.cpuNs.get() - cpu0) / 1e9
           gcs += (cpuListener.gcMs.get() - gc0) / 1e3
           trusted += (preOk && postOk)
+          compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cc0
+          compileMs += (CodeGenerator.compileTime - cns0) / 1e6
           if (p == 0) rider = memoOccupancy() > 0
         } catch {
           case e: Throwable =>
@@ -344,7 +348,7 @@ object Bench {
         p += 1
       }
       QRes(name, times.toSeq, cpus.toSeq, gcs.toSeq, trusted.toSeq,
-        rider, err)
+        rider, compiles.toSeq, compileMs.toSeq, err)
     }
     val results: Seq[QRes] = selected.map { case (name, fn) =>
       timeQuery(name, fn)
@@ -568,9 +572,13 @@ object Bench {
             ",\"passes\":" + s.times.map(r3).mkString("[", ",", "]") +
             s.cpuMin.fold("")(c => ",\"cpu\":" + r3(c)) + "}"
         }
+        // per-pass generated-class compiles and their milliseconds, last
+        // so parseRefs' entry pattern is unaffected
+        val cc = ",\"compiles\":" + r.compiles.mkString("[", ",", "]") +
+          ",\"compileMs\":" + r.compileMs.map(r1).mkString("[", ",", "]")
         "\"" + r.name + "\":{\"min\":" + r.min.map(r3).getOrElse("null") +
           ",\"passes\":" + ps + ",\"err\":" + e + cpu + dt + cr + wb +
-          fl + adj + "}"
+          fl + adj + cc + "}"
       }.mkString("{", ",", "}")
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","passes":$passes,"queries":$qs$partial$inducedField}"""
     }

@@ -60,17 +60,8 @@ object Verify {
       case Array(a, b, f) => (a, b, f)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.engine.GraftSession.staticConfs
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      .getOrCreate()
-    graft.engine.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.build(
+      s"local[$cpus]", "graft-verify", cpus.toInt)
     dump(spark, sfDir, outDir,
       SparkEntry.queries.toSeq.filter(_._1.matches(filt)),
       SparkEntry.oracleSql.toSeq.filter(_._1.matches(filt)))

@@ -17,39 +17,56 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** STATIC (context-creation-time) confs every graft session builder
-    * must apply — these cannot go through [[tune]] because Spark
-    * refuses them on a live context. One entry (r19 measurement,
-    * OPTIMIZATION_r19.md):
+  /** STATIC (context-creation-time) confs every graft session must be
+    * built with. They cannot go through [[tune]] because Spark refuses
+    * them on a live context, so only [[build]] applies them. Three
+    * entries:
     *
-    *  - `spark.shuffle.sort.bypassMergeThreshold=1`: never use the
-    *    bypass-merge shuffle writer. For every SQL exchange with R
-    *    reduce partitions under the threshold (default 200), the
-    *    bypass writer creates R per-partition files per MAP TASK and
-    *    concatenates them through FileChannel.transferTo (an
-    *    mmap/unmap per file) — thread dumps of the r19 baseline
-    *    showed the trainer queries' task threads pinned in
-    *    FileOutputStream.open0/FileChannelImpl.map0 doing exactly
-    *    that, and 32 concurrent tasks contending on the kernel mmap
-    *    lock burned ~0.3–0.6 s of KERNEL CPU per task on 3-row
+    *  - `spark.shuffle.sort.bypassMergeThreshold=1` (r19,
+    *    OPTIMIZATION_r19.md): never use the bypass-merge shuffle writer.
+    *    For every SQL exchange with R reduce partitions under the
+    *    threshold (default 200), the bypass writer creates R
+    *    per-partition files per MAP TASK and concatenates them through
+    *    FileChannel.transferTo (an mmap/unmap per file) — thread dumps
+    *    of the r19 baseline showed the trainer queries' task threads
+    *    pinned in FileOutputStream.open0/FileChannelImpl.map0 doing
+    *    exactly that, and 32 concurrent tasks contending on the kernel
+    *    mmap lock burned ~0.3–0.6 s of KERNEL CPU per task on 3-row
     *    partitions (x122: 26 CPU-s/pass → 3–10 with the serialized
     *    sort writer; x128: 32–42 → 8–10). The serialized sort writer
     *    (UnsafeShuffleWriter — the only writer at production R > 200
     *    anyway) writes ONE data file per map task at any R; its
     *    partition-id pointer sort is noise. Scale posture: at real
-    *    cluster R this conf is moot (bypass never fires past 200);
-    *    for small-R shuffles it removes an O(R) file-create/mmap term
-    *    per map task on any filesystem.
-    */
-  /** Second entry (r20): `spark.sql.extensions=GraftExtensions` —
-    * registers the engine's SQL functions AND the [[SortSampleCut]]
-    * AQE prep rule (global-sort range-sampling must not re-execute the
-    * query's final stage; see that rule's scaladoc for the evidence).
-    * Static because session extensions are fixed at session creation.
+    *    cluster R this conf is moot (bypass never fires past 200); for
+    *    small-R shuffles it removes an O(R) file-create/mmap term per
+    *    map task on any filesystem.
+    *  - `spark.sql.extensions=GraftExtensions` (r20): registers the
+    *    engine's SQL functions AND the [[SortSampleCut]] AQE prep rule
+    *    (global-sort range-sampling must not re-execute the query's
+    *    final stage; see that rule's scaladoc for the evidence). Static
+    *    because session extensions are fixed at session creation.
+    *  - `spark.sql.codegen.cache.maxEntries=10000`: keep graft's
+    *    generated classes. `CodeGenerator` reads this once, when the
+    *    class initialises, into a Guava cache split over 4 segments
+    *    (eviction starts before the bound is reached), and caches each
+    *    code text once per class loader (driver and local executor).
+    *    Spark's default of 100 is below one `PipelineMain.runFrames`
+    *    run, which compiles 126 classes (GraftSessionSpec's corpus,
+    *    `local[4]`), so each run evicted the previous run's classes and
+    *    recompiled 119 of them; at 10,000 the second run compiles 4.
+    *    perfbench `corpus_pipeline` (10 pairs, `local[4]`, 4 vCPUs):
+    *    job wall 4.34 → 2.81 s, job CPU 2.18 → 1.18 s. The 192-query suite
+    *    (`graft.Bench`, sf0.01, `local[4]`, 2 passes per query) holds
+    *    ≈2,800 distinct entries in one JVM: its first passes compiled
+    *    6,320 classes at 100 and 2,689 at 10,000, its second passes
+    *    1,124 and 109. Cost after a GC at the end of that run: heap
+    *    134 → 226 MB, Metaspace 187 → 212 MB, loaded classes
+    *    28.1k → 33.1k.
     */
   val staticConfs: Seq[(String, String)] = Seq(
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
-    "spark.sql.extensions" -> "graft.engine.GraftExtensions")
+    "spark.sql.extensions" -> "graft.engine.GraftExtensions",
+    "spark.sql.codegen.cache.maxEntries" -> "10000")
 
   def build(
       master: String = "local[32]",
@@ -88,8 +105,10 @@ object GraftSession {
   private val excludedOptimizerRules =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  /** Apply graft defaults to an externally created session (driver-owned
-    * sessions in Verify/Bench). Safe: only sets runtime-settable confs. */
+  /** Apply graft's runtime defaults to a session built elsewhere (an
+    * external driver calling `SparkEntry.entry`). Safe: only sets
+    * runtime-settable confs, so such a session lacks [[staticConfs]]
+    * unless its builder passed them. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")

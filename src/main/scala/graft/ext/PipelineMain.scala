@@ -151,14 +151,8 @@ object PipelineMain {
     val mixTemperature = valued("-mix").map(_.toDouble).getOrElse(0.0)
     val Array(inDir, outDir) = pos
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.engine.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.build(
+      s"local[$cpus]", "graft-pipeline", cpus.toInt)
     val t0 = System.nanoTime()
     val (kept, total) = runFrames(spark,
       Tables.load(spark, inDir, "documents"),

@@ -1353,21 +1353,6 @@ object Similarity {
     cent.toDF("vec_id", "embedding")
   }
 
-  /** [[trainCentroids]] over a deterministic hash-ordered SUBSAMPLE —
-    * the standard IVF training practice (train Lloyd on ~50–100 rows
-    * per centroid, not the corpus) and the measured remedy for the
-    * training term that dominates once k scales with n (66.8 s at
-    * 100×/k=800 full-corpus vs the sampled cost, SCALE.md round 11):
-    * every Lloyd pass costs sample·k instead of n·k, while centroid
-    * QUALITY degrades only marginally (quantization cosine measured
-    * there too — means over ≥50·k rows estimate cluster means well).
-    * The sample is hash-ordered (ingest order cannot bias it toward a
-    * source) and re-identified 0..s−1 so the "first-k" seeding rule
-    * stays meaningful on it; the single-partition row_number sort is
-    * bounded by `maxTrainRows` — training-sample-class driver state,
-    * never the corpus. Result ids are 0..k−1 as with [[trainCentroids]],
-    * and the session cache keys on the SOURCE corpus + parameters.
-    */
   /** Partition count for a re-spread training sample, derived from the
     * Lloyd pass's WORK (sample·k cosine evaluations, ~250k per task)
     * instead of a flat defaultParallelism — the guide's
@@ -1386,6 +1371,21 @@ object Similarity {
     math.max(1, math.min(spark.sparkContext.defaultParallelism, byWork))
   }
 
+  /** [[trainCentroids]] over a deterministic hash-ordered SUBSAMPLE —
+    * the standard IVF training practice (train Lloyd on ~50–100 rows
+    * per centroid, not the corpus) and the measured remedy for the
+    * training term that dominates once k scales with n (66.8 s at
+    * 100×/k=800 full-corpus vs the sampled cost, SCALE.md round 11):
+    * every Lloyd pass costs sample·k instead of n·k, while centroid
+    * QUALITY degrades only marginally (quantization cosine measured
+    * there too — means over ≥50·k rows estimate cluster means well).
+    * The sample is hash-ordered (ingest order cannot bias it toward a
+    * source) and re-identified 0..s−1 so the "first-k" seeding rule
+    * stays meaningful on it; the single-partition row_number sort is
+    * bounded by `maxTrainRows` — training-sample-class driver state,
+    * never the corpus. Result ids are 0..k−1 as with [[trainCentroids]],
+    * and the session cache keys on the SOURCE corpus + parameters.
+    */
   def trainCentroidsSampled(corpus: DataFrame, nCentroids: Int,
       maxTrainRows: Int, iters: Int = 3): DataFrame = {
     require(maxTrainRows >= nCentroids,
@@ -1730,26 +1730,6 @@ object Similarity {
       .map { case (e, i) => (i.toLong, e) }
   }
 
-  /** Product-quantization top-k (the FAISS-style IVF-PQ scale path,
-    * minus the IVF gate which [[topKIvf]] already provides): vectors are
-    * split into `m` subvectors, each encoded as its nearest of
-    * `codebookSize` subspace centroids — 1 byte per subspace, a 64-dim
-    * float vector compresses 32× to an 8-byte code. Queries never touch
-    * the raw corpus vectors: a per-query lookup table of
-    * (subspace, code) → squared-L2 contributions is broadcast, and the
-    * approximate distance is the 8-term LUT sum (asymmetric distance
-    * computation). At 100 TB the corpus at rest is codes, not floats —
-    * the scan is 32× smaller and the per-candidate cost is m lookups,
-    * no dot products.
-    *
-    * Everything is relational: encode = explode-by-subspace + broadcast
-    * codebook join + min_by argmin; ADC = equi-join codes×LUT on
-    * (subspace, code) + decimal-exact sum. Codebooks are deterministic
-    * (subvectors of the first `codebookSize` corpus vectors —
-    * [[trainCentroids]]-style k-means would slot in per subspace), all
-    * distances are rounded and tie-broken on ids, so the DuckDB oracle
-    * reproduces the output exactly.
-    */
   /** Rounded squared-L2 between two subvectors — the single distance
     * definition every PQ path (relational encode, query LUT, and the
     * [[graft.functions.PqEncode]] loop, which hand-replicates it) must
@@ -1826,6 +1806,26 @@ object Similarity {
       .select(col("qid"), col("rank"), col("cid"), col("adist"))
   }
 
+  /** Product-quantization top-k (the FAISS-style IVF-PQ scale path,
+    * minus the IVF gate which [[topKIvf]] already provides): vectors are
+    * split into `m` subvectors, each encoded as its nearest of
+    * `codebookSize` subspace centroids — 1 byte per subspace, a 64-dim
+    * float vector compresses 32× to an 8-byte code. Queries never touch
+    * the raw corpus vectors: a per-query lookup table of
+    * (subspace, code) → squared-L2 contributions is broadcast, and the
+    * approximate distance is the 8-term LUT sum (asymmetric distance
+    * computation). At 100 TB the corpus at rest is codes, not floats —
+    * the scan is 32× smaller and the per-candidate cost is m lookups,
+    * no dot products.
+    *
+    * Everything is relational: encode = explode-by-subspace + broadcast
+    * codebook join + min_by argmin; ADC = equi-join codes×LUT on
+    * (subspace, code) + decimal-exact sum. Codebooks are deterministic
+    * (subvectors of the first `codebookSize` corpus vectors —
+    * [[trainCentroids]]-style k-means would slot in per subspace), all
+    * distances are rounded and tie-broken on ids, so the DuckDB oracle
+    * reproduces the output exactly.
+    */
   def topKPq(corpus: DataFrame, queries: DataFrame, k: Int,
       dim: Int = 64, m: Int = 8, codebookSize: Int = 256): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -2052,31 +2052,6 @@ object Similarity {
           .as("mean_cohesion"))
   }
 
-  /** Approximate k-nearest-neighbor graph, built within trained k-means
-    * cells (the SemDeDup locality assumption: near neighbors share a
-    * cell), with per-node degree / mutual-degree / mean-similarity
-    * stats — the input ledger for graph-based corpus work (label
-    * propagation, graph dedup, connectivity audits). An edge (i → j)
-    * means j is among i's top-k same-cell neighbors; `mutual_degree`
-    * counts neighbors that also list i back — the symmetric core a
-    * mutual-kNN clustering would keep.
-    *
-    * Scale shape: the pair join is cell-local (Σ|cell|² like [[
-    * semanticDedup]], never n²); the per-node top-k window partitions on
-    * the source vector. The kNN edge list is materialized once (it feeds
-    * both the stats rollup and its own reversal for the mutual check —
-    * without the cut the Σ|cell|² scoring would run twice). Cosines are
-    * 6-dp rounded with (cos desc, id) total order — engine-portable.
-    *
-    * Parameter honesty: the cell-locality cut DROPS cross-cell edges —
-    * a vector's true nearest neighbor in another cell never appears
-    * (the SemDeDup trade, stated in that paper). The drop rate falls
-    * as centroids are trained better and rises with k relative to cell
-    * size; x94's fixture (8 cells, k = 5 over 500 vectors) is demo
-    * scale — at 10⁹ vectors size the codebook so |cell| ≈ 10³–10⁴
-    * (k_centroids ≈ n/10³) and the Σ|cell|² pair mass stays ~n·10³–10⁴
-    * while boundary loss stays the only approximation.
-    */
   /** The cell-local top-`k` neighbor EDGE relation (cid, cell, nid,
     * cos) underlying [[knnGraph]] and [[triangleStats]]: within-cell
     * pair scoring (Σ|cell|², never n²) + a per-source-vector top-k
@@ -2151,6 +2126,31 @@ object Similarity {
     }
   }
 
+  /** Approximate k-nearest-neighbor graph, built within trained k-means
+    * cells (the SemDeDup locality assumption: near neighbors share a
+    * cell), with per-node degree / mutual-degree / mean-similarity
+    * stats — the input ledger for graph-based corpus work (label
+    * propagation, graph dedup, connectivity audits). An edge (i → j)
+    * means j is among i's top-k same-cell neighbors; `mutual_degree`
+    * counts neighbors that also list i back — the symmetric core a
+    * mutual-kNN clustering would keep.
+    *
+    * Scale shape: the pair join is cell-local (Σ|cell|² like [[
+    * semanticDedup]], never n²); the per-node top-k window partitions on
+    * the source vector. The kNN edge list is materialized once (it feeds
+    * both the stats rollup and its own reversal for the mutual check —
+    * without the cut the Σ|cell|² scoring would run twice). Cosines are
+    * 6-dp rounded with (cos desc, id) total order — engine-portable.
+    *
+    * Parameter honesty: the cell-locality cut DROPS cross-cell edges —
+    * a vector's true nearest neighbor in another cell never appears
+    * (the SemDeDup trade, stated in that paper). The drop rate falls
+    * as centroids are trained better and rises with k relative to cell
+    * size; x94's fixture (8 cells, k = 5 over 500 vectors) is demo
+    * scale — at 10⁹ vectors size the codebook so |cell| ≈ 10³–10⁴
+    * (k_centroids ≈ n/10³) and the Σ|cell|² pair mass stays ~n·10³–10⁴
+    * while boundary loss stays the only approximation.
+    */
   def knnGraph(emb: DataFrame, centroids: DataFrame, k: Int): DataFrame =
     knnGraphAssigned(assignCells(emb, centroidRelation(centroids)), k)
 
@@ -2185,6 +2185,16 @@ object Similarity {
         col("mean_cos"))
   }
 
+  /** One row per UNDIRECTED mutual kNN edge (u < v by id), materialized
+    * — the shared base of [[triangleStats]] and [[pageRank]]. */
+  private[ext] def mutualEdgesFrom(knn: DataFrame): DataFrame = {
+    val rev = knn.select(col("nid").as("cid"), col("cid").as("nid"))
+    knn.join(rev, Seq("cid", "nid"), "left_semi")
+      .filter(col("cid") < col("nid"))
+      .select(col("cell"), col("cid").as("u"), col("nid").as("v"))
+      .materialized
+  }
+
   /** Per-cell triangle count + global clustering coefficient of the
     * MUTUAL cell-local kNN graph — the graph-health audit for the x94
     * edge relation (a healthy semantic neighborhood graph is locally
@@ -2212,16 +2222,6 @@ object Similarity {
     * is a left-semi equi-join on (cell, a, b). Output is
     * cell-cardinality.
     */
-  /** One row per UNDIRECTED mutual kNN edge (u < v by id), materialized
-    * — the shared base of [[triangleStats]] and [[pageRank]]. */
-  private[ext] def mutualEdgesFrom(knn: DataFrame): DataFrame = {
-    val rev = knn.select(col("nid").as("cid"), col("cid").as("nid"))
-    knn.join(rev, Seq("cid", "nid"), "left_semi")
-      .filter(col("cid") < col("nid"))
-      .select(col("cell"), col("cid").as("u"), col("nid").as("v"))
-      .materialized
-  }
-
   def triangleStats(emb: DataFrame, centroids: DataFrame,
       k: Int): DataFrame = {
     val mutual = mutualEdgesFrom(cachedKnnEdges(emb, centroids, k))

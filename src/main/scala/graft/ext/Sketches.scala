@@ -160,15 +160,6 @@ object Sketches {
       .agg(max(col("rk")).as("mx"))
   }
 
-  /** HLL estimate per group from a register relation: the harmonic-mean
-    * estimator `alpha_m · m² / Σ 2^(−M_j)` with the standard small-range
-    * linear-counting correction (`m·ln(m/V)` when V empty registers
-    * remain and the raw estimate ≤ 2.5m). The indicator sum is kept
-    * EXACT by scaling to integers: Σ 2^(W+1−M_j) over hit registers
-    * plus `(m − hits)·2^(W+1)` for empty ones is a BIGINT (every
-    * M_j ∈ [1, W+1]), so the only floating-point steps are one literal
-    * division and the final 6-dp round — engine-portable bit-for-bit.
-    */
   /** `alpha_m · m² · 2^(W+1)` — the numerator of the scaled-integer
     * harmonic estimator, ONE double constant shared with the DuckDB
     * oracle via `Double.toString` (which round-trips exactly).
@@ -223,6 +214,15 @@ object Sketches {
               - col("exact_new")) / col("exact_new"), 6)).as("rel_err"))
   }
 
+  /** HLL estimate per group from a register relation: the harmonic-mean
+    * estimator `alpha_m · m² / Σ 2^(−M_j)` with the standard small-range
+    * linear-counting correction (`m·ln(m/V)` when V empty registers
+    * remain and the raw estimate ≤ 2.5m). The indicator sum is kept
+    * EXACT by scaling to integers: Σ 2^(W+1−M_j) over hit registers
+    * plus `(m − hits)·2^(W+1)` for empty ones is a BIGINT (every
+    * M_j ∈ [1, W+1]), so the only floating-point steps are one literal
+    * division and the final 6-dp round — engine-portable bit-for-bit.
+    */
   def hllEstimate(regs: DataFrame, p: Int = HllP): DataFrame = {
     val m = 1 << p
     val w = 60 - p

@@ -2463,15 +2463,6 @@ object ExtQueries {
        ORDER BY da, db"""
   }
 
-  /** DuckDB replication of [[graft.ext.Dedup.substringOverlapPairs]] —
-    * the RollingWinnow polynomial k-gram hashes computed RELATIONALLY
-    * (positions unnested to rows, the k-term sum as a join against a
-    * literal (t, B^(k-1-t) mod M) table, window minima as a grouped min
-    * over w shifted copies): DuckDB executes this vectorized form ~60×
-    * faster than the equivalent list comprehensions (x34's direct form
-    * at k=16 cost ~18 s at sf0.01; this runs in ~0.3 s). Every
-    * intermediate stays < 2^47, plain BIGINT arithmetic.
-    */
   /** DuckDB replication of [[graft.ext.Dedup.sourceMinhashMatrix]] —
     * the coefficient pairs are the SAME Scala-computed literals the
     * Spark plan embeds, so the estimator is integer-arithmetic-
@@ -2689,6 +2680,15 @@ object ExtQueries {
          SELECT * FROM cdq WHERE (SELECT e FROM cest) > 32) u
        ORDER BY da, db"""
 
+  /** DuckDB replication of [[graft.ext.Dedup.substringOverlapPairs]] —
+    * the RollingWinnow polynomial k-gram hashes computed RELATIONALLY
+    * (positions unnested to rows, the k-term sum as a join against a
+    * literal (t, B^(k-1-t) mod M) table, window minima as a grouped min
+    * over w shifted copies): DuckDB executes this vectorized form ~60×
+    * faster than the equivalent list comprehensions (x34's direct form
+    * at k=16 cost ~18 s at sf0.01; this runs in ~0.3 s). Every
+    * intermediate stays < 2^47, plain BIGINT arithmetic.
+    */
   private def winnowPairsSql(k: Int, w: Int, minShared: Long,
       maxDf: Option[Long] = None): String = {
     val M = BigInt(1000000007L)
@@ -6146,13 +6146,6 @@ object ExtQueries {
       .map { case ((d, c), i) => s"(${i + 1}, ${d}, ${c})" }
       .mkString(", ")
 
-  /** DuckDB replication of [[graft.ext.Similarity.pcaTopComponent]] —
-    * the unrolled power iterations (fixed plan-time constants on both
-    * sides): 1e-6-quantized BIGINT mean sums, ordered list_dot_product
-    * folds for the per-row projections (≡ dotHof), 6-dp addends summed
-    * as DECIMAL(38,12) for the per-dim accumulations, 6-dp re-normalized
-    * v per pass, λ₁ = vᵀg/n with the v that produced the final g.
-    */
   /** DuckDB replication of [[graft.ext.Similarity.kCenterCoreset]]:
     * `k−1` unrolled greedy steps — each picks argmin of the running
     * max-6-dp-cosine (tie: lowest vec_id) and folds the winner into the
@@ -6192,6 +6185,13 @@ object ExtQueries {
          ORDER BY sel_rank"""
   }
 
+  /** DuckDB replication of [[graft.ext.Similarity.pcaTopComponent]] —
+    * the unrolled power iterations (fixed plan-time constants on both
+    * sides): 1e-6-quantized BIGINT mean sums, ordered list_dot_product
+    * folds for the per-row projections (≡ dotHof), 6-dp addends summed
+    * as DECIMAL(38,12) for the per-dim accumulations, 6-dp re-normalized
+    * v per pass, λ₁ = vᵀg/n with the v that produced the final g.
+    */
   private def pcaSql(dim: Int, iters: Int): String = {
     val steps = (0 until iters).map { i =>
       s"""c$i AS (SELECT em, list_dot_product(em, (SELECT v FROM v$i)) AS c

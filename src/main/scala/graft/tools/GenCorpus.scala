@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Synthetic `documents` / `embeddings` corpora for scale-exponent runs
   * (dev tool — the oracle testdata stays driver-owned; this only feeds
@@ -135,12 +135,8 @@ object GenCorpus {
       case other => sys.error(s"mode must be iid|skew, got '$other'")
     })
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.GraftSession.build(
+      s"local[$cpus]", "graft-gencorpus", cpus.toInt)
     import spark.implicits._
     spark.range(nDocsS.toLong).map(i => doc(i, skew)).write
       .mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 
 /** Structured-streaming throughput micro-bench (BASELINE.md's streaming
   * row): a rate source deliberately over-provisioned past pipeline
@@ -24,12 +24,9 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "20").toInt
     val rps = sys.env.getOrElse("SPARK_GRAFT_STREAM_RPS", "5000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.metricsEnabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.build(
+      s"local[$cpus]", "graft-streambench", cpus.toInt)
+    spark.conf.set("spark.sql.streaming.metricsEnabled", "true")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -108,6 +108,20 @@ class BenchIdSpec extends AnyFunSuite {
       s"got $ref")
   }
 
+  test("per-pass compile fields (compiles/compileMs) trail every entry, " +
+      "after the solo object, and leave the reference unchanged") {
+    val artifact =
+      """{"metric":"total","value":9.9,"unit":"sec","sf":"/x/sf0.01","passes":2,"queries":{""" +
+        """"x69_cells":{"min":2.000,"passes":[2.5,2.0],"err":null,"cpu":3.000,"cpuPasses":[3.5,3.0],"gc":0.100,"compiles":[40,2],"compileMs":[812.4,30.1]},""" +
+        """"x125_knn":{"min":4.000,"passes":[4.1,4.0],"err":null,"cpu":5.000,"cpuPasses":[5.1,5.0],"gc":0.100,"cr":true,"solo":{"min":1.500,"passes":[1.6,1.5],"cpu":2.500},"compiles":[12,0],"compileMs":[150.0,0.0]},""" +
+        """"x99_broken":{"min":null,"passes":[],"err":"boom","compiles":[],"compileMs":[]}}}"""
+    val ref = Bench.parseRefs(artifact)
+    assert(ref == Map(
+      "x69_cells" -> Bench.Ref(2.000, Some(3.000)),
+      "x125_knn" -> Bench.Ref(1.500, Some(2.500))),
+      s"got $ref")
+  }
+
   test("windowed references: the per-query UPPER MEDIAN over up to 3 " +
       "artifacts — one anomalously LOW run can never bind the gate, " +
       "wall and CPU windows form independently, and a query present " +
