@@ -1,6 +1,6 @@
 package graft.fhir
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The ingest job (reference main.go → worker → UploadResources,
@@ -33,46 +33,18 @@ object BundleIngest {
       .filter(col("_corrupt_record").isNull && col("entry").isNotNull)
       .drop("_corrupt_record")
 
-  /** T1: surrogate ID per entry. The reference draws random ObjectIds
-    * (main.go:266); we default to deterministic 24-hex IDs derived from
-    * (bundle path, fullUrl) so reference rewrite is assertable and reruns
-    * are idempotent (SURVEY §7.3). `deterministic=false` gives uuids.
-    */
-  private def newIdFor(e: Column, deterministic: Boolean): Column =
-    if (deterministic)
-      substring(sha2(concat_ws("|", col("bundle_path"), e.getField("fullUrl")), 256), 1, 24)
-    else expr("replace(uuid(), '-', '')")
-
   /** T1+T2+T3+T4: per-bundle ID assignment and graph rewrite.
     *
-    * Adds `refmap` (fullUrl → "Type/newId") and rebuilds `entry` with new
-    * resource ids and rewritten references. All per-row; the refMap is a
-    * plain map column, the analogue of the reference's per-bundle
-    * `map[string]Reference` (main.go:257-272).
+    * Rebuilds `entry` with new resource ids and rewritten references, per
+    * row, through one expression ([[ReferenceRewrite.rewriteEntries]]). Ids
+    * derive from (bundle path, fullUrl) where the reference draws random
+    * ObjectIds (main.go:266), so the rewrite is assertable and reruns are
+    * idempotent (SURVEY §7.3).
     */
-  def rewriteBundle(bundles: DataFrame, deterministic: Boolean = true,
-      legacyCid: Boolean = false): DataFrame = {
-    val withIds = bundles.withColumn("entry_ids",
-      transform(col("entry"), e => newIdFor(e, deterministic)))
-    val refMap = map_from_entries(
-      filter(
-        zip_with(col("entry"), col("entry_ids"), (e, id) =>
-          struct(
-            e.getField("fullUrl").as("key"),
-            concat_ws("/", e.getField("resource").getField("resourceType"), id)
-              .as("value"))),
-        kv => kv.getField("key").isNotNull))
-    val withMap = withIds.withColumn("refmap", refMap)
-    val rewritten = withMap.withColumn("entry",
-      zip_with(col("entry"), col("entry_ids"), (e, id) => {
-        val withId = e.withField("resource.id", id) // T3
-        withId.withField("resource",
-          ReferenceRewrite.rewriteValue(
-            withId.getField("resource"), Schemas.resource, col("refmap"),
-            legacyCid))
-      }))
-    rewritten.drop("entry_ids")
-  }
+  def rewriteBundle(bundles: DataFrame,
+      legacyCid: Boolean = false): DataFrame =
+    bundles.withColumn("entry", ReferenceRewrite.rewriteEntries(
+      col("entry"), col("bundle_path"), legacyCid))
 
   /** T6: type-tag routing — explode entries into one row per resource with
     * its pluralized collection name (bundle.go:75-82; fixed 11-name map

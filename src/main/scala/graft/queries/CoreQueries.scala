@@ -304,7 +304,7 @@ object CoreQueries {
     // against the declared bundle schema, run through surrogate-ID
     // assignment + refmap + reference rewrite + type routing, and emitted
     // as one row per routed resource. The surrogate IDs are
-    // sha256(path|fullUrl) prefixes (BundleIngest.newIdFor), so DuckDB
+    // sha256(path|fullUrl) prefixes (RewriteEntries), so DuckDB
     // recomputes the ENTIRE rewrite output — including the Observation's
     // rewritten subject reference resolving to its bundle's new Patient id
     // — from the same customer keys.

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 import graft.engine.{GraftSession, Tables}
 
@@ -20,6 +21,31 @@ import graft.engine.{GraftSession, Tables}
   * default 20), SPARK_GRAFT_STREAM_RPS (rate-source rows/s, default 5M).
   */
 object StreamBench {
+
+  /** The completed batches a measure window holds after the bootstrap one. */
+  final case class Window(rows: Long, batches: Int, ms: Long) {
+    def rowsPerSec: Double = rows / (ms / 1000.0)
+  }
+
+  /** Σ numInputRows / Σ triggerExecution over the batches with input after
+    * the first. A window without one holds no measurement, and reporting
+    * it as 0 rows/s would read as a result, so it fails naming the query,
+    * the window and the batches seen.
+    */
+  def window(name: String, secs: Int,
+      progress: Seq[StreamingQueryProgress]): Window = {
+    val useful = progress.drop(1).filter(_.numInputRows > 0)
+    val w = Window(useful.map(_.numInputRows).sum, useful.size,
+      useful.map(_.durationMs.getOrDefault("triggerExecution", 0L).toLong).sum)
+    if (w.batches == 0 || w.ms <= 0)
+      throw new IllegalStateException(
+        s"$name: no completed batch with input after the bootstrap batch " +
+          s"in the ${secs}s window (${progress.size} batches seen, " +
+          s"${w.batches} with input after the first); raise " +
+          "SPARK_GRAFT_STREAM_SECS or lower the offered rate")
+    w
+  }
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "20").toInt
@@ -51,15 +77,10 @@ object StreamBench {
       Thread.sleep(secs * 1000L)
       val prog = q.recentProgress.toSeq
       q.stop()
-      val useful = prog.drop(1).filter(_.numInputRows > 0)
-      val rows = useful.map(_.numInputRows).sum.toDouble
-      val ms = useful
-        .map(_.durationMs.getOrDefault("triggerExecution", 0L).toLong)
-        .sum.toDouble
-      val rate = if (ms > 0) rows / (ms / 1000.0) else 0.0
-      println(f"STREAMBENCH $name%-16s rows=${rows.toLong}%12d " +
-        f"batches=${useful.size}%3d rows_per_sec=${rate.toLong}%12d")
-      rate
+      val w = window(name, secs, prog)
+      println(f"STREAMBENCH $name%-16s rows=${w.rows}%12d " +
+        f"batches=${w.batches}%3d rows_per_sec=${w.rowsPerSec.toLong}%12d")
+      w.rowsPerSec
     }
 
     val agg = measure("windowed_agg",

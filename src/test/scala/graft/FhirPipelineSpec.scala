@@ -86,7 +86,7 @@ class FhirPipelineSpec extends AnyFunSuite {
 
   test("T4 is idempotent: rewriting a rewritten bundle changes nothing") {
     val once = rewritten
-    val twice = BundleIngest.rewriteBundle(once.drop("refmap"))
+    val twice = BundleIngest.rewriteBundle(once)
     // already-rewritten refs ("Patient/<id>") match no refMap key and the
     // new ids derive from the same (path, fullUrl) → byte-identical entries
     val a = once.select(to_json(col("entry")).as("j")).orderBy("j")
@@ -94,6 +94,32 @@ class FhirPipelineSpec extends AnyFunSuite {
     val b = twice.select(to_json(col("entry")).as("j")).orderBy("j")
       .as[String].collect().toSeq
     assert(a == b)
+  }
+
+  test("T2: a repeated fullUrl keeps the later entry, as the reference's " +
+      "map assignment does, and the run completes") {
+    import java.nio.file.{Files, Paths}
+    val in = Files.createTempDirectory("graft-dup-in")
+    Files.copy(Paths.get(bundlesPath, "b1.json"), in.resolve("b1.json"))
+    Files.write(in.resolve("dup.json"),
+      """{"resourceType": "Bundle", "type": "transaction", "entry": [
+        |  {"fullUrl": "urn:uuid:dup", "resource": {"resourceType": "Practitioner"}},
+        |  {"fullUrl": "urn:uuid:dup", "resource": {"resourceType": "Patient",
+        |    "gender": "male", "birthDate": "1970-01-01"}},
+        |  {"fullUrl": "urn:uuid:obs", "resource": {"resourceType": "Observation",
+        |    "subject": {"reference": "urn:uuid:dup"}}}
+        |]}""".stripMargin.getBytes("UTF-8"))
+    val out = Files.createTempDirectory("graft-dup-out").toString
+    FhirMain.run(spark, in.toString, out, None, None, "2020-01-01")
+    val res = spark.read.parquet(s"$out/resources")
+      .where(col("bundle_path").endsWith("dup.json"))
+    val patientId = res.where(col("collection") === "patients")
+      .select(col("resource.id")).as[String].collect().toSeq
+    assert(patientId.size == 1)
+    val subject = res.where(col("collection") === "observations")
+      .select(col("resource.subject.reference")).as[String].collect().toSeq
+    assert(subject == Seq(s"Patient/${patientId.head}"))
+    assert(spark.read.parquet(s"$out/rawstat").count() == 2)
   }
 
   test("T6: routing counts per collection") {

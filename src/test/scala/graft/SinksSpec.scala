@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fhir.{BundleIngest, CopyFactSink, FhirMain, JdbcFactSink,
-  MongoResourceSink, ParquetSink, ReferenceRewrite, Schemas}
+  MongoResourceSink, ParquetSink, Schemas}
 
 class SinksSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -364,28 +364,37 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("T5: legacy cid: references resolve behind the flag") {
-    val df = Seq(("cid:p9", "urn:uuid:p9"), ("cid:nope", "urn:uuid:p9"))
-      .toDF("ref", "key")
-      .select(
-        struct($"ref".as("reference"), lit("d").as("display")).as("r"),
-        map($"key", lit("Patient/NEW")).as("refmap"))
-    val out = df.select(
-      ReferenceRewrite.rewriteValue(
-        $"r", Schemas.reference, $"refmap", legacyCid = true)
-        .getField("reference").as("ref"))
-      .as[String].collect().toSeq
-    // "cid:p9" → trimmed key "p9"... the refmap is keyed by fullUrl
-    // ("urn:uuid:p9"), so the cid path only hits when the trimmed id IS
-    // the map key — mirror of the reference's updateReference
-    // (bundle.go:137-147) where refMap keys are bare ids in the legacy path
-    assert(out == Seq("cid:p9", "cid:nope"))
-    val bareMap = df.select($"r",
-      map(lit("p9"), lit("Patient/NEW")).as("refmap"))
-    val out2 = bareMap.select(
-      ReferenceRewrite.rewriteValue(
-        $"r", Schemas.reference, $"refmap", legacyCid = true)
-        .getField("reference").as("ref"))
-      .as[String].collect().toSeq
-    assert(out2 == Seq("Patient/NEW", "cid:nope"))
+    // the same observation in a bundle keyed by fullUrl ("urn:uuid:p9") and
+    // in one keyed by the bare id ("p9"): the cid path only hits when the
+    // trimmed id IS a fullUrl — mirror of the reference's updateReference
+    // (bundle.go:137-147), where refMap keys are bare ids in the legacy path
+    def bundle(patientUrl: String) =
+      s"""{"resourceType": "Bundle", "entry": [
+         |{"fullUrl": "$patientUrl", "resource": {"resourceType": "Patient"}},
+         |{"fullUrl": "urn:uuid:o9", "resource": {"resourceType": "Observation",
+         |"subject": {"reference": "cid:p9"},
+         |"basedOn": [{"reference": "cid:nope"}]}}]}""".stripMargin
+    val bundles = Seq(("mem://urn", bundle("urn:uuid:p9")),
+        ("mem://bare", bundle("p9")))
+      .toDF("bundle_path", "json")
+      .select($"bundle_path", from_json($"json", Schemas.bundle).as("b"))
+      .select($"bundle_path", $"b.entry")
+    def refs(legacyCid: Boolean): Map[String, (String, Seq[String])] =
+      BundleIngest.rewriteBundle(bundles, legacyCid)
+        .select($"bundle_path", explode($"entry").as("e"))
+        .where($"e.resource.resourceType" === "Observation")
+        .select($"bundle_path", $"e.resource.subject.reference",
+          $"e.resource.basedOn.reference")
+        .as[(String, String, Seq[String])].collect()
+        .map(r => r._1 -> (r._2, r._3)).toMap
+    val patient = BundleIngest.rewriteBundle(bundles)
+      .where($"bundle_path" === "mem://bare")
+      .select(explode($"entry.resource.id")).as[String].head()
+    assert(refs(legacyCid = true) == Map(
+      "mem://urn" -> ("cid:p9", Seq("cid:nope")),
+      "mem://bare" -> (s"Patient/$patient", Seq("cid:nope"))))
+    assert(refs(legacyCid = false) == Map(
+      "mem://urn" -> ("cid:p9", Seq("cid:nope")),
+      "mem://bare" -> ("cid:p9", Seq("cid:nope"))))
   }
 }

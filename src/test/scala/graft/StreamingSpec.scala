@@ -1599,4 +1599,44 @@ test("corpus ownership: one landed corpus dir belongs to one stream " +
       .as[(String, Double, Long, Double)].collect().toSeq
     assert(estS == estB && estS.nonEmpty)
   }
+
+  test("StreamBench.window: an empty window fails naming the query, the " +
+      "window and the batches seen; batches after the bootstrap one give " +
+      "their rows over their trigger time") {
+    import graft.tools.StreamBench
+    val empty = intercept[IllegalStateException] {
+      StreamBench.window("windowed_agg", 4, Seq.empty)
+    }
+    assert(empty.getMessage.contains("windowed_agg") &&
+      empty.getMessage.contains("4s window") &&
+      empty.getMessage.contains("0 batches seen"))
+    implicit val sqlCtx = spark.sqlContext
+    val src = MemoryStream[Long]
+    // the first batch's rows are in before the start, so the bootstrap
+    // batch is the 3-row one
+    src.addData(1L to 3L: _*)
+    val q = src.toDF().writeStream.format("noop")
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft-streambench-spec").toString)
+      .start()
+    try {
+      q.processAllAvailable()
+      for (n <- Seq(5, 7)) {
+        src.addData(1L to n.toLong: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val progress = q.recentProgress.toSeq
+    assert(progress.map(_.numInputRows) == Seq(3L, 5L, 7L))
+    val bootstrapOnly = intercept[IllegalStateException] {
+      StreamBench.window("sessionize", 20, progress.take(1))
+    }
+    assert(bootstrapOnly.getMessage.contains("sessionize") &&
+      bootstrapOnly.getMessage.contains("1 batches seen"))
+    val w = StreamBench.window("sessionize", 20, progress)
+    val ms = progress.drop(1)
+      .map(_.durationMs.get("triggerExecution").toLong).sum
+    assert(w == StreamBench.Window(12L, 2, ms))
+    assert(w.rowsPerSec == 12 / (ms / 1000.0))
+  }
 }
