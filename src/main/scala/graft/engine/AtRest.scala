@@ -230,7 +230,9 @@ object AtRest {
     * the base). `P` is the per-corpus parameter the stamp carries; it is
     * resolved once per call from the corpus being built or from the
     * union being extended to, and handed to the key, the build and the
-    * delta.
+    * delta. `params` also gets the index's current stamp, so a family
+    * whose parameter costs a probe can take it from a stamp written for
+    * the same corpus instead.
     *
     * The stamp rules, which decide whether an extension may run:
     *
@@ -256,7 +258,7 @@ object AtRest {
     */
   final case class Family[P](
       layout: Layout,
-      params: DataFrame => P,
+      params: (DataFrame, Option[String]) => P,
       key: (DataFrame, P) => String,
       model: Option[DataFrame => String],
       build: (DataFrame, String, P) => Unit,
@@ -298,7 +300,7 @@ object AtRest {
     */
   def ensure[P](f: Family[P], corpus: DataFrame, path: String,
       force: Boolean): Boolean = {
-    val p = f.params(corpus)
+    val p = f.params(corpus, readStamp(corpus.sparkSession, path, f.layout.meta))
     ensureStamped(corpus.sparkSession, path, f.layout.meta,
       f.stamp(corpus, p), force)(f.build(corpus, path, p))
   }
@@ -315,7 +317,7 @@ object AtRest {
       path: String, unionView: Option[DataFrame]): Boolean = {
     val spark = base.sparkSession
     val union = unionView.getOrElse(base.union(batch))
-    val p = f.params(union)
+    val p = f.params(union, readStamp(spark, path, f.layout.meta))
     val unionKey = f.key(union, p)
     extendStamped(spark, path, f.layout.meta,
       coversUnion = f.tail(_, unionKey).isDefined,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.engine.AtRest
+import graft.engine.{AtRest, CorpusId, Memo}
 import graft.engine.Checkpoints.MaterializeOps
 import graft.ext.TextAnalysis._
 
@@ -924,9 +924,9 @@ object Dedup {
 
   /** Session-lifetime memo of the expensive near-dup ARTIFACTS — the
     * verified pair relation and the CC cluster labels — keyed exactly
-    * like [[Similarity]]'s trained-centroid cache: the input's
-    * canonicalized plan hash + the file-metadata fingerprint + the
-    * hyperparameters. A real pipeline materializes the pair graph once
+    * like [[Similarity]]'s trained-centroid memo: the input's
+    * [[CorpusId]] + the hyperparameters. A real pipeline materializes
+    * the pair graph once
     * and every consumer (rewrite, histogram, split, savings report)
     * reads the artifact; the declared rider queries do the same, and
     * each artifact keeps exactly ONE live builder so its cost stays
@@ -936,50 +936,26 @@ object Dedup {
     * Values are
     * localCheckpointed relations, edge/label-bounded (near-dup graphs
     * are sparse — the artifact is orders of magnitude smaller than the
-    * corpus it audits).
+    * corpus it audits). The labels build runs the pairs build nested.
     */
-  private val artifactCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, String), DataFrame]()
+  private val artifactMemo = new Memo[DataFrame]
 
-  private[graft] def artifactCacheSize: Int = artifactCache.size()
+  private[graft] def artifactCacheSize: Int = artifactMemo.size
 
   /** Invalidation hook — the
     * [[Similarity.invalidateTrainedCentroids]] analog for inputs
-    * mutated in ways the (plan, file-metadata) key cannot see.
+    * mutated in ways the corpus identity cannot see.
     */
-  def invalidateDedupArtifacts(): Unit = artifactCache.clear()
+  def invalidateDedupArtifacts(): Unit = artifactMemo.clear()
 
-  // double-checked build guard, NOT putIfAbsent: a losing racer's
-  // already-checkpointed relation would leak executor storage for the
-  // session (computeIfAbsent is out — the ccLabels build calls
-  // cachedPairs, and nested computeIfAbsent on one ConcurrentHashMap is
-  // undefined; synchronized is reentrant, so the nested build is safe).
-  // Concurrent first builds of DIFFERENT artifacts serialize — the
-  // builds are rare one-per-session events, the trade is fine.
-  private def memoized(key: (Int, Int, String))(
-      build: => DataFrame): DataFrame = {
-    val hit = artifactCache.get(key)
-    if (hit != null) hit
-    else artifactCache.synchronized {
-      val again = artifactCache.get(key)
-      if (again != null) again
-      else {
-        val built = build.materialized
-        artifactCache.put(key, built)
-        built
-      }
-    }
-  }
-
-  private def artifactKey(input: DataFrame,
-      tag: String): (Int, Int, String) =
-    (input.queryExecution.analyzed.semanticHash(),
-      Similarity.corpusFingerprint(input), tag)
+  private def memoized(input: DataFrame, tag: String)(
+      build: => DataFrame): DataFrame =
+    artifactMemo(CorpusId.of(input), tag)(build.materialized)
 
   /** [[jaccardPairsIndexHashed]] as a session-cached artifact. */
   def cachedPairs(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.5): DataFrame =
-    memoized(artifactKey(docs, s"pairs:$n:$threshold"))(
+    memoized(docs, s"pairs:$n:$threshold")(
       jaccardPairsIndexHashed(docs, n, threshold))
 
   /** [[dedupClusters]] over [[cachedPairs]], with the edge-label
@@ -992,7 +968,7 @@ object Dedup {
       maxIters: Int = 50): DataFrame = {
     val pairs = cachedPairs(docs, n, threshold)
     labelCorpus(docs,
-      memoized(artifactKey(docs, s"ccLabels:$n:$threshold:$maxIters")) {
+      memoized(docs, s"ccLabels:$n:$threshold:$maxIters") {
         ccMinLabelLoop(symmetricEdges(pairs), maxIters)._1
       })
   }
@@ -1068,14 +1044,6 @@ object Dedup {
   private val DedupLayout = AtRest.Layout("_graft_dedup_meta",
     Seq(AtRest.Accreting("prefix")))
 
-  private def dedupStamp(docs: DataFrame, n: Int, threshold: Double,
-      maxIters: Int): String =
-    // trailing layout version: 2 added the at-rest prefix index, so a
-    // v1 artifact dir (no prefix/) can never stamp-match and extend
-    Seq(Similarity.corpusFingerprint(docs),
-      docs.queryExecution.analyzed.semanticHash(), n, threshold, maxIters, 2)
-      .mkString(":")
-
   /** The exact near-dup index family ([[writeDedupIndex]]). Its delta
     * finds every verified pair INVOLVING the new batch, in
     * [[jaccardPairsIndexHashed]]'s exact (da < db, j) contract:
@@ -1102,8 +1070,10 @@ object Dedup {
     * production default at scale.
     */
   private def dedupFamily(n: Int, threshold: Double, maxIters: Int) =
-    AtRest.Family[Unit](DedupLayout, _ => (),
-      key = (docs, _) => dedupStamp(docs, n, threshold, maxIters),
+    AtRest.Family[Unit](DedupLayout, (_, _) => (),
+      // trailing layout version: 2 added the at-rest prefix index, so a
+      // v1 artifact dir (no prefix/) can never stamp-match and extend
+      key = (docs, _) => CorpusId.stamp(docs, n, threshold, maxIters, 2),
       model = None,
       build = (docs, path, _) =>
         writeDedupIndex(docs, path, n, threshold, maxIters),
@@ -1235,6 +1205,23 @@ object Dedup {
     (h, b)
   }
 
+  /** The banding an LSH index stamp holds, when that stamp is `docs`'s
+    * own key under it. The banding is a pure function of the corpus, so
+    * an index stamped for this corpus already holds the probe's answer,
+    * and a no-op ensure starts no Spark job. As with
+    * [[jaccardPairsLshAuto]]'s decision at rest, only the hash budget is
+    * read, and only one of [[chooseLshBands]]' two; the band count is
+    * derived, so a stamp under any other banding fails the key match
+    * and rebuilds.
+    */
+  private def stampedBanding(docs: DataFrame, stamp: Option[String], n: Int,
+      threshold: Double, maxIters: Int): Option[(Int, Int)] =
+    stamp.collect { case StampedBudget(h) => (h.toInt, LshNumHashes / 2) }
+      .filter(p => (p._1 == LshNumHashes || p._1 == 2 * LshNumHashes) &&
+        stamp.contains(dedupLshStamp(docs, n, threshold, maxIters, p)))
+
+  private val StampedBudget = """.*:h=(\d+):b=\d+:2""".r
+
   private def dedupLshStamp(docs: DataFrame, n: Int, threshold: Double,
       maxIters: Int, params: (Int, Int)): String =
     // banding params as EXPLICIT h=/b= fields (v2): v1 stamped them
@@ -1242,9 +1229,8 @@ object Dedup {
     // Ints to "128.0". A v1 stamp never equals a v2 key, which is the
     // safe arm: full string-equality gating means it rebuilds, never
     // mixes key spaces.
-    Seq(Similarity.corpusFingerprint(docs),
-      docs.queryExecution.analyzed.semanticHash(), n, threshold, maxIters,
-      s"h=${params._1}", s"b=${params._2}", 2).mkString(":")
+    CorpusId.stamp(docs, n, threshold, maxIters,
+      s"h=${params._1}", s"b=${params._2}", 2)
 
   /** The LSH-keyed at-rest near-dup index — [[writeDedupIndex]] with
     * banded minhash keys (`path/bands`) in place of the exact prefix
@@ -1291,7 +1277,9 @@ object Dedup {
     */
   private[graft] def dedupLshFamily(n: Int = 3, threshold: Double = 0.5,
       maxIters: Int = 50) =
-    AtRest.Family[(Int, Int)](DedupLshLayout, lshIndexParams(_, n),
+    AtRest.Family[(Int, Int)](DedupLshLayout,
+      (docs, stamp) => stampedBanding(docs, stamp, n, threshold, maxIters)
+        .getOrElse(lshIndexParams(docs, n)),
       key = dedupLshStamp(_, n, threshold, maxIters, _),
       model = None,
       build = (docs, path, params) => writeDedupIndexLsh(docs, path, n,
@@ -1638,9 +1626,7 @@ object Dedup {
       case Some(ip) =>
         val h = graft.engine.AtRest.statStamped(docs.sparkSession,
           ip, LshProbeMeta,
-          Seq(Similarity.corpusFingerprint(docs),
-            docs.queryExecution.analyzed.semanticHash(), n,
-            LshNumHashes, 1).mkString(":"), "lshprobe") {
+          CorpusId.stamp(docs, n, LshNumHashes, 1), "lshprobe") {
           chooseLshBands(docs, n, LshNumHashes)._1.toDouble
         }.toInt
         (h, LshNumHashes / 2)
@@ -1932,9 +1918,7 @@ object Dedup {
       case Some(ip) =>
         graft.engine.AtRest.statStamped(docs.sparkSession, ip,
           SimhashProbeMeta,
-          Seq(Similarity.corpusFingerprint(docs),
-            docs.queryExecution.analyzed.semanticHash(), radius, 1)
-            .mkString(":"), "shprobe") {
+          CorpusId.stamp(docs, radius, 1), "shprobe") {
           estimateSimhashCollisionsPerDoc(docs, radius)
         }
       case None => estimateSimhashCollisionsPerDoc(docs, radius)
@@ -2002,9 +1986,7 @@ object Dedup {
       case Some(ip) =>
         graft.engine.AtRest.statStamped(docs.sparkSession, ip,
           WinnowProbeMeta,
-          Seq(Similarity.corpusFingerprint(docs),
-            docs.queryExecution.analyzed.semanticHash(), k, w, 1)
-            .mkString(":"), "wnprobe") {
+          CorpusId.stamp(docs, k, w, 1), "wnprobe") {
           estimateWinnowCollisionsPerDoc(docs, k, w)
         }
       case None => estimateWinnowCollisionsPerDoc(docs, k, w)
@@ -2390,12 +2372,6 @@ object Dedup {
   private val CdcLayout = AtRest.Layout("_graft_cdc_meta",
     Seq(AtRest.Accreting("chunks")))
 
-  private def cdcStamp(docs: DataFrame, p: Int, threshold: Double,
-      maxDf: Option[Long]): String =
-    Seq(Similarity.corpusFingerprint(docs),
-      docs.queryExecution.analyzed.semanticHash(), p, threshold,
-      maxDf.getOrElse(0L), 1).mkString(":")
-
   /** The CDC containment artifacts AT REST — the containment family's
     * x116/x131 discipline: `path/chunks` persists the corpus's distinct
     * (doc_id, fp) chunk fingerprints (the expensive linear pass —
@@ -2430,8 +2406,9 @@ object Dedup {
     */
   private[graft] def cdcFamily(p: Int, threshold: Double,
       maxDf: Option[Long]) =
-    AtRest.Family[Unit](CdcLayout, _ => (),
-      key = (docs, _) => cdcStamp(docs, p, threshold, maxDf),
+    AtRest.Family[Unit](CdcLayout, (_, _) => (),
+      key = (docs, _) =>
+        CorpusId.stamp(docs, p, threshold, maxDf.getOrElse(0L), 1),
       model = None,
       build = (docs, path, _) => writeCdcIndex(docs, path, p, threshold,
         maxDf),
@@ -2471,10 +2448,6 @@ object Dedup {
 
   private val DfLayout = AtRest.Layout("_graft_df_meta",
     Seq(AtRest.Accreting("df", merge = Some(mergeDf))))
-
-  private def dfStamp(docs: DataFrame, n: Int): String =
-    Seq(Similarity.corpusFingerprint(docs),
-      docs.queryExecution.analyzed.semanticHash(), n, 1).mkString(":")
 
   /** One corpus pass of PARTIAL shingle document frequencies — the
     * map-side-combined (shingle, count) aggregate both
@@ -2518,8 +2491,8 @@ object Dedup {
     * relation instead of thousands of shards.
     */
   private[graft] def dfFamily(n: Int = 3) =
-    AtRest.Family[Unit](DfLayout, _ => (),
-      key = (docs, _) => dfStamp(docs, n),
+    AtRest.Family[Unit](DfLayout, (_, _) => (),
+      key = (docs, _) => CorpusId.stamp(docs, n, 1),
       model = None,
       build = (docs, path, _) => writeShingleDfIndex(docs, path, n),
       delta = (_, batch, path, _) =>
@@ -2594,11 +2567,8 @@ object Dedup {
       path: String, n: Int = 3, threshold: Double = 0.9,
       sampleSize: Int = 1024): Double = {
     val spark = docs.sparkSession
-    val stamp = Seq(Similarity.corpusFingerprint(docs),
-      docs.queryExecution.analyzed.semanticHash(), n, threshold,
-      sampleSize, 1).mkString(":")
-    graft.engine.AtRest.statStamped(spark, path, ContProbeMeta, stamp,
-      "probe") {
+    graft.engine.AtRest.statStamped(spark, path, ContProbeMeta,
+        CorpusId.stamp(docs, n, threshold, sampleSize, 1), "probe") {
       ensureShingleDfIndex(docs, path, n)
       estimateContainmentCandidatesPerDoc(docs, n, threshold,
         sampleSize, df = Some(readShingleDf(spark, path)))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.Checkpoints.MaterializeOps
-import graft.engine.{AtRest, Tables}
+import graft.engine.{AtRest, CorpusId, Memo, Tables}
 
 /** Training + assignment profile for the at-rest index builders
   * ([[Similarity.writeKnnIndex]] / [[Similarity.writeIvfIndex]] and their
@@ -699,13 +699,11 @@ object Similarity {
     * a frozen trained model. */
   private def ivfCorpusPart(corpus: DataFrame, nCentroids: Int,
       iters: Int, profile: IndexProfile): String =
-    Seq(corpusFingerprint(corpus),
-      corpus.queryExecution.analyzed.semanticHash(), nCentroids, iters, 2,
+    CorpusId.stamp(corpus, nCentroids, iters, 2,
       // token of the RESOLVED profile (nCentroids is explicit here), so
       // the hier auto-switch is legible in the stamp and a threshold
       // change that flips the effective trainer rebuilds
       profileToken(resolveProfile(nCentroids, profile)))
-      .mkString(":")
 
   /** The IVF corpus index family ([[writeIvfIndex]]) — the simplest
     * member of the incremental at-rest families: its delta assigns the
@@ -723,9 +721,9 @@ object Similarity {
     */
   private[graft] def ivfFamily(nCentroids: Int, iters: Int,
       profile: IndexProfile) =
-    AtRest.Family[Unit](IvfLayout, _ => (),
+    AtRest.Family[Unit](IvfLayout, (_, _) => (),
       key = (corpus, _) => ivfCorpusPart(corpus, nCentroids, iters, profile),
-      model = Some(knnModelPart),
+      model = Some(CorpusId.field),
       build = (corpus, path, _) =>
         writeIvfIndex(corpus, path, nCentroids, iters, profile),
       delta = (_, batch, path, _) =>
@@ -803,8 +801,7 @@ object Similarity {
     */
   private def knnCorpusPart(emb: DataFrame, k: Int, perCell: Int,
       profile: IndexProfile): String =
-    Seq(corpusFingerprint(emb),
-      emb.queryExecution.analyzed.semanticHash(), k, perCell,
+    CorpusId.stamp(emb, k, perCell,
       // the derived cell count is a function of (corpus, perCell, kMax),
       // so the ceiling rides the stamp: a build under a different
       // ceiling over an existing artifact gets a rebuild, never a
@@ -827,7 +824,7 @@ object Similarity {
         case p: IndexProfile.Production => p.hierKMin
         case IndexProfile.Exact => IndexProfile.Production().hierKMin
       },
-      KnnIndexLayoutVersion, profileToken(profile)).mkString(":")
+      KnnIndexLayoutVersion, profileToken(profile))
 
   /** The x94 kNN EDGE relation at rest: cell-local top-`k` edges (cid,
     * cell, nid, cos) under `path/edges` with the trained centroids as a
@@ -859,15 +856,6 @@ object Similarity {
     cents.write.mode("overwrite").parquet(s"$path/_centroids")
   }
 
-  /** The model half of the kNN- and IVF-index stamps: which corpus the
-    * centroids were trained on — file fingerprint AND plan hash (the
-    * fingerprint alone is constant for non-file relations, e.g. test
-    * fixtures).
-    */
-  private def knnModelPart(trainedOn: DataFrame): String =
-    corpusFingerprint(trainedOn) + ":" +
-      trainedOn.queryExecution.analyzed.semanticHash()
-
   /** The kNN edge index family ([[writeKnnIndex]]) — the reason the v2
     * layout partitions by cell. Its delta assigns new vectors against
     * the AT-REST centroids (one broadcast argmax over the batch alone —
@@ -888,9 +876,9 @@ object Similarity {
     */
   private[graft] def knnFamily(k: Int = 5, perCell: Int = 250,
       profile: IndexProfile = IndexProfile.Exact) =
-    AtRest.Family[Unit](KnnLayout, _ => (),
+    AtRest.Family[Unit](KnnLayout, (_, _) => (),
       key = (emb, _) => knnCorpusPart(emb, k, perCell, profile),
-      model = Some(knnModelPart),
+      model = Some(CorpusId.field),
       build = (emb, path, _) => writeKnnIndex(emb, path, k, perCell, profile),
       delta = (_, batch, path, _) => {
         val spark = batch.sparkSession
@@ -1132,48 +1120,23 @@ object Similarity {
   val refreshImbalanceDefault = 8.0
 
   /** Session-lifetime memo of trained centroid sets, keyed by the
-    * corpus's canonicalized plan hash + hyperparameters. Training is
+    * corpus's [[CorpusId]] + hyperparameters. Training is
     * deterministic, so reuse is exact — the trained index is the same
     * class of artifact as a broadcast dim, and consumers that share a
     * corpus (x15's probe, x35's recall audit, PipelineMain's SemDeDup)
     * should pay for it once per JVM, not once per query. Values are
-    * k×dim floats — bounded driver state.
+    * k×dim floats — bounded driver state. A corpus over an RDD leaf
+    * (a checkpointed relation) has no identity and trains uncached;
+    * [[trainCentroidsKeyed]] names the stable inputs it derives from.
     */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, Int, Int, String), Seq[(Long, Seq[Float])]]()
+  private val centroidMemo = new Memo[Seq[(Long, Seq[Float])]]
 
-  private[graft] def trainCacheSize: Int = centroidCache.size()
-
-  /** Driver-side fingerprint of the corpus's underlying DATA, folded into
-    * the cache key beside the plan hash: the plan hash of a file-based
-    * relation reduces to its input path, so a long-lived session that
-    * rewrites files under the same path (notebook, regenerated pipeline
-    * output) would otherwise silently reuse centroids trained on the old
-    * bytes. Hashes every leaf file's (path, length, mtime) from the
-    * relation's file index — a metadata walk of the already-cached
-    * listing, no Spark job — plus a marker per non-file leaf (whose data,
-    * e.g. a LocalRelation's rows, the plan hash already covers).
-    */
-  private[graft] def corpusFingerprint(corpus: DataFrame): Int = {
-    import org.apache.spark.sql.execution.datasources.{
-      HadoopFsRelation, LogicalRelation}
-    val entries: Seq[(String, Long, Long)] =
-      corpus.queryExecution.analyzed.collect {
-        case l: LogicalRelation => l.relation match {
-          case h: HadoopFsRelation =>
-            h.location.listFiles(Nil, Nil).flatMap(_.files)
-              .map(f => (f.getPath.toString, f.getLen,
-                f.getModificationTime))
-          case other => Seq((other.getClass.getName, 0L, 0L))
-        }
-      }.flatten.sortBy(_._1)
-    scala.util.hashing.MurmurHash3.seqHash(entries)
-  }
+  private[graft] def trainCacheSize: Int = centroidMemo.size
 
   /** Stamp-prefix rewrite for a consolidated corpus: every at-rest
-    * family's stamp leads with `corpusFingerprint:semanticHash:` of its
-    * corpus read plan, so re-bucketing identical rows into consolidated
-    * dirs is a pure prefix swap — every trailing field (params, layout
+    * family's stamp leads with the [[CorpusId]] of its corpus read
+    * plan, so re-bucketing identical rows into consolidated dirs is a
+    * swap of that one field — every trailing field (params, layout
     * version, the frozen `|model=` term) carries over verbatim, which
     * is exactly what keeps the trained model FROZEN through a
     * consolidation (a fresh ensure over the new plan would re-train;
@@ -1181,38 +1144,25 @@ object Similarity {
     */
   private[graft] def corpusPrefixRewrite(oldCorpus: DataFrame,
       newCorpus: DataFrame): String => Option[String] = {
-    val o = corpusFingerprint(oldCorpus) + ":" +
-      oldCorpus.queryExecution.analyzed.semanticHash() + ":"
-    val n = corpusFingerprint(newCorpus) + ":" +
-      newCorpus.queryExecution.analyzed.semanticHash() + ":"
+    val o = CorpusId.field(oldCorpus) + ":"
+    val n = CorpusId.field(newCorpus) + ":"
     s => if (s.startsWith(o)) Some(n + s.substring(o.length)) else None
   }
 
   /** Invalidation hook for callers that mutate inputs out-of-band in ways
-    * the (plan, file-metadata) key cannot see — e.g. an object store that
+    * the corpus identity cannot see — e.g. an object store that
     * preserves mtimes on restore.
     */
-  def invalidateTrainedCentroids(): Unit = centroidCache.clear()
+  def invalidateTrainedCentroids(): Unit = centroidMemo.clear()
 
-  private[graft] def trainCacheKey(corpus: DataFrame, nCentroids: Int,
-      iters: Int, init: String = "first"): (Int, Int, Int, Int, String) =
-    (corpus.queryExecution.analyzed.semanticHash(),
-      corpusFingerprint(corpus), nCentroids, iters, init)
+  /** [[trainCentroids]]' memo key: (corpus identity, tag). */
+  private[graft] def centroidKey(corpus: DataFrame, nCentroids: Int,
+      iters: Int, init: String = "first"): (Option[String], String) =
+    (CorpusId.of(corpus), s"full:$nCentroids:$iters:$init")
 
   private[graft] def trainCacheContains(corpus: DataFrame, nCentroids: Int,
       iters: Int): Boolean =
-    centroidCache.containsKey(trainCacheKey(corpus, nCentroids, iters))
-
-  /** An RDD-backed leaf (a checkpointed/materialized relation) has no
-    * stable identity across calls — its plan hash is the RDD object's
-    * identity, unique per materialization — so caching on it can never
-    * hit and would grow the cache by one dead entry per call (the
-    * pipeline composite materializes its survivor relation fresh each
-    * run). Such corpora train uncached.
-    */
-  private def cacheableCorpus(corpus: DataFrame): Boolean =
-    !corpus.queryExecution.analyzed.collectLeaves().exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    (centroidMemo.contains _).tupled(centroidKey(corpus, nCentroids, iters))
 
   /** Above this centroid count the Lloyd assignment switches from
     * inlined literal-centroid expressions to a broadcast join
@@ -1330,26 +1280,15 @@ object Similarity {
     */
   def trainCentroids(corpus: DataFrame, nCentroids: Int = 8,
       iters: Int = 3, init: String = "first"): DataFrame = {
-    val spark = corpus.sparkSession
+    val (id, tag) = centroidKey(corpus, nCentroids, iters, init)
+    centroidFrame(corpus, centroidMemo(id, tag)(
+      trainCentroidsUncached(corpus, nCentroids, iters, init)))
+  }
+
+  private def centroidFrame(like: DataFrame,
+      cent: Seq[(Long, Seq[Float])]): DataFrame = {
+    val spark = like.sparkSession
     import spark.implicits._
-    val cent =
-      if (!cacheableCorpus(corpus))
-        trainCentroidsUncached(corpus, nCentroids, iters, init)
-      else {
-        val key = trainCacheKey(corpus, nCentroids, iters, init)
-        // NOT computeIfAbsent: training runs multi-job Spark work, and
-        // doing that inside the map's bin lock would block an unrelated
-        // key hashing to the same bin for the whole run. Training is
-        // deterministic, so the putIfAbsent race is harmless — a rare
-        // duplicate run, same value.
-        val cached = centroidCache.get(key)
-        if (cached != null) cached
-        else {
-          val trained = trainCentroidsUncached(corpus, nCentroids, iters, init)
-          val prior = centroidCache.putIfAbsent(key, trained)
-          if (prior != null) prior else trained
-        }
-      }
     cent.toDF("vec_id", "embedding")
   }
 
@@ -1387,29 +1326,37 @@ object Similarity {
     * and the session cache keys on the SOURCE corpus + parameters.
     */
   def trainCentroidsSampled(corpus: DataFrame, nCentroids: Int,
-      maxTrainRows: Int, iters: Int = 3): DataFrame = {
+      maxTrainRows: Int, iters: Int = 3): DataFrame =
+    centroidFrame(corpus, centroidMemo(CorpusId.of(corpus),
+        s"sampled:$nCentroids:$maxTrainRows:$iters") {
+      trainCentroidsUncached(trainingSample(corpus, nCentroids, maxTrainRows),
+        nCentroids, iters, "first")
+    })
+
+  /** The hash-ordered training sample of [[trainCentroidsSampled]] and
+    * [[trainCentroidsHier]]: at most `maxTrainRows` rows, re-identified
+    * 0..s−1 so the first-k seeding rule stays meaningful on it.
+    */
+  private def trainingSample(corpus: DataFrame, nCentroids: Int,
+      maxTrainRows: Int): DataFrame = {
     require(maxTrainRows >= nCentroids,
       s"maxTrainRows $maxTrainRows must be >= nCentroids $nCentroids")
-    import org.apache.spark.sql.expressions.Window
-    val sample = corpus
-      .orderBy(md5(concat(lit("ktrain:"), col("vec_id").cast("string"))),
-        col("vec_id"))
-      .limit(maxTrainRows)
     // materialized AND re-spread: without this every Lloyd pass would
     // re-run the corpus TakeOrdered, and the single-partition window
     // output would serialize the assignment joins onto one task
     // (measured: the un-materialized draft trained SLOWER than the
     // full corpus — 113 s vs 64 s at 100×/k=800)
-    val reid = sample.select(col("vec_id"), col("embedding"))
+    corpus
+      .orderBy(md5(concat(lit("ktrain:"), col("vec_id").cast("string"))),
+        col("vec_id"))
+      .limit(maxTrainRows)
+      .select(col("vec_id"), col("embedding"))
       .withColumn("rid",
         row_number().over(Window.orderBy(col("vec_id"))) - 1)
       .select(col("rid").cast("long").as("vec_id"), col("embedding"))
       .repartition(
         samplePartitions(corpus.sparkSession, maxTrainRows, nCentroids))
       .materialized
-    trainCentroidsKeyed(reid,
-      s"sampled:$nCentroids:$maxTrainRows:$iters", Seq(corpus),
-      nCentroids, iters)
   }
 
   /** [[trainCentroidsSampled]] with the per-pass assignment made
@@ -1436,42 +1383,24 @@ object Similarity {
     */
   def trainCentroidsHier(corpus: DataFrame, nCentroids: Int,
       maxTrainRows: Int, iters: Int = 3, coarseK: Int = 0,
-      nprobeGroups: Int = 1): DataFrame = {
-    require(maxTrainRows >= nCentroids,
-      s"maxTrainRows $maxTrainRows must be >= nCentroids $nCentroids")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val inputsHash = scala.util.hashing.MurmurHash3.seqHash(
-      Seq((corpus.queryExecution.analyzed.semanticHash(),
-        corpusFingerprint(corpus))))
-    val key = (s"hier:$maxTrainRows:$coarseK:$nprobeGroups".hashCode,
-      inputsHash, nCentroids, iters, "first")
-    val cached = centroidCache.get(key)
-    if (cached != null) return cached.toDF("vec_id", "embedding")
-    val sample = corpus
-      .orderBy(md5(concat(lit("ktrain:"), col("vec_id").cast("string"))),
-        col("vec_id"))
-      .limit(maxTrainRows)
-    val reid = sample.select(col("vec_id"), col("embedding"))
-      .withColumn("rid",
-        row_number().over(Window.orderBy(col("vec_id"))) - 1)
-      .select(col("rid").cast("long").as("vec_id"), col("embedding"))
-      .repartition(samplePartitions(spark, maxTrainRows, nCentroids))
-      .materialized
-    var cent: Seq[(Long, Seq[Float])] = reid
-      .filter(col("vec_id") < nCentroids)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    for (_ <- 0 until iters if cent.nonEmpty) {
-      val assigned = assignCellsCoarse(reid,
-        cent.toDF("vec_id", "embedding"), coarseK, nprobeGroups)
-        .select(col("ce").as("embedding"), col("cell"))
-      cent = lloydUpdate(assigned)
-    }
-    val prior = centroidCache.putIfAbsent(key, cent)
-    (if (prior != null) prior else cent).toDF("vec_id", "embedding")
-  }
+      nprobeGroups: Int = 1): DataFrame =
+    centroidFrame(corpus, centroidMemo(CorpusId.of(corpus),
+        s"hier:$nCentroids:$maxTrainRows:$iters:$coarseK:$nprobeGroups") {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      val sample = trainingSample(corpus, nCentroids, maxTrainRows)
+      var cent: Seq[(Long, Seq[Float])] = sample
+        .filter(col("vec_id") < nCentroids)
+        .select(col("vec_id"), col("embedding"))
+        .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
+      for (_ <- 0 until iters if cent.nonEmpty) {
+        val assigned = assignCellsCoarse(sample,
+          cent.toDF("vec_id", "embedding"), coarseK, nprobeGroups)
+          .select(col("ce").as("embedding"), col("cell"))
+        cent = lloydUpdate(assigned)
+      }
+      cent
+    })
 
   /** Mean per-vector best assigned cosine — the quantization-quality
     * scalar probes compare centroid sets with (higher = vectors sit
@@ -1495,9 +1424,9 @@ object Similarity {
     * function of stable upstream inputs. The caller names that closure:
     * `keyTag` identifies the derivation (include every flag that changes
     * the derived corpus) and `keyCorpora` are the file-backed inputs it
-    * is derived from — the memo key folds each input's plan hash + data
-    * fingerprint, so a rewritten input file invalidates exactly like
-    * [[trainCentroids]]'s own key. First call trains on the (fast,
+    * is derived from — the memo key is their [[CorpusId]]s, so a
+    * rewritten input file invalidates exactly like [[trainCentroids]]'s
+    * own key. First call trains on the (fast,
     * block-resident) checkpointed corpus; later calls in the session —
     * bench passes, repeated pipeline runs — reuse the model, the x47
     * resident-index pattern applied to training.
@@ -1507,23 +1436,10 @@ object Similarity {
     */
   def trainCentroidsKeyed(corpus: DataFrame, keyTag: String,
       keyCorpora: Seq[DataFrame], nCentroids: Int = 8, iters: Int = 3,
-      init: String = "first"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val inputsHash = scala.util.hashing.MurmurHash3.seqHash(
-      keyCorpora.map(c => (c.queryExecution.analyzed.semanticHash(),
-        corpusFingerprint(c))))
-    val key = (keyTag.hashCode, inputsHash, nCentroids, iters, init)
-    val cached = centroidCache.get(key)
-    val cent =
-      if (cached != null) cached
-      else {
-        val trained = trainCentroidsUncached(corpus, nCentroids, iters, init)
-        val prior = centroidCache.putIfAbsent(key, trained)
-        if (prior != null) prior else trained
-      }
-    cent.toDF("vec_id", "embedding")
-  }
+      init: String = "first"): DataFrame =
+    centroidFrame(corpus, centroidMemo(CorpusId.of(keyCorpora),
+        s"keyed:$keyTag:$nCentroids:$iters:$init")(
+      trainCentroidsUncached(corpus, nCentroids, iters, init)))
 
   private def trainCentroidsUncached(corpus: DataFrame, nCentroids: Int,
       iters: Int, init: String): Seq[(Long, Seq[Float])] = {
@@ -2092,39 +2008,21 @@ object Similarity {
     * (x111) all consume the same edge artifact a pipeline would
     * materialize once, while x94 ([[knnGraph]]) keeps building its
     * edges live so the edge-generation cost stays measured. Keyed by
-    * both inputs' plan hashes + file fingerprints + k; values are
-    * n·k-row localCheckpoints.
+    * both inputs' [[CorpusId]]s + k; values are n·k-row
+    * localCheckpoints.
     */
-  private val edgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int, Int, Int, Int), DataFrame]()
+  private val edgeMemo = new Memo[DataFrame]
 
-  private[graft] def edgeCacheSize: Int = edgeCache.size()
+  private[graft] def edgeCacheSize: Int = edgeMemo.size
 
   /** Invalidation hook, the [[invalidateTrainedCentroids]] analog. */
-  def invalidateKnnEdges(): Unit = edgeCache.clear()
+  def invalidateKnnEdges(): Unit = edgeMemo.clear()
 
   def cachedKnnEdges(emb: DataFrame, centroids: DataFrame,
-      k: Int): DataFrame = {
-    val key = (emb.queryExecution.analyzed.semanticHash(),
-      corpusFingerprint(emb),
-      centroids.queryExecution.analyzed.semanticHash(),
-      corpusFingerprint(centroids), k)
-    val hit = edgeCache.get(key)
-    if (hit != null) hit
-    // double-checked build guard, not putIfAbsent: a losing racer's
-    // checkpointed edge relation would leak executor storage for the
-    // session (same rationale as Dedup.memoized)
-    else edgeCache.synchronized {
-      val again = edgeCache.get(key)
-      if (again != null) again
-      else {
-        // knnEdges is already materialized; store the checkpointed frame
-        val built = knnEdges(assignCells(emb, centroidRelation(centroids)), k)
-        edgeCache.put(key, built)
-        built
-      }
-    }
-  }
+      k: Int): DataFrame =
+    // knnEdges is already materialized; the memo keeps the checkpoint
+    edgeMemo(CorpusId.of(Seq(emb, centroids)), s"edges:$k")(
+      knnEdges(assignCells(emb, centroidRelation(centroids)), k))
 
   /** Approximate k-nearest-neighbor graph, built within trained k-means
     * cells (the SemDeDup locality assumption: near neighbors share a

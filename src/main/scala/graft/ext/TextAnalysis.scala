@@ -549,35 +549,18 @@ object TextAnalysis {
     * pipeline computes each per-doc signal once and every consumer
     * (the x115 ensemble today) reads the artifact, while x114 keeps
     * computing live so the signal's own cost stays measured. Keyed by
-    * plan hash + file fingerprint.
+    * the corpus's [[graft.engine.CorpusId]].
     */
-  private val entropyCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, Int), DataFrame]()
+  private val entropyMemo = new graft.engine.Memo[DataFrame]
 
-  private[graft] def entropyCacheSize: Int = entropyCache.size()
+  private[graft] def entropyCacheSize: Int = entropyMemo.size
 
   /** Invalidation hook, the cache-family analog. */
-  def invalidateEntropyCache(): Unit = entropyCache.clear()
+  def invalidateEntropyCache(): Unit = entropyMemo.clear()
 
-  def cachedCharEntropy(docs: DataFrame): DataFrame = {
-    val key = (docs.queryExecution.analyzed.semanticHash(),
-      Similarity.corpusFingerprint(docs))
-    val hit = entropyCache.get(key)
-    if (hit != null) hit
-    // double-checked build guard, not putIfAbsent: a losing racer's
-    // checkpointed relation would leak executor storage for the
-    // session (same rationale as Dedup.memoized)
-    else entropyCache.synchronized {
-      val again = entropyCache.get(key)
-      if (again != null) again
-      else {
-        val built = graft.engine.Checkpoints.materialize(
-          charEntropyPerDoc(docs))
-        entropyCache.put(key, built)
-        built
-      }
-    }
-  }
+  def cachedCharEntropy(docs: DataFrame): DataFrame =
+    entropyMemo(graft.engine.CorpusId.of(docs), "entropy")(
+      graft.engine.Checkpoints.materialize(charEntropyPerDoc(docs)))
 
   /** [[charEntropyPerDoc]]'s per-row form: the identical H from ONE
     * sorted-run fold over the char array — sort once, then a single

@@ -21,15 +21,19 @@ object BundleIngest {
     * main.go:255).
     */
   def readBundles(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(Schemas.bundle)
-      .option("multiLine", "true")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.json")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .withColumn("bundle_path", input_file_name())
+    parsed(spark.read.schema(Schemas.bundle).options(ReadOptions).json(path))
+
+  /** The bundle reader's options, shared by [[readBundles]] and the
+    * streaming ingest (`graft.streaming.Streams.bundleStream`).
+    */
+  private[graft] val ReadOptions = Map(
+    "multiLine" -> "true", "recursiveFileLookup" -> "true",
+    "pathGlobFilter" -> "*.json", "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> "_corrupt_record")
+
+  /** Tag each parsed bundle with its file and drop the malformed ones. */
+  private[graft] def parsed(raw: DataFrame): DataFrame =
+    raw.withColumn("bundle_path", input_file_name())
       .filter(col("_corrupt_record").isNull && col("entry").isNotNull)
       .drop("_corrupt_record")
 

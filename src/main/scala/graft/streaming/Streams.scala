@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.engine.{AtRest, Tables}
 import graft.ext.{Dedup, Similarity}
-import graft.fhir.{BundleIngest, Schemas}
+import graft.fhir.{BundleIngest, ParquetSink, Schemas}
 
 /** Structured-Streaming variants (SURVEY §7.4-7 — extension; the reference
   * is strictly batch).
@@ -28,25 +28,20 @@ object Streams {
     * incremental version of the reference's one-shot walk (main.go:111).
     */
   def bundleStream(spark: SparkSession, path: String): DataFrame =
-    BundleIngest.rewriteBundle(
-      spark.readStream
-        .schema(Schemas.bundle)
-        .option("multiLine", "true")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.json")
-        .json(path)
-        .withColumn("bundle_path", input_file_name())
-        .filter(col("_corrupt_record").isNull && col("entry").isNotNull)
-        .drop("_corrupt_record"))
+    BundleIngest.rewriteBundle(BundleIngest.parsed(
+      spark.readStream.schema(Schemas.bundle)
+        .options(BundleIngest.ReadOptions).json(path)))
 
+  /** Each micro-batch goes through the batch job's resource sink, so it
+    * gets the same rebalanced, few-files-per-collection layout.
+    */
   def ingestStream(spark: SparkSession, path: String, outDir: String,
       checkpoint: String): StreamingQuery =
     bundleStream(spark, path).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        BundleIngest.routeResources(batch)
-          .write.mode("append").partitionBy("collection")
-          .parquet(s"$outDir/resources")
+        new ParquetSink(outDir).writeResources(
+          BundleIngest.routeResources(batch))
       }
       .start()
 

@@ -411,8 +411,8 @@ class ExtSpec extends AnyFunSuite {
     val b = Similarity.trainCentroids(fix, nCentroids = 3, iters = 2)
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     assert(a == b)
-    assert(Similarity.trainCacheKey(fix, 2, 2) !=
-      Similarity.trainCacheKey(fix, 3, 2),
+    assert(Similarity.centroidKey(fix, 2, 2) !=
+      Similarity.centroidKey(fix, 3, 2),
       "different params are a different index")
     val c = Similarity.trainCentroids(fix, nCentroids = 2, iters = 2)
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
@@ -467,14 +467,14 @@ class ExtSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(dir)
     writeCorpus(1.0f)
     val v1 = spark.read.parquet(dir)
-    val k1 = Similarity.trainCacheKey(v1, 2, 1)
+    val k1 = Similarity.centroidKey(v1, 2, 1)
     val a = Similarity.trainCentroids(v1, nCentroids = 2, iters = 1)
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     writeCorpus(3.0f)
     val v2 = spark.read.parquet(dir)
     // the plan hash alone reduces to the path and would collide; the
     // file-metadata fingerprint must separate the two corpus versions
-    assert(Similarity.trainCacheKey(v2, 2, 1) != k1,
+    assert(Similarity.centroidKey(v2, 2, 1) != k1,
       "rewritten files under the same path must change the cache key")
     assert(!Similarity.trainCacheContains(v2, 2, 1))
     val b = Similarity.trainCentroids(v2, nCentroids = 2, iters = 1)
@@ -2765,8 +2765,8 @@ class ExtSpec extends AnyFunSuite {
       init = "parallel").as[(Long, Seq[Float])].collect()
     assert(trained.nonEmpty && trained.length <= 6)
     // distinct cache key from the first-N init at the same (k, iters)
-    assert(Similarity.trainCacheKey(emb, 6, 2, "parallel") !=
-      Similarity.trainCacheKey(emb, 6, 2, "first"))
+    assert(Similarity.centroidKey(emb, 6, 2, "parallel") !=
+      Similarity.centroidKey(emb, 6, 2, "first"))
     // empty corpus degrades to no seeds, not an exception
     assert(Similarity.initKMeansParallel(
       emb.filter(lit(false)), k = 4).isEmpty)
