@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** SparkSession factory for the graft engine.
@@ -105,11 +106,28 @@ object GraftSession {
   private val excludedOptimizerRules =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+  /** The [[staticConfs]] that `conf` lacks, as `key=value`: a key unset
+    * or set to another value, or an extension list without
+    * `GraftExtensions`.
+    */
+  def missingStaticConfs(conf: SparkConf): Seq[String] =
+    staticConfs.collect {
+      case (k, v) if !conf.getOption(k).exists(got =>
+          if (k == "spark.sql.extensions") got.split(",").map(_.trim).contains(v)
+          else got == v) => s"$k=$v"
+    }
+
   /** Apply graft's runtime defaults to a session built elsewhere (an
     * external driver calling `SparkEntry.entry`). Safe: only sets
     * runtime-settable confs, so such a session lacks [[staticConfs]]
-    * unless its builder passed them. */
+    * unless its builder passed them; one WARN names those it lacks. */
   def tune(spark: SparkSession): SparkSession = {
+    val missing = missingStaticConfs(spark.sparkContext.getConf)
+    if (missing.nonEmpty)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "this session was built without graft's static confs " +
+          s"${missing.mkString(", ")}; only a session built through " +
+          "GraftSession.build has them")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -7,9 +7,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Text-analysis operators for LLM-data-pipeline use (north star,
   * BASELINE.json): token counting, quality scoring, language-ID heuristics,
-  * document fingerprinting, shingling. All pure `Column` expressions
-  * (higher-order functions, no UDFs) — they run per-row inside whole-stage
-  * codegen with zero shuffle, so they scale linearly to 100 TB of text.
+  * document fingerprinting, shingling. All pure `Column` expressions (no
+  * UDFs) that run per row with zero shuffle, so they scale linearly to
+  * 100 TB of text. The higher-order functions among them (`transform`,
+  * `zip_with`, `aggregate`, `filter`) are `CodegenFallback`: the operator
+  * that holds one runs outside whole-stage codegen.
   */
 object TextAnalysis {
 

@@ -32,8 +32,9 @@ import graft.engine.{GraftSession, Par, Tables}
   * Like the reference, which uploads each bundle's resources and its
   * rawstat row together (bundle.go:111-124) and only then runs the stat
   * jobs (main.go:118-125), [[run]] does not serialize what is
-  * independent: the dim reads overlap the bundle scan's planning, and
-  * the resource write overlaps rawstat and the three rollups.
+  * independent: the dim reads and their lookup maps overlap the bundle
+  * scan's planning, and the resource write overlaps rawstat and the three
+  * rollups.
   */
 object FhirMain {
 
@@ -127,7 +128,7 @@ object FhirMain {
     * branches run concurrently through [[graft.engine.Par]]:
     *
     * {{{
-    * {dim reads ∥ bundle scan plan} → cache + count
+    * {dim maps ∥ bundle scan plan} → cache + count
     *   → {resource sink ∥ (rawstat write → read-back →
     *                       pop ∥ disease ∥ condition facts)}
     * }}}
@@ -167,7 +168,7 @@ object FhirMain {
         spark.read.jdbc(url, table, new java.util.Properties)
       case _ => Tables.parquet(spark, spec)
     }
-    def dims(): (DataFrame, DataFrame) = (
+    def dims(): RawStats.Dims = RawStats.Dims.collect(
       RawStats.loadCousubDim(cousubPath
         .map(readDim)
         .getOrElse(Seq.empty[(String, String, String)]
@@ -192,10 +193,9 @@ object FhirMain {
           }
     }
 
-    def stats(bundles: DataFrame, nBundles: Long, cousubDim: DataFrame,
-        diseaseDim: DataFrame): Unit = {
-      val rawstat = RawStats.build(
-        bundles, cousubDim, diseaseDim, lit(asOf).cast("date"))
+    def stats(bundles: DataFrame, nBundles: Long, nFiles: Int,
+        dims: RawStats.Dims): Unit = {
+      val rawstat = RawStats.build(bundles, dims, lit(asOf).cast("date"))
       // S6 → S7: rawstat persists through the configured store and the
       // rollups read it BACK from storage (never the live lineage) — the
       // reference's action boundary between ingest and stats
@@ -204,7 +204,9 @@ object FhirMain {
       // queryable rawstat behind.
       val store = rawstatStore.getOrElse(new ParquetRawstatStore(out))
       store.write(rawstat)
-      println(f"$nBundles FHIR bundles read in ${(System.nanoTime() - t0) / 1e9}%f seconds")
+      // files the scan listed that gave no bundle: malformed, or no `entry`
+      println(f"$nBundles FHIR bundles read in ${(System.nanoTime() - t0) / 1e9}%f seconds; " +
+        s"${nFiles - nBundles} of $nFiles files skipped")
 
       val rawstatBack = store.read(spark)
       def job(name: String, facts: DataFrame => DataFrame): () => Unit = () => {
@@ -219,21 +221,24 @@ object FhirMain {
         job("synth_condition_facts", FactJobs.conditionFacts))
     }
 
-    // phase 1: the dim reads (a listing and a footer read each from
-    // parquet) and the bundle plan (file listing, schema resolution and the
-    // rewrite's expression tree, mostly driver work) need nothing from each
-    // other.
+    // phase 1: the dim reads and lookup maps (a listing, a footer read and
+    // a collect job each from parquet) and the bundle plan (file listing,
+    // schema resolution and the rewrite's expression tree, mostly driver
+    // work) need nothing from each other. The scan's file index gives the
+    // number of files it listed, without a job.
     // Caching starts after both, so a failed dim read leaves no cached
     // plan behind.
-    val ((cousubDim, diseaseDim), scan) = Par.both(() => dims(),
-      () => BundleIngest.rewriteBundle(BundleIngest.readBundles(spark, path)))
+    val (dimMaps, (scan, nFiles)) = Par.both(() => dims(), () => {
+      val scan = BundleIngest.rewriteBundle(BundleIngest.readBundles(spark, path))
+      (scan, scan.inputFiles.length)
+    })
     val bundles = scan.cache()
     try {
       val nBundles = bundles.count()
       // phase 2: the resource sink and the stats chain both read only the
       // cached bundles and write disjoint targets
       Par.all(() => writeResources(bundles),
-        () => stats(bundles, nBundles, cousubDim, diseaseDim))
+        () => stats(bundles, nBundles, nFiles, dimMaps))
     } finally bundles.unpersist()
   }
 }

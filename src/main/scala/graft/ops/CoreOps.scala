@@ -6,9 +6,11 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
 
 /** The reusable operator library: every relational/scalar operation the
   * reference performs (SURVEY.md §2), re-expressed as composable Spark
-  * `Column`/`DataFrame` functions. All of these stay inside whole-stage
-  * codegen (pure `functions._` compositions — no UDFs), so they cost the
-  * same as hand-written SQL and survive a 1000-executor scale-up.
+  * `Column`/`DataFrame` functions — pure `functions._` compositions, no
+  * UDFs. All but two stay inside whole-stage codegen: [[distinctSorted]]
+  * (`array_sort`) and [[zorderKey]] (`aggregate`) are higher-order
+  * functions, which are `CodegenFallback` and take their operator out of
+  * whole-stage codegen.
   */
 object CoreOps {
 
@@ -41,7 +43,8 @@ object CoreOps {
 
   /** T13 (bundle.go:24-51): array dedup with set semantics. The reference's
     * output order is nondeterministic (Go map iteration); we canonicalize by
-    * sorting so results are comparable. Runs per-row — no shuffle.
+    * sorting so results are comparable. Runs per-row — no shuffle — but
+    * `array_sort` is `CodegenFallback`.
     */
   def distinctSorted(c: Column): Column = array_sort(array_distinct(c))
 
@@ -59,10 +62,12 @@ object CoreOps {
   }
 
   /** T9/T11 (bundle.go:94-95, 104-105): broadcast dimension join. The
-    * reference's in-memory hash maps ARE broadcast joins; missing keys yield
+    * reference's in-memory hash maps are broadcast joins; missing keys yield
     * zero-values, i.e. left-outer + per-column defaults. `broadcast()` is
     * forced because at 100 TB the fact side dwarfs any dim and a shuffle
-    * join here would be the single worst plan choice.
+    * join here would be the single worst plan choice. Unlike a map, a dim
+    * key listed twice emits one row per match; the rawstat build looks its
+    * dims up in maps instead (`graft.fhir.RawStats.Dims`).
     *
     * @param defaults column name → value to use when the dim side is null
     */
@@ -94,7 +99,8 @@ object CoreOps {
     * data-layout lever for multi-dimensional pruning at 100 TB (a linear
     * sort key only prunes its leading column). Pure HOF expression
     * (variable-amount shifts via the SQL functions, like simhash), no
-    * UDF; DuckDB reproduces it bit-for-bit in the q31 oracle.
+    * UDF, so `CodegenFallback`; DuckDB reproduces it bit-for-bit in the
+    * q31 oracle.
     */
   def zorderKey(x: Column, y: Column, bits: Int = 16): Column = {
     def shr(c: Column, b: Column) = call_function("shiftright", c, b)

@@ -51,19 +51,22 @@ object Streams {
     * its patients' rows with NO cross-batch state, watermark, or
     * re-aggregation. The fact rollups then run over the growing rawstat
     * table exactly as in batch mode (FactJobs), which is the
-    * pre-aggregate's whole point in the reference too.
+    * pre-aggregate's whole point in the reference too. The dims are
+    * collected into their lookup maps once, when the stream starts.
     */
   def rawstatStream(spark: SparkSession, path: String,
       cousubDim: DataFrame, diseaseDim: DataFrame, asOf: String,
-      outDir: String, checkpoint: String): StreamingQuery =
+      outDir: String, checkpoint: String): StreamingQuery = {
+    val dims = graft.fhir.RawStats.Dims.collect(cousubDim, diseaseDim)
     bundleStream(spark, path).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.fhir.RawStats
-          .build(batch, cousubDim, diseaseDim, lit(asOf).cast("date"))
+          .build(batch, dims, lit(asOf).cast("date"))
           .write.mode("append").parquet(s"$outDir/rawstat")
       }
       .start()
+  }
 
   // ---- events table as a stream ----------------------------------------
 

@@ -42,6 +42,20 @@ class FhirPipelineSpec extends AnyFunSuite {
     assert(bundles.count() == 6)
   }
 
+  test("FhirMain.run counts the files its scan skipped: malformed.json, " +
+      "1 of 7 on the golden directory") {
+    val out = java.nio.file.Files.createTempDirectory("graft-skipped").toString
+    val printed = new java.io.ByteArrayOutputStream
+    // Par's branch threads inherit the console
+    Console.withOut(printed) {
+      FhirMain.run(spark, bundlesPath, out, None, None, "2020-01-01")
+    }
+    val line = printed.toString("UTF-8").linesIterator
+      .filter(_.contains("FHIR bundles read")).toSeq
+    assert(line.size == 1 && line.head.startsWith("6 FHIR bundles read in ") &&
+      line.head.endsWith(" seconds; 1 of 7 files skipped"), line)
+  }
+
   test("T4: internal references rewritten, external ones pass through") {
     val refs = BundleIngest.routeResources(rewritten)
       .select(col("resource.subject.reference").as("r"))

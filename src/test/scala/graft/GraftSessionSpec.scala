@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkConf
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 import graft.ext.PipelineMain
 import graft.tools.GenCorpus
 
@@ -37,6 +38,22 @@ class GraftSessionSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"build sessions through GraftSession.build: ${offenders.mkString("; ")}")
+  }
+
+  test("missingStaticConfs names each static conf a SparkConf lacks") {
+    val all = GraftSession.staticConfs.map { case (k, v) => s"$k=$v" }
+    assert(GraftSession.missingStaticConfs(new SparkConf(false)) == all)
+    val built = new SparkConf(false).setAll(GraftSession.staticConfs)
+    assert(GraftSession.missingStaticConfs(built).isEmpty)
+    // another extension list beside ours still has ours; another cache size
+    // is not graft's
+    val mixed = built.clone()
+      .set("spark.sql.extensions", "other.Extensions, graft.engine.GraftExtensions")
+      .set("spark.sql.codegen.cache.maxEntries", "100")
+    assert(GraftSession.missingStaticConfs(mixed) ==
+      Seq("spark.sql.codegen.cache.maxEntries=10000"))
+    assert(GraftSession.missingStaticConfs(TestSpark.spark.sparkContext.getConf)
+      .isEmpty)
   }
 
   test("a GraftSession.build session sizes the codegen class cache") {
